@@ -62,8 +62,8 @@ object Bench {
         aggregate(transform(col("embedding"), x => x.cast("double")),
           lit(0.0), (a, v) => a + v).as("hof"),
         graft.functions.VectorExpressions.l2Norm(col("embedding")).as("nrm")))
-      // iterative EM aggregate loop (2 iterations, 2k rows) — warms the
-      // suffstats codegen + per-iteration planning path
+      // EM fit (2 iterations, 2k rows) — warms the input projection's
+      // codegen, the cached-column build and the per-iteration kernel job
       graft.gmm.EM.fit(Tables.events(spark, sfDir).limit(2000),
         "value", k = 3, maxIter = 2,
         variant = graft.gmm.EM.Textbook, init = graft.gmm.EM.SpreadInit)

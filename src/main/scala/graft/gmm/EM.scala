@@ -1,23 +1,31 @@
 package graft.gmm
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Expectation-Maximization for a 1-D Gaussian mixture, Spark-SQL-first.
+/** Expectation-Maximization for a 1-D Gaussian mixture.
   *
   * Design point (SURVEY.md §4.3): the reference
   * (Krosent/ema-bigdata `Main.scala:59-92`) runs ~17 Spark jobs per EM
   * iteration — a separate full pass for the gamma denominator, five more
-  * per component for the M-step, one for the log-likelihood. Here each
-  * iteration is ONE whole-stage-codegen'd aggregation computing all
-  * sufficient statistics (sum gamma_k, sum gamma_k*x, sum gamma_k*x^2 for
-  * every k) plus the log-likelihood in a single pass. No intermediate RDD,
-  * no persist/unpersist churn, no zip. At 100 TB this is the difference
-  * between 1 scan and 17 scans per iteration; the aggregation is a
-  * partial+final hash-agg with a single-row result, so shuffle volume is
-  * K*3+2 doubles regardless of data size.
+  * per component for the M-step, one for the log-likelihood. Here a fit
+  * is 1 + (iterations) jobs:
+  *  - Catalyst plans and codegens the projection `cast(x as double)
+  *    where x is not null` once. Its rows are copied into one primitive
+  *    `Array[Double]` per partition, persisted at MEMORY_AND_DISK, and the
+  *    job that fills that cache also returns each partition's
+  *    (n, mean, M2); the driver merges them with Chan's update.
+  *  - Each iteration is ONE job over the cached arrays: a while-loop
+  *    kernel ([[partitionSums]]) returns every sufficient statistic
+  *    (sum gamma_k, sum gamma_k*x, sum gamma_k*x^2 for every k) plus the
+  *    log-likelihood, 3k+3 doubles per partition regardless of data size.
+  *    No query is planned, nothing is broadcast and nothing is shuffled
+  *    per iteration. The driver adds the partition results in partition
+  *    order, so a fixed partitioning gives a deterministic fit.
   *
-  * Two semantic variants (SURVEY.md §7.4):
+  * Two semantic variants (SURVEY.md §7.4), sharing the kernel:
   *  - Textbook: per-point-normalized responsibilities, monotone
   *    log-likelihood, |delta|-tolerance or fixed-iteration stop.
   *  - RefCompat: the reference's exact arithmetic — deviant density
@@ -65,38 +73,156 @@ object EM {
 
     val x = col(xCol).cast("double")
     val data = df.select(x.as("x")).where(col("x").isNotNull)
-    // One pass for dataset moments (reference does count/mean/variance as
-    // three separate jobs, Main.scala:61-64).
-    val m0 = data.agg(
-      count(lit(1)).as("n"), avg(col("x")).as("mean"),
-      var_pop(col("x")).as("var")).head()
-    val n = m0.getLong(0)
-    require(n > 0, s"EM.fit: no non-null rows in $xCol")
-    val dsMean = m0.getDouble(1)
-    val dsVar = math.max(m0.getDouble(2), VarFloor)
+    // The projected column as one primitive array per partition, cached
+    // across iterations (the reference persists the raw RDD, Main.scala:41).
+    val points = data.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofDouble
+      rows.foreach(r => b += r.getDouble(0))
+      Iterator.single(b.result())
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // The job that fills the cache also computes the dataset moments
+      // (the reference does count/mean/variance as three jobs,
+      // Main.scala:61-64).
+      val m0 = points.map(Moments.of).collect().foldLeft(Moments.Empty)(_ merge _)
+      val n = m0.n
+      require(n > 0, s"EM.fit: no non-null rows in $xCol")
+      val dsVar = math.max(m0.m2 / n, VarFloor)
 
-    val means0: Array[Double] = init match {
-      case SpreadInit =>
-        // k quantile-ish spread points in [-1.5, 1.5] sigma
-        Array.tabulate(k)(j => dsMean + math.sqrt(dsVar) * (-1.5 + 3.0 * (j + 0.5) / k))
-      case SampleInit(seed) =>
-        // Seeded exact-K sample; deterministic given fixed seed AND input
-        // partitioning. K rows only — the sort is a top-K (TakeOrdered),
-        // not a full sort, so this scales.
-        data.select(col("x")).orderBy(rand(seed)).limit(k)
-          .collect().map(_.getDouble(0)).sorted
-    }
-    var model = GmmModel(Array.fill(k)(1.0 / k), means0, Array.fill(k)(dsVar))
-
-    // Cache the single projected column across iterations (reference
-    // persists the raw RDD, Main.scala:41).
-    data.cache()
-    try fitLoop(data, n, model, maxIter, tol, variant)
-    finally data.unpersist()
+      val means0: Array[Double] = init match {
+        case SpreadInit =>
+          // k quantile-ish spread points in [-1.5, 1.5] sigma
+          Array.tabulate(k)(j => m0.mean + math.sqrt(dsVar) * (-1.5 + 3.0 * (j + 0.5) / k))
+        case SampleInit(seed) =>
+          // Seeded exact-K sample; deterministic given fixed seed AND input
+          // partitioning. K rows only — the sort is a top-K (TakeOrdered),
+          // not a full sort, so this scales.
+          data.select(col("x")).orderBy(rand(seed)).limit(k)
+            .collect().map(_.getDouble(0)).sorted
+      }
+      val model = GmmModel(Array.fill(k)(1.0 / k), means0, Array.fill(k)(dsVar))
+      fitLoop(points, n, model, maxIter, tol, variant)
+    } finally points.unpersist(blocking = true)
   }
 
+  /** Count, mean and sum of squared deviations of a set of points. */
+  private[gmm] final case class Moments(n: Long, mean: Double, m2: Double) {
+    /** Chan et al.'s pairwise update. */
+    def merge(o: Moments): Moments =
+      if (o.n == 0) this
+      else if (n == 0) o
+      else {
+        val nt = n + o.n
+        val delta = o.mean - mean
+        Moments(nt, mean + delta * o.n / nt, m2 + o.m2 + delta * delta * n * o.n / nt)
+      }
+  }
+
+  private[gmm] object Moments {
+    val Empty: Moments = Moments(0L, 0.0, 0.0)
+
+    /** Welford's one-pass update over one partition. */
+    def of(xs: Array[Double]): Moments = {
+      var mean = 0.0
+      var m2 = 0.0
+      var i = 0
+      while (i < xs.length) {
+        val delta = xs(i) - mean
+        mean += delta / (i + 1)
+        m2 += delta * (xs(i) - mean)
+        i += 1
+      }
+      Moments(xs.length.toLong, mean, m2)
+    }
+  }
+
+  private val TwoPi = 2.0 * math.Pi
+  private val Sqrt2Pi = math.sqrt(2.0 * math.Pi)
+
+  /** One EM iteration's sums over one partition's points, in the layout
+    * [A_j, B_j, C_j for each j] ++ [D, sum log(mix), log terms].
+    *
+    * The arithmetic is the code Spark generated for the former per-
+    * iteration SQL aggregate, operation for operation: `StrictMath.exp`,
+    * `StrictMath.pow(_, 2.0)`, `StrictMath.log`, `Math.sqrt`, the same
+    * association order, and the per-component constants the SQL path
+    * computed from its parameter columns. SQL semantics carried over:
+    *  - `log` of a value <= 0 is NULL, which `sum` skips: such a point adds
+    *    no log term (a count of 0 terms means a log-likelihood of -inf);
+    *  - Textbook gamma_j = w_j*pdf_j/mix only where `mix > 0`, which in
+    *    Spark holds for NaN too; elsewhere gamma_j = 1/k;
+    *  - RefCompat gamma_j is the un-normalized w_j*pdf_j (the global
+    *    denominator D is applied driver-side).
+    */
+  private[gmm] def partitionSums(xs: Array[Double], m: GmmModel, variant: Variant): Array[Double] = {
+    val k = m.k
+    val ref = variant == RefCompat
+    val w = m.weights
+    val mu = m.means
+    val v = m.variances
+    val twoVar = v.map(2.0 * _)
+    val sqrtNorm = v.map(s2 => Math.sqrt(TwoPi * s2))
+    val refCoef = v.map(s2 => 1.0 / Math.sqrt(s2) * Sqrt2Pi)
+    val invK = 1.0 / k
+    val wp = new Array[Double](k)
+    val out = new Array[Double](3 * k + 3)
+    var i = 0
+    while (i < xs.length) {
+      val x = xs(i)
+      var mix = 0.0
+      var j = 0
+      while (j < k) {
+        val sq = StrictMath.pow(x - mu(j), 2.0)
+        val pdf =
+          if (ref) refCoef(j) * StrictMath.exp(-(sq / 2.0) * v(j))
+          else StrictMath.exp(-sq / twoVar(j)) / sqrtNorm(j)
+        wp(j) = w(j) * pdf
+        mix += wp(j)
+        j += 1
+      }
+      val normalize = mix > 0.0 || mix != mix
+      j = 0
+      while (j < k) {
+        val g = if (ref) wp(j) else if (normalize) wp(j) / mix else invK
+        val gx = g * x
+        out(3 * j) += g
+        out(3 * j + 1) += gx
+        out(3 * j + 2) += gx * x
+        j += 1
+      }
+      out(3 * k) += mix
+      if (!(mix <= 0.0)) {
+        out(3 * k + 1) += StrictMath.log(mix)
+        out(3 * k + 2) += 1.0
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** Runs ONE job for an EM iteration: [[partitionSums]] per partition,
+    * added up in partition order. */
+  private def iterationSums(points: RDD[Array[Double]], m: GmmModel, variant: Variant): Array[Double] = {
+    // The SQL form divided by these; under ANSI a zero divisor failed the
+    // query instead of yielding a number.
+    m.variances.foreach(s2 =>
+      if (s2 == 0.0) throw new ArithmeticException("EM.fit: a component variance is 0"))
+    val parts = points.map(xs => partitionSums(xs, m, variant)).collect()
+    val total = new Array[Double](3 * m.k + 3)
+    parts.foreach { p =>
+      var i = 0
+      while (i < total.length) { total(i) += p(i); i += 1 }
+    }
+    total
+  }
+
+  /** The log-likelihood of iteration sums: -inf when no point added a
+    * log term, as the SQL `sum` of no values was NULL. */
+  private[gmm] def logLikelihood(sums: Array[Double]): Double =
+    if (sums(sums.length - 1) == 0.0) Double.NegativeInfinity else sums(sums.length - 2)
+
   private def fitLoop(
-      data: DataFrame, n: Long, init: GmmModel,
+      points: RDD[Array[Double]], n: Long, init: GmmModel,
       maxIter: Int, tol: Option[Double], variant: Variant): FitResult = {
     var model = init
     var lnpPrev = Double.NaN
@@ -105,16 +231,14 @@ object EM {
     var stop = false
 
     while (iters < maxIter && !stop) {
-      val row = iterationAggregate(data, model, variant)
+      val s = iterationSums(points, model, variant)
       val k = model.k
-      // layout: [A_1.., B_1.., C_1.., D, loglik]
-      def d(i: Int): Double = if (row.isNullAt(i)) 0.0 else row.getDouble(i)
-      val A = Array.tabulate(k)(j => d(3 * j))
-      val B = Array.tabulate(k)(j => d(3 * j + 1))
-      val C = Array.tabulate(k)(j => d(3 * j + 2))
-      val D = d(3 * k)
-      val ll = if (row.isNullAt(3 * k + 1)) Double.NegativeInfinity else row.getDouble(3 * k + 1)
-
+      // layout: [A_j, B_j, C_j per j] ++ [D, sum log(mix), log terms]
+      val A = Array.tabulate(k)(j => s(3 * j))
+      val B = Array.tabulate(k)(j => s(3 * j + 1))
+      val C = Array.tabulate(k)(j => s(3 * j + 2))
+      val D = s(3 * k)
+      val ll = logLikelihood(s)
       lnpPrev = lnp
       lnp = ll
 
@@ -157,8 +281,9 @@ object EM {
     FitResult(model, lnp, iters)
   }
 
-  /** Fixed-point EM: the same one-aggregation-per-iteration dataflow as
-    * [[fit]], but every per-point sufficient-statistic contribution is
+  /** Fixed-point EM: one SQL aggregation per iteration computing the
+    * same sufficient statistics as [[fit]], but every per-point
+    * contribution is
     * integerized to `scale` decimals BEFORE the sum (exact BIGINT
     * accumulation, see [[graft.util.Det]]), and every parameter update is
     * a ratio/product of those exact integers — so the ENTIRE multi-
@@ -213,8 +338,14 @@ object EM {
   }
 
   /** One fixed-point iteration: Row of 3k longs
-    * [toFixed-sums of gamma_j, gamma_j*x, gamma_j*x^2]. Params ride a
-    * broadcast relation (codegen-stable, see [[iterationAggregate]]). */
+    * [toFixed-sums of gamma_j, gamma_j*x, gamma_j*x^2].
+    *
+    * Model parameters are NOT literals: they ride a broadcast 1-row
+    * LocalRelation cross-joined onto the data. Literal params would embed
+    * the values in the generated Java source, recompiling the aggregate
+    * stage every iteration (~0.5 s/iteration of Janino); as input columns
+    * the generated source is identical across iterations and the codegen
+    * cache serves it after the first. */
   private def fixedIterationAggregate(data: DataFrame, m: GmmModel, scale: Int): Row = {
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     import graft.util.Det
@@ -238,54 +369,6 @@ object EM {
       sum(Det.toFixed(g, scale)),
       sum(Det.toFixed(g * x, scale)),
       sum(Det.toFixed(g * x * x, scale))))
-    joined.agg(aggs.head, aggs.tail: _*).head()
-  }
-
-  /** Builds and runs the ONE aggregation for an EM iteration.
-    * Returns a single Row: [A_k, B_k, C_k per k] ++ [D, loglik].
-    *
-    * Model parameters are NOT literals: they ride a broadcast 1-row
-    * LocalRelation cross-joined onto the data. Literal params would embed
-    * the values in the generated Java source, recompiling the aggregate
-    * stage every iteration (~0.5 s/iteration of Janino); as input columns
-    * the generated source is identical across iterations and the codegen
-    * cache serves it after the first. Arithmetic order matches the
-    * literal form bit-for-bit (Gaussian column overloads).
-    */
-  private def iterationAggregate(data: DataFrame, m: GmmModel, variant: Variant): Row = {
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val x = col("x")
-    val k = m.k
-    val schema = StructType((0 until k).flatMap(j => Seq(
-      StructField(s"w$j", DoubleType, nullable = false),
-      StructField(s"mu$j", DoubleType, nullable = false),
-      StructField(s"s2$j", DoubleType, nullable = false))))
-    val paramsRow = Row.fromSeq(
-      (0 until k).flatMap(j => Seq(m.weights(j), m.means(j), m.variances(j))))
-    val params = data.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(paramsRow), schema)
-    val joined = data.crossJoin(broadcast(params))
-    val weighted: Seq[Column] = variant match {
-      case Textbook  => (0 until k).map(j => col(s"w$j") * Gaussian.pdf(x, col(s"mu$j"), col(s"s2$j")))
-      case RefCompat => (0 until k).map(j => col(s"w$j") * Gaussian.refPdf(x, col(s"mu$j"), col(s"s2$j")))
-    }
-    val mix = weighted.reduce(_ + _)
-    val gammas: Seq[Column] = variant match {
-      case Textbook =>
-        // per-point normalization; guard against total underflow
-        weighted.map(wj => when(mix > 0, wj / mix).otherwise(lit(1.0 / k)))
-      case RefCompat =>
-        // UN-normalized numerators; the global denominator D is aggregated
-        // in the same pass and applied driver-side (it cancels in the
-        // mean/variance ratios).
-        weighted
-    }
-    val logMix = log(mix)
-    // -Infinity guard from Main.scala:112 (log of an underflowed mixture).
-    val llTerm = when(logMix =!= lit(Double.NegativeInfinity), logMix)
-    val aggs: Seq[Column] =
-      gammas.flatMap(g => Seq(sum(g), sum(g * x), sum(g * x * x))) ++
-        Seq(sum(mix), sum(llTerm))
     joined.agg(aggs.head, aggs.tail: _*).head()
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *    density — see Krosent/ema-bigdata `Main.scala:106-107` where, by
   *    operator precedence, `1 / covariance * Math.sqrt(2 * Math.PI)`
   *    MULTIPLIES by sqrt(2*pi) and `pow(x-mean,2) / 2 * variance`
-  *    MULTIPLIES the exponent by the variance. Kept for capability-parity
-  *    (`em_gmm_refcompat`).
+  *    MULTIPLIES the exponent by the variance. `EM.RefCompat`'s kernel
+  *    computes the same density on primitive arrays; this is its SQL form.
   */
 object Gaussian {
   /** Textbook N(x | mean, variance). Constants folded driver-side. */
@@ -31,25 +31,16 @@ object Gaussian {
 
   /** Column-parameter overload — identical operations in identical order
     * (bit-compatible with the scalar form), for plans whose generated
-    * code must not change when the model parameters do (EM iterations:
-    * params ride a broadcast relation, so the per-iteration aggregate
-    * hits the codegen cache instead of recompiling). */
+    * code must not change when the model parameters do
+    * (`EM.fitFixedPoint`: params ride a broadcast relation, so the
+    * per-iteration aggregate hits the codegen cache instead of
+    * recompiling). */
   def pdf(x: Column, mean: Column, variance: Column): Column =
     exp(-pow(x - mean, 2) / (lit(2.0) * variance)) /
       sqrt(lit(2.0 * math.Pi) * variance)
 
-  /** Column-parameter overload of the reference arithmetic. */
-  def refPdf(x: Column, mean: Column, variance: Column): Column =
-    lit(1.0) / sqrt(variance) * lit(math.sqrt(2.0 * math.Pi)) *
-      exp(-(pow(x - mean, 2) / lit(2.0)) * variance)
-
   /** Weighted mixture density sum_k w_k * pdf_k(x) for a model. */
   def mixture(x: Column, m: GmmModel): Column =
     (0 until m.k).map(j => lit(m.weights(j)) * pdf(x, m.means(j), m.variances(j)))
-      .reduce(_ + _)
-
-  /** Reference-arithmetic mixture (Main.scala:99-110 loop body). */
-  def refMixture(x: Column, m: GmmModel): Column =
-    (0 until m.k).map(j => lit(m.weights(j)) * refPdf(x, m.means(j), m.variances(j)))
       .reduce(_ + _)
 }
