@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",...}.
   *
@@ -12,28 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Static conf: default codegen cache is 100 entries — a 90+-query
-      // suite evicts the iterative EM loop's stable entry mid-run, so its
-      // 10 iterations recompile (observed as random 10-18 s em_gmm
-      // transients). 1000 entries fits the whole catalog.
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's pre-coalesce shuffle width, DERIVED from the input size
-      // (see Parts.scala): sf0.1 derives to the 32-wide gate default,
-      // slice runs derive wider so per-partition builds stay in memory
-      // and AQE coalesces the small stages back down — the sizing a
-      // cluster engine does itself; SPARK_GRAFT_INIT_PARTS remains as
-      // an explicit override only (SCALING.md).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Parts.derive(sfDir, cpus.toInt).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed JVM/codegen warmup: steady-state numbers, standard
     // benchmarking practice — otherwise the alphabetically-first query

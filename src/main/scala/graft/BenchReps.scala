@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 /** Steady-state evidence for the bench numbers: run the transient-prone
   * headline queries N reps each in ONE JVM and write per-rep timings +
@@ -11,22 +13,74 @@ import java.nio.file.{Files, Paths}
   * inside the recorded envelope says the plan didn't regress, whatever
   * single-shot number the round's bench drew.
   *
+  * Each query's record also carries its PHYSICAL work over the final
+  * rep — input bytes/records read, shuffle bytes/records written and
+  * read, spill, peak task memory and task count — summed by a
+  * SparkListener over task metrics. Wall-clock medians on a shared host
+  * wobble with neighbor load; these totals are a property of the plan
+  * and the data, so "shuffle records grow 10× for 10× input" holds
+  * whatever the wall clock drew that day (SCALE100X.json pairs both
+  * views per operator).
+  *
   * Usage: `sbt "runMain graft.BenchReps [outFile] [reps] [query...]"`
-  * (defaults: stdout+REPS.json, 5 reps, the 17-query `defaultQueries`
-  * set below — top-15 by bench cost plus the r4 watch pair; a full
-  * default run is a ~2-minute sf0.1 session). */
+  * (defaults: stdout+REPS.json, 5 reps, the `defaultQueries` set below;
+  * a full default run is a few minutes of sf0.1 session). One query with
+  * a few reps is the single-query steady-state timer. */
 object BenchReps {
-  /** Top-15 of the benched set by r4 single-shot cost plus the r4 watch
-    * items (gamma_fixed, decontam_overlap) — the steady-state medians are
-    * the regression gate (BASELINE.md), so every expensive query needs
-    * one. */
+  /** Top-15 of the benched set by r4 single-shot cost, the r4 watch
+    * items (gamma_fixed, decontam_overlap) and the round-13
+    * driver-flagged movers (ann_pq_topk, agg_skew_twophase, embed_kmeans,
+    * curation_source_overlap; dedup_embedding_lsh was already in) — the
+    * steady-state medians are the regression gate (BASELINE.md), so
+    * every expensive or moving query needs one. */
   val defaultQueries: Seq[String] = Seq(
     "em_gmm", "agg_approx_percentile", "dedup_clusters",
     "dedup_minhash_lsh", "curation_pipeline", "dedup_embedding_lsh",
     "dedup_span_coverage", "join_salted_skew", "decontam_overlap",
     "agg_approx_distinct", "dedup_simhash", "ann_ivf_topk",
     "text_quality_score", "q7_volume_shipping", "events_asof_join",
-    "gamma_fixed", "text_jaccard_pairs")
+    "gamma_fixed", "text_jaccard_pairs", "ann_pq_topk",
+    "agg_skew_twophase", "embed_kmeans", "curation_source_overlap")
+
+  /** Task-metric totals of every task that ends while attached. */
+  private final class TaskTotals extends SparkListener {
+    val inputBytes = new LongAdder
+    val inputRecords = new LongAdder
+    val shuffleWriteBytes = new LongAdder
+    val shuffleWriteRecords = new LongAdder
+    val shuffleReadBytes = new LongAdder
+    val shuffleReadRecords = new LongAdder
+    val diskSpill = new LongAdder
+    val memSpill = new LongAdder
+    val peakTaskMem = new AtomicLong(0L)
+    val tasks = new LongAdder
+
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      val m = te.taskMetrics
+      if (m != null) {
+        inputBytes.add(m.inputMetrics.bytesRead)
+        inputRecords.add(m.inputMetrics.recordsRead)
+        shuffleWriteBytes.add(m.shuffleWriteMetrics.bytesWritten)
+        shuffleWriteRecords.add(m.shuffleWriteMetrics.recordsWritten)
+        shuffleReadBytes.add(m.shuffleReadMetrics.totalBytesRead)
+        shuffleReadRecords.add(m.shuffleReadMetrics.recordsRead)
+        diskSpill.add(m.diskBytesSpilled)
+        memSpill.add(m.memoryBytesSpilled)
+        peakTaskMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
+        tasks.increment()
+      }
+    }
+
+    def snapshot(): Seq[(String, Long)] = Seq(
+      "disk_spill_bytes" -> diskSpill.sum, "input_bytes" -> inputBytes.sum,
+      "input_records" -> inputRecords.sum, "mem_spill_bytes" -> memSpill.sum,
+      "peak_task_mem_bytes" -> peakTaskMem.get,
+      "shuffle_read_bytes" -> shuffleReadBytes.sum,
+      "shuffle_read_records" -> shuffleReadRecords.sum,
+      "shuffle_write_bytes" -> shuffleWriteBytes.sum,
+      "shuffle_write_records" -> shuffleWriteRecords.sum,
+      "tasks" -> tasks.sum)
+  }
 
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("REPS.json")
@@ -34,28 +88,26 @@ object BenchReps {
     require(reps >= 1, s"reps must be >= 1, got $reps")
     val queries = if (args.length > 2) args.drop(2).toSeq else defaultQueries
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Bench.scala: scale-run pre-coalesce shuffle width
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Parts.derive(sfDir, cpus.toInt).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus, sfDir).getOrCreate()
+    val sc = spark.sparkContext
+    sc.setLogLevel("WARN")
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", v)
     val entries = queries.map { name =>
-      val times = (1 to reps).map { _ =>
+      val totals = new TaskTotals
+      val times = (1 to reps).map { rep =>
+        if (rep == reps) sc.addSparkListener(totals)
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
+        if (rep == reps) {
+          // the bus is async: deliver every task-end event of the rep
+          // before the listener detaches
+          ListenerBusDrain(sc)
+          sc.removeSparkListener(totals)
+        }
         spark.catalog.clearCache()
         sec
       }
@@ -66,10 +118,13 @@ object BenchReps {
       val median =
         if (reps % 2 == 1) sorted(reps / 2)
         else (sorted(reps / 2 - 1) + sorted(reps / 2)) / 2.0
+      val work = totals.snapshot()
       System.err.println(
-        s"[reps] $name: ${times.map(fmt).mkString(", ")} (median ${fmt(median)})")
+        s"[reps] $name: ${times.map(fmt).mkString(", ")} (median ${fmt(median)}, " +
+          s"${totals.tasks.sum} tasks in the last rep)")
       val repsJson = times.map(fmt).mkString("[", ",", "]")
-      s""""$name":{"reps":$repsJson,"median":${fmt(median)}}"""
+      val workJson = work.map { case (k, v) => s""","$k":$v""" }.mkString
+      s""""$name":{"reps":$repsJson,"median":${fmt(median)}$workJson}"""
     }
     val sfName = sfDir.split('/').last
     val json =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fourth-decade campaign runner for the STAGED containment dedup
@@ -24,7 +23,8 @@ import org.apache.spark.sql.functions._
   * Every step runs with zstd shuffle compression (~2× lz4 on these
   * hashed-key payloads) — scratch headroom, not a results change.
   *
-  * Usage: ContainmentStaged <sfDir> <outRoot> <passes> <stage|derive|b|verify>
+  * Usage: ContainmentStaged <sfDir> <outRoot> <passes> <stage|derive|<b>|verify>
+  * where `<b>` is a band index in [0, passes).
   *
   * `derive` (round 12, VERDICT r11 #2) sizes the pass count from the
   * staged tables instead of the hand-set CLI arg: it prints the exact
@@ -35,26 +35,21 @@ import org.apache.spark.sql.functions._
   */
 object ContainmentStaged {
   def main(args: Array[String]): Unit = {
-    require(args.length == 4,
-      "usage: ContainmentStaged <sfDir> <outRoot> <passes> <stage|band|verify>")
+    val usage =
+      "usage: ContainmentStaged <sfDir> <outRoot> <passes> <stage|derive|<b>|verify>"
+    require(args.length == 4, usage)
     val Array(sfDir, outRoot, passesS, step) = args
+    // a mistyped step would otherwise be taken as a band index
+    require(Set("stage", "derive", "verify")(step) || step.toIntOption.isDefined,
+      usage)
     val passes = passesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
+    val spark = GraftSession.builder(GraftSession.cpus, sfDir)
       .config("spark.io.compression.codec", "zstd")
       // the broadcast-verify build collects the doc->array table
       // (~2.5 GB at 5M docs) through the driver; the 1g default abort
       // is a local-mode artifact — on a cluster the same broadcast is
       // torrent-distributed from the executors
       .config("spark.driver.maxResultSize", "8g")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Parts.derive(sfDir, cpus.toInt).toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Dedup

@@ -24,9 +24,6 @@ import java.io.File
   * (beyond which per-partition scheduling overhead dominates on one
   * box). AQE coalesces the small stages back down, so oversizing is
   * cheap; undersizing is the OOM — hence ceil everywhere.
-  *
-  * SPARK_GRAFT_INIT_PARTS remains as an explicit OVERRIDE for
-  * experiments, but no slice run requires it anymore.
   */
 object Parts {
   private val TargetTaskBytes = 128L << 20
@@ -52,11 +49,10 @@ object Parts {
     }.sum
   }
 
-  /** The derived width; `SPARK_GRAFT_INIT_PARTS` (if set) wins. */
-  def derive(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_INIT_PARTS").map(_.toInt).getOrElse {
-      val w = math.ceil(
-        estimatedLiveBytes(sfDir).toDouble / TargetTaskBytes).toLong
-      math.min(MaxWidth, math.max(cpus.toLong, w)).toInt
-    }
+  /** The derived width for the tables under `sfDir` on `cpus` cores. */
+  def derive(sfDir: String, cpus: Int): Int = {
+    val w = math.ceil(
+      estimatedLiveBytes(sfDir).toDouble / TargetTaskBytes).toLong
+    math.min(MaxWidth, math.max(cpus.toLong, w)).toInt
+  }
 }

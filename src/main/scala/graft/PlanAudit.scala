@@ -1,23 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: dump the formatted physical plan (tree + pushdown lines) of
   * the named queries — the audit trail behind PLANS.md. Usage:
-  * `sbt "runMain graft.PlanAudit <sfDir> <query>..."` (no names = all). */
+  * `sbt "runMain graft.PlanAudit <sfDir> <query>..."` (no names = all),
+  * in the [[GraftSession]] config at `SPARK_GRAFT_CPUS` cores. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"@@@ $name")

@@ -59,13 +59,7 @@ object ScaleGen {
     require(mult >= 1, s"mult must be >= 1, got $mult")
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, base).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     write(spark, base, out, mult, only)
     spark.stop()

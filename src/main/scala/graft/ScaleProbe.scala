@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for operators whose CATALOG rows pin oracle-stability
@@ -23,18 +22,7 @@ object ScaleProbe {
     val sfDir = args(0)
     val op = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Parts.derive(sfDir, cpus.toInt).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", v: java.lang.Double)
     if (op == "lshdecomp") {

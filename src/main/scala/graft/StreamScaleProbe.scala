@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale probe for the STREAMING surface: runs each stream_* catalog row
   * through [[graft.streaming.StreamHarness]] with chunked event-time
   * staging (SPARK_GRAFT_STREAM_CHUNKS, set here) so the watermark
@@ -29,15 +27,7 @@ object StreamScaleProbe {
     val queries =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def f(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", v: java.lang.Double)
     // the harness honors the system property first (set here, no env

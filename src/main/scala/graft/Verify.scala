@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,7 @@ object Verify {
     // Optional 3rd+ args: restrict to the named queries (dev iteration;
     // the driver always passes exactly two args → full run).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Static conf: default codegen cache is 100 entries — a 90+-query
-      // suite evicts the iterative EM loop's stable entry mid-run, so its
-      // 10 iterations recompile (observed as random 10-18 s em_gmm
-      // transients). 1000 entries fits the whole catalog.
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      // AQE pre-coalesce width DERIVED from the input size (Parts):
-      // the fourth-decade slices OOM hash-map builds at the 32-wide
-      // default (~1.2 GB/task of the 40 GB pool); AQE coalesces small
-      // stages back, so sf0.01/sf0.1 driver runs still derive to cpus
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Parts.derive(sfDir, cpus.toInt).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
@@ -8,11 +7,10 @@ import graft.functions.VectorExpressions._
 
 /** SQL registration of the engine's native expressions, so
   * `spark.sql("SELECT cosine_sim(a, b) ...")` works like any built-in.
-  * Two entry points:
-  *  - [[GraftFunctions.register]] for an existing session;
-  *  - [[graft.GraftExtensions]] for
-  *    `--conf spark.sql.extensions=graft.GraftExtensions` (the standard
-  *    extension-library deployment on a shared cluster).
+  * [[graft.GraftExtensions]] injects [[all]] into every session built
+  * with `--conf spark.sql.extensions=graft.GraftExtensions` (the standard
+  * extension-library deployment on a shared cluster), which includes
+  * every [[graft.GraftSession]] session — the mains and the test suite.
   */
 object GraftFunctions {
 
@@ -56,10 +54,4 @@ object GraftFunctions {
           org.apache.spark.sql.catalyst.expressions.Cast(args(0), org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.catalyst.expressions.Cast(args(1), org.apache.spark.sql.types.LongType),
           intArg(args(2), "hilbert_key", 3))))
-
-  /** Register all functions into an existing session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (id, info, builder) =>
-      GraftBridge.registerFunction(spark, id.funcName, info, builder)
-    }
 }

@@ -707,9 +707,13 @@ object Dedup {
     * exchange carries ~1/passes of the keys (passes = 1 ≡ the
     * unrestricted single pass). Emits DISTINCT (a, b) id pairs only —
     * no array payloads — so a band pass's scratch is the banded 8-byte
-    * key join plus an id-pair distinct, nothing corpus-sized. */
+    * key join plus an id-pair distinct, nothing corpus-sized. A band
+    * outside [0, passes) would select no key (or, at passes = 1, every
+    * key) and is rejected. */
   private[graft] def containmentCandidatesBand(prefix: DataFrame,
       sh: DataFrame, band: Int, passes: Int): DataFrame = {
+    require(0 <= band && band < passes,
+      s"need 0 <= band < passes, got band=$band passes=$passes")
     def inBand(df: DataFrame): DataFrame =
       if (passes <= 1) df
       else df.where(pmod(col("sk"), lit(passes.toLong)) === band.toLong)

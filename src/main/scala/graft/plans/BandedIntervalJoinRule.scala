@@ -32,8 +32,10 @@ import org.apache.spark.sql.types._
   * band would only add fan-out). The rewritten join contains a band
   * equality, so the rule cannot re-fire on its own output.
   *
-  * Registered by [[graft.GraftExtensions]] via `injectOptimizerRule`;
-  * tests attach it with `spark.experimental.extraOptimizations`.
+  * Registered by [[graft.GraftExtensions]] via `injectOptimizerRule`, so
+  * every [[graft.GraftSession]] session (the mains and the test suite)
+  * runs it;
+  * `spark.sql.optimizer.excludedRules` switches it off by name.
   */
 object BandedIntervalJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 

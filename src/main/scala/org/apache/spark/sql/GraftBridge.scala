@@ -6,22 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * (`org.apache.spark.sql.classic.ExpressionUtils`). Spark 4 routes
   * Column through ColumnNode for Connect compatibility; extension
   * libraries shipping native Catalyst expressions need this one hop.
-  * This is the only file outside the `graft` package.
+  * It and `org.apache.spark.ListenerBusDrain` are the only files
+  * outside the `graft` package.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Register a function builder into an EXISTING session's registry
-    * (`sessionState` is `private[sql]`); the extensions path
-    * (`graft.GraftExtensions`) covers sessions built with
-    * `spark.sql.extensions`. */
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 }

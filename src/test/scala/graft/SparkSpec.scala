@@ -13,14 +13,12 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  // One session per JVM, shared across suites (sbt forks a single test JVM).
+  // One session per JVM, shared across suites (sbt forks a single test
+  // JVM): the driver's config (GraftSession) at a small width — sized
+  // for sf0.01, which derives the AQE width to the 4 cores.
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4, "/root/testdata/sf0.01")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

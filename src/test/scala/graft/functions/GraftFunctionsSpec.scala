@@ -6,7 +6,6 @@ class GraftFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("registered SQL functions evaluate like the Column API") {
-    GraftFunctions.register(spark)
     Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f), "a b c a b c")).toDF("u", "v", "t")
       .createOrReplaceTempView("gf_probe")
     val r = spark.sql(
@@ -28,22 +27,26 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("hilbert_key SQL function matches the scalar kernel") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT hilbert_key(3, 5, 4) AS h").head()
     r.getLong(0) shouldBe VectorOps.hilbertKey(4, 3L, 5L)
   }
 
-  test("GraftExtensions injects all function builders without error") {
-    // a fresh session with spark.sql.extensions can't be built in the
-    // shared-session test JVM; applying to a bare SparkSessionExtensions
-    // still exercises every injectFunction call (API drift guard)
-    noException should be thrownBy
-      new graft.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+  // No register call anywhere: the shared session is built by
+  // GraftSession, whose GraftExtensions injects every function.
+  test("the shared session resolves every GraftFunctions name in SQL") {
+    spark.conf.get("spark.sql.extensions") shouldBe "graft.GraftExtensions"
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe "1000"
+    GraftFunctions.all.foreach { case (id, info, _) =>
+      withClue(s"${id.funcName}: ") {
+        val described = spark.sql(s"DESCRIBE FUNCTION ${id.funcName}")
+          .collect().map(_.getString(0)).mkString("\n")
+        described should include(s"Class: ${info.getClassName}")
+      }
+    }
   }
 
   test("non-literal k for word_shingles is rejected with a clear error") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT word_shingles('a b c', CAST(id AS INT)) FROM range(1)").collect()
     }

@@ -121,4 +121,18 @@ class StagedContainmentSpec extends SparkSpec {
     keyBands.length shouldBe 4
     keyBands.map(_.getLong(1)).foreach(_ should be > 0L)
   }
+
+  test("a band index outside [0, passes) is rejected, not written as an " +
+      "empty or unfiltered candidate set") {
+    val (sh, _, prefix) = Dedup.containmentPrefixStaging(
+      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100)
+    Seq((4, 4), (-1, 4), (1, 1), (0, 0)).foreach { case (band, passes) =>
+      withClue(s"band=$band passes=$passes: ") {
+        val e = intercept[IllegalArgumentException] {
+          Dedup.containmentCandidatesBand(prefix, sh, band, passes)
+        }
+        e.getMessage should include("0 <= band < passes")
+      }
+    }
+  }
 }

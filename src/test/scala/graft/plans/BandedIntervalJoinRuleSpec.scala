@@ -23,12 +23,17 @@ class BandedIntervalJoinRuleSpec extends SparkSpec {
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def withRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ BandedIntervalJoinRule
+  // The shared session installs the rule (GraftExtensions); the
+  // rule-free baseline excludes it by name while `body` plans.
+  private def withoutRule[A](body: => A): A = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, BandedIntervalJoinRule.ruleName)
     try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == BandedIntervalJoinRule)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   private def rows(df: DataFrame): Set[(Long, Long)] =
@@ -36,50 +41,43 @@ class BandedIntervalJoinRuleSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("keyless interval join is rewritten from nested-loop to hash join") {
-    val before = physical(thetaJoin)
+    val before = withoutRule(physical(thetaJoin))
     before should include("BroadcastNestedLoopJoin")
 
-    withRule {
-      val df = thetaJoin
-      val after = physical(df)
-      after should not include "BroadcastNestedLoopJoin"
-      (after.contains("BroadcastHashJoin") || after.contains("SortMergeJoin") ||
-        after.contains("ShuffledHashJoin")) shouldBe true
-      // identical pairs, no band-fanout duplicates
-      val expected = rows(thetaJoin) // computed under the rule too — compare against op
-      val viaOperator = rows(graft.operators.RangeJoin.bandedIntervalAfter(
-        clicks, purchases, "click_ts", "p_ts", 3600L))
-      rows(df) shouldBe viaOperator
-      df.count() shouldBe df.distinct().count()
-    }
-    // and against the un-rewritten nested-loop result, outside the rule
-    rows(thetaJoin) should not be empty
+    val df = thetaJoin
+    val after = physical(df)
+    after should not include "BroadcastNestedLoopJoin"
+    (after.contains("BroadcastHashJoin") || after.contains("SortMergeJoin") ||
+      after.contains("ShuffledHashJoin")) shouldBe true
+    // identical pairs, no band-fanout duplicates
+    val viaOperator = rows(graft.operators.RangeJoin.bandedIntervalAfter(
+      clicks, purchases, "click_ts", "p_ts", 3600L))
+    rows(df) shouldBe viaOperator
+    df.count() shouldBe df.distinct().count()
+    // and the un-rewritten nested-loop result is not trivially empty
+    withoutRule(rows(thetaJoin)) should not be empty
   }
 
   test("rewritten and original results are identical") {
-    val original = rows(thetaJoin)
-    val rewritten = withRule(rows(thetaJoin))
+    val original = withoutRule(rows(thetaJoin))
+    val rewritten = rows(thetaJoin)
     rewritten shouldBe original
   }
 
   test("joins that already have an equi-key are left alone") {
-    withRule {
-      val keyed = clicks.join(
-        purchases.withColumnRenamed("user_id", "u2"),
-        col("click_id") % 10 === col("u2") % 10 &&
-          col("p_ts") > col("click_ts") &&
-          col("p_ts") <= col("click_ts") + expr("INTERVAL 3600 SECOND"))
-      physical(keyed) should not include "_graft_band"
-    }
+    val keyed = clicks.join(
+      purchases.withColumnRenamed("user_id", "u2"),
+      col("click_id") % 10 === col("u2") % 10 &&
+        col("p_ts") > col("click_ts") &&
+        col("p_ts") <= col("click_ts") + expr("INTERVAL 3600 SECOND"))
+    physical(keyed) should not include "_graft_band"
   }
 
   test("non-inner interval joins are left alone") {
-    withRule {
-      val left = clicks.join(purchases,
-        col("p_ts") > col("click_ts") &&
-          col("p_ts") <= col("click_ts") + expr("INTERVAL 3600 SECOND"),
-        "left")
-      physical(left) should not include "_graft_band"
-    }
+    val left = clicks.join(purchases,
+      col("p_ts") > col("click_ts") &&
+        col("p_ts") <= col("click_ts") + expr("INTERVAL 3600 SECOND"),
+      "left")
+    physical(left) should not include "_graft_band"
   }
 }

@@ -1,9 +1,12 @@
 #!/bin/bash
-# Plain-java runner for graft mains (ScaleGen/BenchReps/Verify/ScaleProbe)
-# outside sbt — avoids sbt target-lock contention when the test suite is
-# running, while matching the build.sbt fork protocol EXACTLY (same
-# add-opens, same -Xmx default; see NOTES round-9 session-2: a 96 GB heap
-# reproduces GC-mode rep outliers that 40 GB does not).
+# Plain-java runner for graft mains (Bench, BenchReps, Verify, PlanAudit,
+# ScaleGen, ScaleProbe, StreamScaleProbe, ContainmentStaged) outside sbt —
+# avoids sbt target-lock contention when the test suite is running, while
+# matching the build.sbt fork protocol EXACTLY (same add-opens, same -Xmx
+# default; see NOTES round-9 session-2: a 96 GB heap reproduces GC-mode
+# rep outliers that 40 GB does not). Every main builds its session through
+# graft.GraftSession, so SPARK_GRAFT_CPUS is the one session knob; the
+# per-query steady-state timer is `graft.BenchReps <out> <reps> <query>`.
 # Usage: tools/run_java.sh <mainClass> [args...]
 set -euo pipefail
 MEM="${SPARK_DRIVER_MEM:-40g}"
