@@ -52,8 +52,7 @@ object Bench {
       // cold vs 3.3 s steady for dedup_lsh_eval)
       noop(graft.operators.Dedup.nearDuplicatePairs(
         Tables.documents(spark, sfDir).limit(400), "doc_id", "text",
-        threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4,
-        broadcastArr = true))
+        threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4))
       // IVF assignment + cell-join + rank window family: the kernel,
       // sub-split and window shapes behind every ann_* row
       noop(graft.operators.Similarity.knnJoinIvf(

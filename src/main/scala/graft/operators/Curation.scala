@@ -283,15 +283,15 @@ object Curation {
       maxIter: Int = 20): DataFrame = {
     // carried across rounds: |e| is last round's |ss|, so one count
     // action per round suffices (the fixpoint check is count-equality
-    // with a short-circuited except, see below). checkpointCount fuses
+    // with a short-circuited except, see below). checkpointWith fuses
     // the lineage-truncating materialization and that count into ONE
     // job per round (round 12 — was an eager checkpoint job + a count
     // job over the same blocks).
-    var (e, eCount) = graft.util.Stage.checkpointCount(edges
+    var (e, eCount) = graft.util.Stage.checkpointWith(edges
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct())
+      .distinct())(_.count())
     var stable = eCount == 0L
     var iter = 0
     while (!stable && iter < maxIter) {
@@ -310,11 +310,11 @@ object Curation {
         .select(col("v").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v"))
       val minsS = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val (ss, ssCount) = graft.util.Stage.checkpointCount(
+      val (ss, ssCount) = graft.util.Stage.checkpointWith(
         ls.join(minsS, Seq("u"))
           .select(col("v").as("u"), col("m").as("v"))
           .union(minsS.select(col("u"), col("m").as("v")))
-          .where(col("u") =!= col("v")).distinct())
+          .where(col("u") =!= col("v")).distinct())(_.count())
       // both sides are distinct sets: equal counts + empty one-sided
       // difference ⇔ fixpoint (&& short-circuits: the except job only
       // runs in the rare counts-equal rounds)

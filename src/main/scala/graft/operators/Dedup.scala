@@ -10,20 +10,32 @@ import graft.util.Stage.StageOps
   *
   *  - exact: hash-groupBy on a normalized fingerprint — one shuffle on the
   *    16-byte digest, no text comparison.
-  *  - MinHash + LSH: shingle -> minhash signature -> band buckets ->
-  *    candidate pairs within buckets -> exact Jaccard verification. The
-  *    self-join happens ONLY inside buckets (bounded by `maxBucketSize`),
-  *    never across the corpus — this is what makes near-dup detection
-  *    feasible at 100 TB (all-pairs is |D|^2; LSH is ~|D| * bucket_size).
+  *  - Jaccard / containment near-dups, three stages every caller composes:
+  *     1. Keys ([[Keys]]): the one (id, h = xxhash64(shingle)) table of a
+  *        corpus, distinct per doc, persisted at most once per query;
+  *     2. Candidates: murmur / md5 MinHash-LSH band buckets, rare-shingle
+  *        blocking with an optional sampled left side, the containment
+  *        prefix index (band b of B). Self-joins run only inside buckets
+  *        or blocks (~|D| * bucket_size), never all-pairs (|D|^2);
+  *     3. Verify: [[jaccardPairs]] and [[containmentVerify]], one
+  *        doc→sorted-key-array join skeleton.
   *  - SimHash: 64-bit fingerprint (custom codegen expression), candidates
   *    share one of four 16-bit chunks, verified by Hamming distance
   *    (bit_count(a ^ b), a Spark built-in).
+  *
+  * Verify join strategy (the size rule): nothing here hints a join. The
+  * planner broadcasts the doc→array table while its estimate is under
+  * `spark.sql.autoBroadcastJoinThreshold` (10 MB by default — every
+  * bench/eval corpus), and AQE re-checks the size at run time; past it
+  * the same plan is a shuffle join, which works at any corpus size. A
+  * job that wants a bigger broadcast raises the threshold in its session
+  * (graft.ContainmentStaged does, for its verify step).
   *
   * All hash functions are Spark built-ins (xxhash64 / md5) or our native
   * expression — fixed seeds, deterministic across runs and partitionings.
   *
   * Cache ownership: the near-dup operators persist() intermediate staging
-  * tables (signatures, buckets) that both sides of their self-joins read.
+  * tables (signatures, buckets, keys) that several consumers read.
   * Those caches live until the CALLER drops them — run one logical query,
   * consume its action, then `spark.catalog.clearCache()` (what Bench/
   * Verify do), or at production scale write the staging table out and
@@ -52,143 +64,85 @@ object Dedup {
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     VectorExpressions.minhashSig(shingles, numHashes)
 
-  /** Per-document staged `(id, sh, sig)` — shingles + minhash signature,
-    * computed ONCE and cached. Every downstream consumer (both sides of
-    * the bucket self-join, both sides of the Jaccard verify join) reads
-    * the materialized arrays instead of re-running the interpreted
-    * shingle/hash expression tree. At 100 TB this staging step is a
-    * written signature table; in-process a cache is the same shape. */
-  private[operators] def stagedSignatures(
+  // ---- Stage 1: Keys ----
+
+  /** The hashed-shingle table `df` = (id, h = xxhash64(shingle)) of one
+    * corpus: 8-byte join and shuffle keys in place of the shingle strings.
+    *
+    * PRECONDITION, relied on downstream: (id, h) is distinct. The only
+    * constructor explodes the `sh` of an (id, sh) frame built here with
+    * [[TextAnalysis.wordShingles]] (one row per doc, distinct shingles),
+    * so a key's doc frequency is a row count and a doc's array size its
+    * shingle-set size, up to the 64-bit collisions every key join accepts.
+    *
+    * `shared` persists the table once, for stages that read it several
+    * times (blocking, containment staging). A single-reader stage reads
+    * `df` and picks that cache up when another stage of the query shared
+    * it (the cache manager matches by plan): one copy per query. */
+  final class Keys private[Dedup] (staged: DataFrame) {
+    val df: DataFrame = staged
+      .select(col("id"), explode(col("sh")).as("s"))
+      .select(col("id"), xxhash64(col("s")).as("h"))
+    lazy val shared: DataFrame = df.stageShare()
+  }
+
+  /** [[Keys]] of a document frame, shingled with word k-grams. Caches
+    * nothing itself (stages that share the keys persist them). Callers
+    * that already stage the corpus for LSH get their Keys from
+    * [[md5StagedAndCandidates]] instead, so it is shingled once. */
+  def keys(docs: DataFrame, idCol: String, textCol: String, k: Int): Keys =
+    new Keys(docs.select(col(idCol).as("id"),
+      TextAnalysis.wordShingles(col(textCol), k).as("sh")))
+
+  // ---- Stage 2: Candidates ----
+
+  /** The band keys of a signature frame (id, sig, …): one (id, band,
+    * bucket) row per doc and band, where band b's bucket is `bucket`
+    * over the b-th run of numHashes/bands signature entries. Every
+    * MinHash-LSH candidate generator bands through here. */
+  private def bandBuckets(sigged: DataFrame, numHashes: Int, bands: Int)(
+      bucket: Seq[Column] => Column): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rows = numHashes / bands
+    val keys = (0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        bucket((0 until rows).map(r => col("sig").getItem(b * rows + r)))
+          .as("bucket"))
+    }
+    sigged.select(col("id"), explode(array(keys: _*)).as("bk"))
+      .select(col("id"), col("bk.band").as("band"),
+        col("bk.bucket").as("bucket"))
+  }
+
+  /** Murmur-family MinHash-LSH near-dup pairs (a, b, jaccard), a < b:
+    * staged `(id, sh, sig)` — shingles + minhash signature, computed ONCE
+    * and cached, read by both sides of the bucket self-join and by the
+    * keys of the Jaccard verify (the in-process form of a written
+    * signature table) → band buckets → in-bucket pairs → exact Jaccard.
+    * @param maxBucketSize skip degenerate buckets (boilerplate shingles
+    *        collide everything); at scale this caps the per-bucket join. */
+  def nearDuplicatePairs(
       docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numHashes: Int): DataFrame =
-    docs
+      threshold: Double = 0.7, shingleK: Int = 3,
+      numHashes: Int = 16, bands: Int = 4,
+      maxBucketSize: Int = 1000): DataFrame = {
+    val staged = docs
       .select(
         col(idCol).as("id"),
         TextAnalysis.wordShingles(col(textCol), shingleK).as("sh"))
       .withColumn("sig", minhashSignature(col("sh"), numHashes))
       .persist()
-
-  /** LSH candidate pairs (a < b) from banded minhash signatures.
-    * @param maxBucketSize skip degenerate buckets (boilerplate shingles
-    *        collide everything); at scale this caps the per-bucket join. */
-  def lshCandidatePairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      maxBucketSize: Int = 1000): DataFrame =
-    candidatePairs(
-      stagedSignatures(docs, idCol, textCol, shingleK, numHashes),
-      numHashes, bands, maxBucketSize)
-
-  private def candidatePairs(
-      staged: DataFrame, numHashes: Int, bands: Int,
-      maxBucketSize: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val bandKeys = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64((0 until rows).map(r => col("sig").getItem(b * rows + r)): _*).as("bucket"))
-    }
-    val buckets = staged
-      .select(col("id"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-    val sized = buckets
+    val sized = bandBuckets(staged, numHashes, bands)(xxhash64(_: _*))
       .withColumn("bucket_n", count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
       .where(col("bucket_n") <= maxBucketSize)
       .persist() // both sides of the self-join read this bucket table
-    val l = sized.select(col("band"), col("bucket"), col("id").as("a"))
-    val r = sized.select(col("band"), col("bucket"), col("id").as("b"))
-    l.join(r, Seq("band", "bucket"))
+    val pairs = sized.select(col("band"), col("bucket"), col("id").as("a"))
+      .join(sized.select(col("band"), col("bucket"), col("id").as("b")),
+        Seq("band", "bucket"))
       .where(col("a") < col("b"))
       .select(col("a"), col("b"))
       .distinct()
-  }
-
-  /** Candidate pairs verified with exact shingle Jaccard >= threshold.
-    * Candidates and verification share one cached signature stage. */
-  def nearDuplicatePairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.7, shingleK: Int = 3,
-      numHashes: Int = 16, bands: Int = 4,
-      maxBucketSize: Int = 1000, broadcastArr: Boolean = false): DataFrame = {
-    // threshold > 0 is load-bearing for the verify contract: docs with
-    // EMPTY shingle sets produce no exploded rows, so their pairs drop
-    // out of the verify joins — correct for any positive threshold
-    // (their Jaccard is 0), wrong only at threshold <= 0
-    require(threshold > 0.0, s"threshold must be > 0, got $threshold")
-    val staged = stagedSignatures(docs, idCol, textCol, shingleK, numHashes)
-    val pairs = candidatePairs(staged, numHashes, bands, maxBucketSize)
-    // hashed-key verify (round 12): same representation as the md5
-    // family — wordShingles is already distinct, so Jaccard over the
-    // xxhash64 key arrays equals the string-set Jaccard under the
-    // accepted collision odds
-    verifyNearDupCandidates(staged, pairs, threshold, broadcastArr)
-  }
-
-  /** Write the per-document signature stage as a parquet table — the
-    * persistent form of [[stagedSignatures]] for incremental pipelines. */
-  def writeSignatureTable(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      shingleK: Int = 3, numHashes: Int = 16): Unit =
-    docs
-      .select(
-        col(idCol).as("id"),
-        TextAnalysis.wordShingles(col(textCol), shingleK).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-      .write.mode("overwrite").parquet(path)
-
-  /** Incremental near-dup detection: NEW documents are shingled/hashed
-    * and bucket-joined against the PERSISTED signature table — the old
-    * corpus is never re-shingled, and the candidate join touches only
-    * buckets the new documents land in. Returns (new_id, existing_id,
-    * jaccard) pairs, new-vs-(old ∪ new). This is the 100 TB operating
-    * mode: dedup cost scales with the delta, not the corpus. */
-  def incrementalNearDuplicatePairs(
-      newDocs: DataFrame, idCol: String, textCol: String,
-      signatureTablePath: String,
-      threshold: Double = 0.7, shingleK: Int = 3,
-      numHashes: Int = 16, bands: Int = 4,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val spark = newDocs.sparkSession
-    val existing = spark.read.parquet(signatureTablePath)
-    val fresh = stagedSignatures(newDocs, idCol, textCol, shingleK, numHashes)
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    def bandKeys(df: DataFrame): DataFrame = {
-      val keys = (0 until bands).map { b =>
-        struct(
-          lit(b).as("band"),
-          xxhash64((0 until rows).map(r => col("sig").getItem(b * rows + r)): _*).as("bucket"))
-      }
-      df.select(col("id"), explode(array(keys: _*)).as("bk"))
-        .select(col("id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-    }
-    val newBuckets = bandKeys(fresh)
-    val allBuckets = bandKeys(existing.unionByName(fresh.select(existing.columns.map(col): _*)))
-    val sized = allBuckets
-      .withColumn("bucket_n", count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .where(col("bucket_n") <= maxBucketSize)
-      .select(col("band"), col("bucket"), col("id").as("b"))
-    // Canonicalize new-vs-new pairs to a < b (both orientations land in
-    // the candidate join because both ids are on the "new" side); new-vs-old
-    // keeps its (new, old) orientation whatever the id order.
-    val newIds = fresh.select(col("id").as("b")).withColumn("b_is_new", lit(true))
-    val cand = newBuckets.select(col("band"), col("bucket"), col("id").as("a"))
-      .join(sized, Seq("band", "bucket"))
-      .where(col("a") =!= col("b"))
-      .select(col("a"), col("b"))
-      .distinct()
-      .join(broadcast(newIds), Seq("b"), "left")
-      .where(coalesce(col("b_is_new"), lit(false)) === lit(false) || col("a") < col("b"))
-      .select(col("a"), col("b"))
-    val allSh = existing.select(col("id"), col("sh"))
-      .unionByName(fresh.select(col("id"), col("sh")))
-    cand
-      .join(fresh.select(col("id").as("a"), col("sh").as("sh_a")), Seq("a"))
-      .join(allSh.select(col("id").as("b"), col("sh").as("sh_b")), Seq("b"))
-      .withColumn("jaccard", TextAnalysis.jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
+    jaccardPairs(new Keys(staged), pairs, threshold)
   }
 
   /** The md5-family persistent signature table: (id, sh, sig) for every
@@ -209,17 +163,16 @@ object Dedup {
         VectorExpressions.md5MinhashSig(col("sh"), numHashes))
       .write.mode("overwrite").parquet(path)
 
-  /** md5-family twin of [[incrementalNearDuplicatePairs]] — the
-    * dedup-the-delta operating mode (new crawl increment vs a FROZEN
+  /** The dedup-the-delta operating mode (new crawl increment vs a FROZEN
     * corpus whose signature table is already on disk) with the
-    * DuckDB-reproducible hash family, so the whole incremental dataflow
-    * — persisted signatures, band buckets, delta-bounded candidate
-    * join, exact-Jaccard verify against the STORED shingle arrays —
-    * carries an exact cross-engine oracle (`dedup_incremental_lsh`).
-    * `existing` is the (id, sh, sig) frame written by
-    * [[writeSignatureTableMd5]]: the old corpus text is never re-read
-    * or re-shingled (this signature's type makes that impossible — no
-    * text column comes in), and the candidate join touches only band
+    * DuckDB-reproducible md5 hash family, so the whole incremental
+    * dataflow — persisted signatures, band buckets, delta-bounded
+    * candidate join, exact-Jaccard verify against the STORED shingle
+    * arrays — carries an exact cross-engine oracle
+    * (`dedup_incremental_lsh`). `existing` is the (id, sh, sig) frame
+    * written by [[writeSignatureTableMd5]]: the old corpus text is never
+    * re-read or re-shingled (this signature's type makes that impossible
+    * — no text column comes in), and the candidate join touches only band
     * buckets the NEW documents land in, so cost scales with the delta
     * plus the duplicate mass it hits, not the corpus.
     *
@@ -233,8 +186,6 @@ object Dedup {
       existing: DataFrame,
       threshold: Double = 0.5, shingleK: Int = 3,
       numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
     val fresh = newDocs
       .select(
         col(idCol).as("id"),
@@ -243,25 +194,16 @@ object Dedup {
       .withColumn("sig",
         VectorExpressions.md5MinhashSig(col("sh"), numHashes))
       .stageShare()
-    def bandKeys(df: DataFrame): DataFrame = {
-      val keys = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat_ws(",", (0 until rowsPerBand).map(r =>
-            col("sig").getItem(b * rowsPerBand + r)): _*).as("bucket"))
-      }
-      df.select(col("id"), explode(array(keys: _*)).as("bk"))
-        .select(col("id"), col("bk.band").as("band"),
-          col("bk.bucket").as("bucket"))
-    }
     // The probe side is the delta's buckets only; the build side is the
     // full bucket table (old from the persisted sig column — never
     // recomputed — plus the delta itself, so intra-delta dups are found
     // in the same pass). The broadcast carries delta IDS only.
-    val allBuckets = bandKeys(
+    val allBuckets = bandBuckets(
       existing.select(col("id"), col("sig"))
-        .unionByName(fresh.select(col("id"), col("sig"))))
+        .unionByName(fresh.select(col("id"), col("sig"))),
+      numHashes, bands)(concat_ws(",", _: _*))
     val newIds = fresh.select(col("id").as("b"), lit(true).as("b_is_new"))
-    val cand = bandKeys(fresh)
+    val cand = bandBuckets(fresh, numHashes, bands)(concat_ws(",", _: _*))
       .select(col("band"), col("bucket"), col("id").as("a"))
       .join(allBuckets.select(col("band"), col("bucket"), col("id").as("b")),
         Seq("band", "bucket"))
@@ -285,44 +227,31 @@ object Dedup {
       .select(col("a"), col("b"), col("jaccard"))
   }
 
-  /** The shared md5-LSH front-end: staged `(id, sh)` (persisted — read
-    * by the bucket self-join and by every caller-side verify join) and
-    * the banded candidate pairs (a < b). The signature — md5 per
-    * shingle + the numHashes-member Kirsch-Mitzenmacher family — is ONE
-    * codegen kernel call ([[graft.functions.VectorOps.md5MinhashSig]],
-    * bit-identical to the former conv(substring(md5…)) +
-    * nested-transform HOF chain that evaluated numHashes × |sh|
-    * interpreted lambdas per row). Exposed so the recall/precision eval
-    * harness can see RAW candidates, not just verified pairs. */
+  /** The shared md5-LSH front-end: the corpus's [[Keys]] and its banded
+    * candidate pairs (a < b). The staged `(id, sh)` frame both derive
+    * from is persisted — read by the signature/bucket side and by the
+    * key explode — so the corpus is shingled once for every signal an
+    * ensemble runs over it. The signature — md5 per shingle + the
+    * numHashes-member Kirsch-Mitzenmacher family — is ONE codegen kernel
+    * call ([[graft.functions.VectorOps.md5MinhashSig]]). Exposed so the
+    * recall/precision eval harness can see RAW candidates. */
   def md5StagedAndCandidates(
       docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    // identical semantics to array_distinct(transform(sequence…,
-    // concat_ws(" ", slice(toks…)))) over split(trim(text), "\s+") —
-    // one codegen loop instead of an interpreted per-shingle slice+concat
-    val shingles =
-      graft.functions.VectorExpressions.wordShingles(col(textCol), shingleK)
+      shingleK: Int, numHashes: Int, bands: Int): (Keys, DataFrame) = {
     val staged = docs
-      .select(col(idCol).as("id"), shingles.as("sh"))
+      .select(col(idCol).as("id"),
+        TextAnalysis.wordShingles(col(textCol), shingleK).as("sh"))
       .persist()
-    val sigged = staged.where(size(col("sh")) > 0).withColumn("sig",
-      graft.functions.VectorExpressions.md5MinhashSig(col("sh"), numHashes))
-    val bandKeys = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",", (0 until rowsPerBand).map(r =>
-          col("sig").getItem(b * rowsPerBand + r)): _*).as("bucket"))
-    }
-    val buckets = sigged
-      .select(col("id"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
+    val buckets = bandBuckets(
+      staged.where(size(col("sh")) > 0).withColumn("sig",
+        VectorExpressions.md5MinhashSig(col("sh"), numHashes)),
+      numHashes, bands)(concat_ws(",", _: _*))
     val cand = buckets.select(col("band"), col("bucket"), col("id").as("a"))
       .join(buckets.select(col("band"), col("bucket"), col("id").as("b")),
         Seq("band", "bucket"))
       .where(col("a") < col("b"))
       .select(col("a"), col("b")).distinct()
-    (staged, cand)
+    (new Keys(staged), cand)
   }
 
   /** md5-family twin of [[nearDuplicatePairs]]: the SAME banded-LSH
@@ -337,188 +266,44 @@ object Dedup {
   def nearDuplicatePairsMd5(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, shingleK: Int = 3,
-      numHashes: Int = 16, bands: Int = 4,
-      broadcastArr: Boolean = false): DataFrame = {
-    require(threshold > 0.0, s"threshold must be > 0, got $threshold")
-    val (staged, cand) =
+      numHashes: Int = 16, bands: Int = 4): DataFrame = {
+    val (keys, cand) =
       md5StagedAndCandidates(docs, idCol, textCol, shingleK, numHashes, bands)
-    verifyNearDupCandidates(staged, cand, threshold, broadcastArr)
+    jaccardPairs(keys, cand, threshold)
   }
 
-  /** Exact-Jaccard verification of LSH candidate pairs against a
-    * [[md5StagedAndCandidates]] staged `(id, sh)` frame — the md5
-    * family's verify step, exposed so ensemble queries that already
-    * hold the staged frame (multi-signal, cross-modal) can share ONE
-    * corpus shingling across their signals. Runs on per-doc sorted
-    * hashed-key arrays (see [[verifyJaccardPairs]]); value-identical
-    * to the string-array intersect under the accepted 64-bit-collision
-    * odds. */
-  def verifyNearDupCandidates(staged: DataFrame, cand: DataFrame,
-      threshold: Double, broadcastArr: Boolean = false): DataFrame =
-    verifyNearDupCandidatesKeys(
-      staged.select(col("id"), explode(col("sh")).as("s"))
-        .select(col("id"), xxhash64(col("s")).as("h")),
-      cand, threshold, broadcastArr)
-
-  /** [[verifyNearDupCandidates]] over a PRE-EXPLODED hashed-key table
-    * `ex` (id, h = xxhash64(shingle)) — the ensemble form (round 13):
-    * multi-signal dedup derives its Jaccard verify AND its containment
-    * staging from the same word shingles, so the corpus explode+hash
-    * pass is built once and shared between the signals instead of run
-    * per signal (at 100 TB each re-explode is a full corpus pass —
-    * the dedup_lsh_eval staging rule applied one level lower). */
-  def verifyNearDupCandidatesKeys(ex: DataFrame, cand: DataFrame,
-      threshold: Double, broadcastArr: Boolean = false): DataFrame = {
-    require(threshold > 0.0, s"threshold must be > 0, got $threshold")
-    verifyJaccardPairs(cand, ex, threshold, broadcastArr)
-  }
-
-  /** EXACT Jaccard near-dup pairs via inverted-index blocking: every
-    * pair sharing ≥ 1 shingle whose document frequency is ≤
-    * `maxShingleDf`, verified with exact shingle Jaccard ≥ `threshold`.
-    * The ground-truth side of the LSH eval harness. Blocking is sound
-    * for near-dup thresholds: a pair at Jaccard ≥ t shares ≥
-    * t/(1+t)·|union| shingles, so unless EVERY shared shingle is
-    * hotter than the cap (boilerplate-only overlap — which the LSH
-    * path's maxBucketSize discards too), the pair lands in ≥ 1 block.
-    * Cost model is dedup_containment's: Σ_shingle df² over rare
-    * shingles, duplicate-mass-proportional, never corpus-quadratic.
-    * Join keys are xxhash64(shingle) — 8-byte shuffle rows; the df
-    * count runs on the same hashed keys (collision odds as accepted in
-    * [[containmentPairs]]). Returns (a, b, jaccard), a < b. */
-  def exactJaccardPairsBlocked(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, threshold: Double = 0.5,
-      maxShingleDf: Int = 20, broadcastArr: Boolean = false): DataFrame = {
-    val shingles =
-      graft.functions.VectorExpressions.wordShingles(col(textCol), shingleK)
-    exactJaccardPairsBlockedStaged(
-      docs.select(col(idCol).as("id"), shingles.as("sh")).persist(),
-      threshold, maxShingleDf, broadcastArr)
-  }
-
-  /** [[exactJaccardPairsBlocked]] over a PRE-STAGED `(id, sh)` frame —
-    * the form the eval-harness queries use so the corpus is shingled
-    * ONCE and shared with the LSH candidate side
-    * ([[md5StagedAndCandidates]]'s staged output), exactly as the
-    * DuckDB oracle shares its `sh` CTE. At 100 TB the standalone form's
-    * second tokenize pass is a full extra corpus scan. */
-  def exactJaccardPairsBlockedStaged(
-      staged: DataFrame, threshold: Double,
-      maxShingleDf: Int, broadcastArr: Boolean = false): DataFrame = {
-    require(threshold > 0.0, s"threshold must be > 0, got $threshold")
-    // the exploded hashed-key table feeds THREE consumers (df count,
-    // block self-join, per-doc verify arrays) — share its one explode
-    val ex = staged
-      .select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-      .stageShare()
-    val rare = ex.groupBy(col("h"))
-      .agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxShingleDf)
-      .select(col("h"))
-    val blocked = ex.join(rare, Seq("h")).persist()
-    val pairs = blocked.select(col("h"), col("id").as("a"))
-      .join(blocked.select(col("h"), col("id").as("b")), Seq("h"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    verifyJaccardPairs(pairs, ex, threshold, broadcastArr)
-  }
-
-  /** Exact-Jaccard verification of candidate (a, b) pairs from the
-    * exploded hashed-shingle table `ex` (id, h): per-doc SORTED
-    * 8-byte-key arrays instead of the raw shingle strings (round 12 —
-    * the containmentVerify representation applied to the Jaccard
-    * verifiers). |A∩B| via array_intersect on the key arrays equals the
-    * string-array intersect under the same accepted 64-bit-collision
-    * odds as the block join itself, |A∪B| = n_a + n_b − |A∩B| without
-    * materializing a union array, and the verify joins carry ~8·|sh|
-    * bytes per doc instead of the strings. A LENGTH prefilter
-    * (min/max ≥ t, with 1e-9 slack for the IEEE division) drops pairs
-    * that cannot reach the threshold before any intersection runs —
-    * J ≤ min(n_a,n_b)/max(n_a,n_b), so nothing qualifying is pruned.
-    * `broadcastArr` mirrors [[containmentVerify]]'s strategy switch
-    * (round 13, ADVICE): true BROADCASTS the doc-keyed array table on
-    * both probe sides so pair rows stream through map-side probes and
-    * never carry arrays across an exchange — right while the doc→array
-    * table fits the 8 GB broadcast cap (the bench/eval call sites);
-    * false (the scale-safe default) leaves the strategy to the planner,
-    * whose shuffle join works at ANY corpus size — beyond broadcastable
-    * corpora the same shape is a bucketed co-partitioned join. */
-  private def verifyJaccardPairs(pairs: DataFrame, ex: DataFrame,
-      threshold: Double, broadcastArr: Boolean): DataFrame = {
-    val arr = ex.groupBy(col("id"))
-      .agg(sort_array(collect_list(col("h"))).as("ska"),
-        count(lit(1)).as("n"))
-    def side(nm: String) = {
-      val t = arr.select(col("id").as(nm),
-        col("ska").as(s"ska_$nm"), col("n").as(s"n_$nm"))
-      if (broadcastArr) broadcast(t) else t
-    }
-    pairs
-      .join(side("a"), Seq("a"))
-      .join(side("b"), Seq("b"))
-      .where(least(col("n_a"), col("n_b")).cast("double") /
-        greatest(col("n_a"), col("n_b")).cast("double") >=
-        lit(threshold) - lit(1e-9))
-      .withColumn("shared",
-        size(array_intersect(col("ska_a"), col("ska_b"))).cast("long"))
-      .withColumn("jaccard", col("shared").cast("double") /
-        (col("n_a") + col("n_b") - col("shared")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
-  }
-
-  /** Sampled-ground-truth variant of [[exactJaccardPairsBlocked]]: the
-    * exact truth pairs whose MIN-id endpoint is in `sampledIds` (one
-    * column `id`). The estimator rule "a pair is sampled iff its min-id
-    * doc is sampled" gives every (a,b) pair exactly ONE inclusion
-    * Bernoulli — probability = the sampling rate of a's stratum — so
-    * per-stratum counts reweight to unbiased full-truth estimates with
-    * exact-integer arithmetic (no 1−(1−p)² both-endpoint algebra).
+  /** EXACT Jaccard pairs (a, b, jaccard), a < b, via inverted-index
+    * blocking: every pair sharing ≥ 1 key of doc frequency ≤
+    * `maxShingleDf`, verified at ≥ `threshold` — the LSH eval harness's
+    * ground truth. Sound for near-dup thresholds: a pair at Jaccard ≥ t
+    * shares ≥ t/(1+t)·|union| shingles, so it lands in ≥ 1 block unless
+    * EVERY shared shingle is hotter than the cap (boilerplate-only
+    * overlap, which LSH's maxBucketSize discards too). Cost: Σ_key df²
+    * over rare keys, never corpus-quadratic. The keys feed three
+    * consumers (df count, block self-join, verify arrays): shared.
     *
-    * Cost is the point: the rare-shingle df index is still one linear
-    * pass over the corpus, but the Σdf² block self-join — the term that
-    * made the FULL ground truth the catalog's heaviest 100× row (90.6 s
-    * median) and would be unaffordable at 100 TB — shrinks by the
-    * sample fraction, because only sampled docs' postings enter the
-    * LEFT side. Verification joins then touch only candidate pairs with
-    * a sampled endpoint. Returns (a, b, jaccard), a < b, a ∈ sample. */
-  def exactJaccardPairsBlockedSampled(
-      docs: DataFrame, idCol: String, textCol: String,
-      sampledIds: DataFrame,
-      shingleK: Int = 3, threshold: Double = 0.5,
-      maxShingleDf: Int = 20, broadcastArr: Boolean = false): DataFrame = {
-    val shingles =
-      graft.functions.VectorExpressions.wordShingles(col(textCol), shingleK)
-    exactJaccardPairsBlockedSampledStaged(
-      docs.select(col(idCol).as("id"), shingles.as("sh")).persist(),
-      sampledIds, threshold, maxShingleDf, broadcastArr)
-  }
-
-  /** [[exactJaccardPairsBlockedSampled]] over a PRE-STAGED `(id, sh)`
-    * frame — see [[exactJaccardPairsBlockedStaged]] for why. */
-  def exactJaccardPairsBlockedSampledStaged(
-      staged: DataFrame, sampledIds: DataFrame,
-      threshold: Double, maxShingleDf: Int,
-      broadcastArr: Boolean = false): DataFrame = {
-    require(threshold > 0.0, s"threshold must be > 0, got $threshold")
-    val ex = staged
-      .select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-      .stageShare()
+    * `sampledIds` (column `id`) keeps only sampled docs on the LEFT side
+    * of the block self-join: exactly the truth pairs whose MIN-id endpoint
+    * is sampled. Every pair then has ONE inclusion Bernoulli (a's stratum
+    * rate), so per-stratum counts reweight to unbiased full-truth
+    * estimates in exact integers; and the Σdf² self-join — what made the
+    * full truth the heaviest 100× row (90.6 s median) — shrinks by the
+    * sample fraction (the df index stays one linear pass). */
+  def blockedJaccardPairs(keys: Keys, threshold: Double, maxShingleDf: Int,
+      sampledIds: Option[DataFrame] = None): DataFrame = {
+    val ex = keys.shared
     val rare = ex.groupBy(col("h"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") <= maxShingleDf)
       .select(col("h"))
     val blocked = ex.join(rare, Seq("h")).persist()
-    val sampledBlocked = blocked
-      .join(sampledIds.select(col("id")), Seq("id"))
-    val pairs = sampledBlocked.select(col("h"), col("id").as("a"))
+    val left = sampledIds.fold(blocked)(s =>
+      blocked.join(s.select(col("id")), Seq("id")))
+    val pairs = left.select(col("h"), col("id").as("a"))
       .join(blocked.select(col("h"), col("id").as("b")), Seq("h"))
       .where(col("a") < col("b"))
       .select(col("a"), col("b")).distinct()
-    verifyJaccardPairs(pairs, ex, threshold, broadcastArr)
+    jaccardPairs(keys, pairs, threshold)
   }
 
   /** Asymmetric shingle CONTAINMENT pairs: C(A→B) = |sh(A)∩sh(B)| /
@@ -531,7 +316,8 @@ object Dedup {
     * count runs on the same hashed keys (a 64-bit collision merging two
     * shingles' df is the same accepted odds as the join itself).
     * Returns every pair with (a, b, shared, n_a, n_b, containment);
-    * callers apply their threshold. */
+    * callers apply their threshold. The unfiltered REFERENCE the prefix
+    * path is spec-checked against, so it shares none of its stages. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3, maxShingleDf: Long = 100): DataFrame = {
     // Shingles are hashed at the explode and the (doc, key) table staged
@@ -559,132 +345,42 @@ object Dedup {
       .withColumn("containment", col("shared") / col("n_a"))
   }
 
-  /** PREFIX-FILTERED containment pairs (PPJoin-style): exactly the rows
-    * of `containmentPairs(...).where(containment >= threshold)`, at a
-    * fraction of the join work. Completeness argument: order shingles by
-    * a global total order (df asc, key asc — rarest first); if
-    * C(A→B) ≥ t then A and B share ≥ ⌈t·|A|⌉ shingles, and A's PREFIX
-    * (its first ⌊(1−t)·|A|⌋ + 1 shingles) cannot be disjoint from the
-    * shared set — the suffix holds only t·|A| − 1 < ⌈t·|A|⌉ slots. So
-    * indexing ONLY the prefix on the A side finds every qualifying
-    * directed pair; verification computes the exact shared count ONCE
-    * per candidate via sorted hash arrays (array_intersect on distinct
-    * per-doc keys ≡ the join-row count of [[containmentPairs]], same
-    * 64-bit-collision odds). At threshold 0.9 the indexed side shrinks
-    * ~10×, and the Σdf² pair explosion — the measured super-linear term
-    * of dedup_containment at the 10× slice — collapses to
-    * Σ(df_prefix · df). The candidate join is user-repartitioned on the
-    * shingle key (the knnJoinIvf AQE-width rule: CPU-heavy verify
-    * downstream, small shuffle bytes). */
-  def containmentPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, threshold: Double = 0.5,
-      maxShingleDf: Long = 100, broadcastArr: Boolean = false): DataFrame =
-    containmentPairsPrefixBand(docs, idCol, textCol, k, threshold,
-      maxShingleDf, band = 0, passes = 1, broadcastArr = broadcastArr)
-
-  /** [[containmentPairsPrefix]] over a PRE-STAGED `(id, sh)` shingle
-    * frame (a [[md5StagedAndCandidates]] staged output) — the ensemble
-    * form: multi-signal dedup runs a Jaccard signal and a containment
-    * signal over the SAME word shingles, so the corpus is tokenized and
-    * shingled once and both signals derive from the shared stage (at
-    * 100 TB the standalone form's second tokenize pass is a full extra
-    * corpus scan — the dedup_lsh_eval rule applied to the ensemble). */
-  def containmentPairsPrefixShared(staged: DataFrame,
-      threshold: Double, maxShingleDf: Long,
-      broadcastArr: Boolean = false): DataFrame =
-    containmentPairsPrefixFromKeys(
-      staged.select(col("id").as("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), xxhash64(col("s")).as("sk")),
-      threshold, maxShingleDf, broadcastArr)
-
-  /** [[containmentPairsPrefixShared]] over a PRE-EXPLODED hashed-key
-    * table `shk` (doc_id, sk = xxhash64(shingle)) — one level lower
-    * than the staged `(id, sh)` form, for ensembles that already built
-    * the exploded table for another signal's verify (round 13:
-    * dedup_multi_signal shares ONE corpus explode between its Jaccard
-    * verify and this containment staging — see
-    * [[verifyNearDupCandidatesKeys]]). */
-  def containmentPairsPrefixFromKeys(shk: DataFrame,
-      threshold: Double, maxShingleDf: Long,
-      broadcastArr: Boolean = false): DataFrame = {
+  /** The staging frames of every prefix-containment path, from one
+    * corpus's [[Keys]]: `sh` (id, h) hot-filtered keys, `arr` (id, ska,
+    * n) per-doc sorted key arrays, `prefix` (h, a) the PPJoin prefix
+    * index. graft.ContainmentStaged writes them ONCE as parquet and runs
+    * each band pass in its own JVM against them.
+    *
+    * Prefix completeness (PPJoin): order a doc's keys by a global total
+    * order (df asc, key asc — rarest first); if C(A→B) ≥ t then A and B
+    * share ≥ ⌈t·|A|⌉ keys, and A's PREFIX (its first ⌊(1−t)·|A|⌋ + 1
+    * keys) cannot be disjoint from the shared set — the suffix holds
+    * only t·|A| − 1 < ⌈t·|A|⌉ slots. So indexing ONLY the prefix on the A
+    * side finds every qualifying directed pair; at threshold 0.9 the
+    * indexed side shrinks ~10×, and the Σdf² pair explosion — the
+    * measured super-linear term of dedup_containment at the 10× slice —
+    * collapses to Σ(df_prefix · df). */
+  private[graft] def containmentStaging(keys: Keys, threshold: Double,
+      maxShingleDf: Long): (DataFrame, DataFrame, DataFrame) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val (sh, arr, prefix) =
-      containmentPrefixStagingFromKeys(shk, threshold, maxShingleDf)
-    val cand = containmentCandidatesBand(prefix, sh, band = 0, passes = 1)
-    containmentVerify(cand, arr, threshold, broadcastArr = broadcastArr)
-  }
-
-  /** One BAND-PASS of [[containmentPairsPrefix]]: the candidate join is
-    * restricted to prefix-shingle keys with pmod(sk, passes) == band —
-    * the scratch-bounding decomposition for corpora whose single-pass
-    * candidate shuffle exceeds the cluster's (or box's) shuffle scratch
-    * (the dedup_containment fourth-decade ENOSPC wall, VERDICT r10 #3).
-    * Completeness is per-KEY: a qualifying pair is found through every
-    * one of its shared prefix shingles, each of which lives in exactly
-    * one band, so the union over bands finds every pair the single pass
-    * finds (a pair sharing prefix keys in several bands is emitted by
-    * several passes — verification is deterministic per pair, so a
-    * final `.distinct()` restores exact single-pass semantics;
-    * spec-pinned in StagedContainmentSpec). Per-pass candidate shuffle
-    * is ~1/passes of the single pass. This convenience form recomputes
-    * the staging aggregates per call; the scale path
-    * ([[containmentPairsPrefixStaged]] in-JVM, graft.ContainmentStaged
-    * across JVMs) stages them once and verifies once over the distinct
-    * union of all bands' candidates. */
-  def containmentPairsPrefixBand(docs: DataFrame, idCol: String,
-      textCol: String, k: Int = 3, threshold: Double = 0.5,
-      maxShingleDf: Long = 100, band: Int = 0, passes: Int = 1,
-      broadcastArr: Boolean = false): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    require(passes >= 1 && band >= 0 && band < passes,
-      s"need 0 <= band < passes, got band=$band passes=$passes")
-    val (sh, arr, prefix) = containmentPrefixStaging(
-      docs, idCol, textCol, k, threshold, maxShingleDf)
-    val cand = containmentCandidatesBand(prefix, sh, band, passes)
-    containmentVerify(cand, arr, threshold, broadcastArr = broadcastArr)
-  }
-
-  /** The staging frames every prefix-containment path shares:
-    * `sh` (doc_id, sk) hot-filtered hashed shingles, `arr` (doc_id,
-    * ska, n_sh) per-doc sorted key arrays, `prefix` (sk, a) the PPJoin
-    * prefix index. Exposed package-private so the fourth-decade
-    * campaign (graft.ContainmentStaged) can materialize them ONCE as
-    * parquet and run each band pass in its own JVM against the staged
-    * tables instead of recomputing the corpus-wide aggregates per pass. */
-  private[graft] def containmentPrefixStaging(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int, threshold: Double, maxShingleDf: Long)
-      : (DataFrame, DataFrame, DataFrame) =
-    containmentPrefixStagingFromKeys(
-      docs.select(col(idCol).as("doc_id"),
-          explode(TextAnalysis.wordShingles(col(textCol), k)).as("s"))
-        .select(col("doc_id"), xxhash64(col("s")).as("sk")),
-      threshold, maxShingleDf)
-
-  /** [[containmentPrefixStaging]] from an exploded hashed-shingle table
-    * `(doc_id, sk)` — the entry point for callers that already hold a
-    * staged `(id, sh)` frame (an ensemble sharing one corpus shingling
-    * across its signals, see [[containmentPairsPrefixShared]]). */
-  private[graft] def containmentPrefixStagingFromKeys(
-      shk0: DataFrame, threshold: Double, maxShingleDf: Long)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val shk = shk0.stageShare()
-    val hot = shk.groupBy(col("sk"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .where(col("df") > maxShingleDf).select(col("sk"))
-    val sh = shk.join(hot, Seq("sk"), "left_anti").stageShare()
+    val shk = keys.shared
+    // (id, h) is distinct (the Keys precondition), so a key's doc
+    // frequency is its row count
+    val hot = shk.groupBy(col("h"))
+      .agg(count(lit(1)).as("df"))
+      .where(col("df") > maxShingleDf).select(col("h"))
+    val sh = shk.join(hot, Seq("h"), "left_anti").stageShare()
     // per-doc sorted key arrays + sizes: ONE reduction feeds the prefix
     // rank, the verify arrays and the n_a/n_b sizes
-    val arr = sh.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("sk"))).as("ska"),
-        count(lit(1)).as("n_sh"))
+    val arr = sh.groupBy(col("id"))
+      .agg(sort_array(collect_list(col("h"))).as("ska"),
+        count(lit(1)).as("n"))
       .stageShare()
-    val dfs = sh.groupBy(col("sk")).agg(count(lit(1)).as("dfk"))
-    val ranked = sh.join(dfs, Seq("sk"))
+    val dfs = sh.groupBy(col("h")).agg(count(lit(1)).as("dfk"))
+    val ranked = sh.join(dfs, Seq("h"))
       .withColumn("r", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("dfk"), col("sk"))))
+        Window.partitionBy(col("id")).orderBy(col("dfk"), col("h"))))
     // prefix bound: required size is ⌊(1−t)·n⌋ + 1 in EXACT rational
     // arithmetic, but (1.0 − t) in IEEE can land one ulp BELOW the
     // rational value (1.0 − 0.9 = 0.0999…98), under-sizing the prefix
@@ -694,83 +390,117 @@ object Dedup {
     // prefix ≥ the required length stays complete, and the cost is one
     // extra indexed shingle per document. Pinned by the adversarial
     // boundary case in NewOpsR8Spec.
-    val prefix = ranked.join(arr.select(col("doc_id"), col("n_sh")), Seq("doc_id"))
+    val prefix = ranked.join(arr.select(col("id"), col("n")), Seq("id"))
       .where(col("r") <=
-        floor((lit(1.0) - lit(threshold)) * col("n_sh")).cast("long") + 2L)
-      .select(col("sk"), col("doc_id").as("a"))
-    (sh.select(col("sk"), col("doc_id")), arr, prefix)
+        floor((lit(1.0) - lit(threshold)) * col("n")).cast("long") + 2L)
+      .select(col("h"), col("id").as("a"))
+    (sh, arr, prefix)
   }
 
-  /** Band `band` of `passes`' CANDIDATE pairs: the prefix⋈shingle join
-    * restricted on the JOIN KEY to pmod(sk, passes) == band — both
-    * sides filtered BEFORE the shuffle, so the pass's candidate
-    * exchange carries ~1/passes of the keys (passes = 1 ≡ the
-    * unrestricted single pass). Emits DISTINCT (a, b) id pairs only —
-    * no array payloads — so a band pass's scratch is the banded 8-byte
-    * key join plus an id-pair distinct, nothing corpus-sized. A band
-    * outside [0, passes) would select no key (or, at passes = 1, every
-    * key) and is rejected. */
+  /** Band `band` of `passes`' DISTINCT candidate (a, b) id pairs: the
+    * prefix⋈key join restricted to pmod(h, passes) == band on both sides
+    * BEFORE the shuffle, so a pass exchanges ~1/passes of the keys and
+    * carries no array payloads (passes = 1 is the single pass).
+    * Completeness is per KEY: a qualifying pair is found through each of
+    * its shared prefix keys, each in exactly one band, so the union over
+    * bands ∘ distinct is the single pass (spec-pinned in
+    * StagedContainmentSpec). A band outside [0, passes) would select no
+    * key (or, at passes = 1, every key) and is rejected. The join is
+    * repartitioned on the key (the knnJoinIvf AQE-width rule: CPU-heavy
+    * verify downstream, small shuffle bytes). */
   private[graft] def containmentCandidatesBand(prefix: DataFrame,
       sh: DataFrame, band: Int, passes: Int): DataFrame = {
     require(0 <= band && band < passes,
       s"need 0 <= band < passes, got band=$band passes=$passes")
     def inBand(df: DataFrame): DataFrame =
       if (passes <= 1) df
-      else df.where(pmod(col("sk"), lit(passes.toLong)) === band.toLong)
-    inBand(prefix).repartition(col("sk"))
-      .join(inBand(sh.select(col("sk"), col("doc_id").as("b")))
-          .repartition(col("sk")),
-        Seq("sk"))
+      else df.where(pmod(col("h"), lit(passes.toLong)) === band.toLong)
+    inBand(prefix).repartition(col("h"))
+      .join(inBand(sh.select(col("h"), col("id").as("b")))
+          .repartition(col("h")),
+        Seq("h"))
       .where(col("a") =!= col("b"))
       .select(col("a"), col("b")).distinct()
   }
 
-  /** Exact verification of candidate (a, b) pairs against the per-doc
-    * sorted key arrays — ONE array_intersect per DISTINCT pair. Runs
-    * once over the distinct union of all band passes (not per band).
-    * `broadcastArr` (the staged/campaign setting) builds BOTH lookups
-    * as broadcast-hash joins: the candidate set can be ~1e9 id pairs at
-    * the fourth decade, and a sort-merge chain would re-shuffle those
-    * rows CARRYING the first join's array payload (~400 B/row — a
-    * ~700 GB exchange); broadcasting the doc→array table (n_docs ×
-    * ~0.5 KB — 2.5 GB at 5M docs, box-feasible) streams the pairs
-    * through both probes with ZERO pair shuffle. At cluster scale the
-    * same shape is a bucketed co-partitioned join on doc id — the
-    * pairs still never carry arrays across an exchange. */
-  private[graft] def containmentVerify(cand: DataFrame, arr: DataFrame,
-      threshold: Double, broadcastArr: Boolean = false): DataFrame = {
-    def side(n: String) = {
-      val t = arr.select(col("doc_id").as(n), col("ska").as(s"ska_$n"),
-        col("n_sh").as(s"n_$n"))
-      if (broadcastArr) broadcast(t) else t
-    }
-    cand
+  // ---- Stage 3: Verify ----
+
+  /** The doc→array join skeleton of both verifies: each candidate (a, b)
+    * probes `arr` (id, ska = sorted key array, n = its size) once per
+    * side, pairs failing the LENGTH prefilter `lengthOk` drop before any
+    * intersection, and `shared` = |A∩B| by array_intersect on the key
+    * arrays, once per pair. No join hint (the size rule above):
+    * broadcast, pair rows stream through map-side probes and never carry
+    * arrays across an exchange; shuffled, it is a co-partitioned join. */
+  private def verifyJoin(pairs: DataFrame, arr: DataFrame,
+      lengthOk: Column): DataFrame = {
+    def side(nm: String) = arr.select(col("id").as(nm),
+      col("ska").as(s"ska_$nm"), col("n").as(s"n_$nm"))
+    pairs
       .join(side("a"), Seq("a"))
       .join(side("b"), Seq("b"))
-      // LENGTH prefilter (round 12): C(A→B) = shared/n_a ≥ t forces
-      // n_b ≥ shared ≥ t·n_a, so pairs with n_b/n_a below the threshold
-      // (1e-9 slack for the IEEE division) cannot qualify and skip the
-      // array intersection entirely — a pure prune, result-identical
-      .where(col("n_b").cast("double") / col("n_a").cast("double") >=
-        lit(threshold) - lit(1e-9))
+      .where(lengthOk)
       .withColumn("shared",
         size(array_intersect(col("ska_a"), col("ska_b"))).cast("long"))
+  }
+
+  /** Exact Jaccard of candidate (a, b) pairs over the corpus's [[Keys]]:
+    * (a, b, jaccard) for the pairs at ≥ `threshold`. |A∪B| = n_a + n_b −
+    * |A∩B| without materializing a union array. LENGTH prefilter:
+    * J ≤ min(n_a,n_b)/max(n_a,n_b), so pairs below t on that ratio (1e-9
+    * slack for the IEEE division) are pruned without loss. */
+  def jaccardPairs(keys: Keys, pairs: DataFrame,
+      threshold: Double): DataFrame = {
+    // threshold > 0 is load-bearing: docs with EMPTY shingle sets have
+    // no keys, so their pairs drop out of the verify joins — correct for
+    // any positive threshold (their Jaccard is 0), wrong only at ≤ 0
+    require(threshold > 0.0, s"threshold must be > 0, got $threshold")
+    val arr = keys.df.groupBy(col("id"))
+      .agg(sort_array(collect_list(col("h"))).as("ska"),
+        count(lit(1)).as("n"))
+    verifyJoin(pairs, arr,
+        least(col("n_a"), col("n_b")).cast("double") /
+          greatest(col("n_a"), col("n_b")).cast("double") >=
+          lit(threshold) - lit(1e-9))
+      .withColumn("jaccard", col("shared").cast("double") /
+        (col("n_a") + col("n_b") - col("shared")).cast("double"))
+      .where(col("jaccard") >= threshold)
+      .select(col("a"), col("b"), col("jaccard"))
+  }
+
+  /** Exact containment of candidate (a, b) pairs against the staged
+    * per-doc arrays `arr` of [[containmentStaging]]: (a, b, shared, n_a,
+    * n_b, containment) at ≥ `threshold`. Runs once over the distinct
+    * union of all band passes (not per band). LENGTH prefilter:
+    * C(A→B) = shared/n_a ≥ t forces n_b ≥ shared ≥ t·n_a, so pairs with
+    * n_b/n_a below t (1e-9 slack) cannot qualify. */
+  private[graft] def containmentVerify(cand: DataFrame, arr: DataFrame,
+      threshold: Double): DataFrame =
+    verifyJoin(cand, arr, col("n_b").cast("double") /
+        col("n_a").cast("double") >= lit(threshold) - lit(1e-9))
       .withColumn("containment", col("shared") / col("n_a"))
       .where(col("containment") >= threshold)
       .select(col("a"), col("b"), col("shared"), col("n_a"), col("n_b"),
         col("containment"))
+
+  /** PREFIX-FILTERED containment pairs: exactly the rows of
+    * `containmentPairs(...).where(containment >= threshold)` over the
+    * same shingles, at a fraction of the join work — staging, the
+    * single-pass candidate join, one verify. */
+  def containmentPairsPrefix(keys: Keys, threshold: Double,
+      maxShingleDf: Long): DataFrame = {
+    val (sh, arr, prefix) = containmentStaging(keys, threshold, maxShingleDf)
+    containmentVerify(containmentCandidatesBand(prefix, sh, 0, 1), arr,
+      threshold)
   }
 
-  /** DERIVED band-pass count for the staged containment decomposition
-    * (VERDICT r11 #2 — size B the way [[graft.Parts]] sizes the shuffle
-    * width, instead of a hand-set knob): the scratch hog of a band pass
-    * is the candidate join's raw output, whose row count is EXACTLY the
-    * per-key join mass Σ_sk |prefix(sk)|·|sh(sk)| — computable from the
-    * staged tables with one key-only aggregation pass (two 8-byte-key
-    * count aggs + a key join; no array payloads, a tiny fraction of the
-    * staging cost). B = ⌈mass · bytesPerCandidate / budget⌉, floor 1 —
-    * B = 1 collapses to the single-pass plan, and each of B passes then
-    * exchanges ~mass/B candidates ≈ the budget.
+  /** DERIVED band-pass count B for the staged containment decomposition,
+    * sized the way [[graft.Parts]] sizes the shuffle width: a band pass's
+    * scratch hog is the candidate join's raw output, whose row count is
+    * EXACTLY the per-key join mass Σ_h |prefix(h)|·|sh(h)| — one key-only
+    * aggregation pass over the staged tables. B = ⌈mass ·
+    * bytesPerCandidate / budget⌉, floor 1 (the single-pass plan); each of
+    * B passes then exchanges ~mass/B candidates ≈ the budget.
     *
     * `bytesPerCandidate` is the measured end-to-end scratch cost of one
     * raw candidate through the banded join + distinct (join exchange +
@@ -783,43 +513,32 @@ object Dedup {
   def deriveContainmentPasses(prefix: DataFrame, sh: DataFrame,
       scratchBudgetBytes: Long, bytesPerCandidate: Double = 48.0): Int = {
     require(scratchBudgetBytes > 0, "scratchBudgetBytes must be > 0")
-    val mass = prefix.groupBy(col("sk")).agg(count(lit(1)).as("np"))
-      .join(sh.groupBy(col("sk")).agg(count(lit(1)).as("ns")), Seq("sk"))
+    val mass = prefix.groupBy(col("h")).agg(count(lit(1)).as("np"))
+      .join(sh.groupBy(col("h")).agg(count(lit(1)).as("ns")), Seq("h"))
       .agg(coalesce(sum(col("np") * col("ns")), lit(0L)).as("m"))
       .head().getLong(0)
     math.max(1, math.ceil(
       mass * bytesPerCandidate / scratchBudgetBytes.toDouble).toInt)
   }
 
-  /** [[containmentPairsPrefix]] executed as `passes` SEQUENTIAL
-    * band-passes, each materialized before the next starts — peak
-    * shuffle scratch is ~1/passes of the single pass, which is what
-    * lets the operator clear a corpus whose one-shot candidate shuffle
-    * exceeds the available spill volume (a 100 TB cluster sizes passes
-    * = ceil(projected shuffle / scratch budget); the fourth-decade
-    * campaign runs one JVM per pass for the same reason). Result is
-    * row-identical to the single pass: the union's per-pair duplicates
-    * (a pair can share prefix keys in several bands) collapse under
-    * `.distinct()` because verification is deterministic per pair.
-    * `passes = 0` DERIVES the pass count from the staged tables'
-    * candidate mass and `scratchBudgetBytes`
-    * ([[deriveContainmentPasses]]) — the engine-sized default since
-    * round 12. */
-  def containmentPairsPrefixStaged(docs: DataFrame, idCol: String,
-      textCol: String, k: Int = 3, threshold: Double = 0.5,
-      maxShingleDf: Long = 100, passes: Int = 0,
+  /** [[containmentPairsPrefix]] as `passes` SEQUENTIAL band passes, each
+    * written before the next starts: peak shuffle scratch is ~1/passes of
+    * the single pass, which clears a corpus whose one-shot candidate
+    * shuffle exceeds the spill volume (graft.ContainmentStaged runs one
+    * JVM per pass for the same reason). Row-identical to the single pass.
+    * `passes = 0` derives the count from `scratchBudgetBytes`
+    * ([[deriveContainmentPasses]]). */
+  def containmentPairsPrefixStaged(keys: Keys, threshold: Double,
+      maxShingleDf: Long, passes: Int = 0,
       scratchDir: Option[String] = None,
       scratchBudgetBytes: Long = 24L << 30): DataFrame = {
     require(passes >= 0, s"passes must be >= 0 (0 = derive), got $passes")
     val dir = scratchDir.getOrElse(
       graft.util.Scratch.dir("graft_containment_staged_"))
-    val (sh0, arr, prefix0) = containmentPrefixStaging(
-      docs, idCol, textCol, k, threshold, maxShingleDf)
-    // the derivation re-reads both frames — share their one computation
-    // with the band passes (the in-JVM twin of the campaign's parquet
-    // staging; the two-consumer rule)
-    val (sh, prefix) =
-      if (passes >= 1) (sh0, prefix0) else (sh0.stageShare(), prefix0.stageShare())
+    val (sh, arr, prefix0) = containmentStaging(keys, threshold, maxShingleDf)
+    // the derivation re-reads the prefix index — share its one
+    // computation with the band passes (`sh` is shared by the staging)
+    val prefix = if (passes >= 1) prefix0 else prefix0.stageShare()
     val nPasses =
       if (passes >= 1) passes
       else deriveContainmentPasses(prefix, sh, scratchBudgetBytes)
@@ -833,10 +552,10 @@ object Dedup {
     // verify ONCE over the distinct union: a pair can share prefix keys
     // in several bands, so dedup BEFORE the (expensive, deterministic)
     // array verification instead of re-verifying per band
-    val cand = docs.sparkSession.read
+    val cand = arr.sparkSession.read
       .parquet((0 until nPasses).map(b => s"$dir/cand_$b"): _*)
       .distinct()
-    containmentVerify(cand, arr, threshold, broadcastArr = true)
+    containmentVerify(cand, arr, threshold)
   }
 
   /** Per-document SimHash fingerprints plus the nearest candidate within

@@ -83,11 +83,11 @@ object Graph {
     val deg = e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // big side: stage once, reuse the src partitioning across iterations
     val outE = e0.join(deg, Seq("src")).stageCheckpoint()
-    // lineage cut + the node count in ONE job (Stage.checkpointCount)
-    val (nodes, n) = graft.util.Stage.checkpointCount(
+    // lineage cut + the node count in ONE job (Stage.checkpointWith)
+    val (nodes, n) = graft.util.Stage.checkpointWith(
       outE.select(col("src").as("node"))
         .union(outE.select(col("dst").as("node")))
-        .distinct())
+        .distinct())(_.count())
     val base = lit(jump) / lit(n.toDouble)
     // initial ranks: a constant projection over the staged nodes — no
     // checkpoint of its own (it would only re-materialize nodes + 8 bytes)

@@ -392,8 +392,7 @@ object DocQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val pairs = Dedup.nearDuplicatePairs(docs, "doc_id", "text",
-          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4,
-          broadcastArr = true)
+          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4)
         // symmetrize and keep each doc's best match
         val sym = pairs.select(col("a").as("doc_id"), col("b").as("other"), col("jaccard"))
           .union(pairs.select(col("b").as("doc_id"), col("a").as("other"), col("jaccard")))
@@ -432,8 +431,7 @@ object DocQueries {
       (s, d) => {
         val ver = Dedup.nearDuplicatePairsMd5(
           Tables.documents(s, d), "doc_id", "text",
-          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4,
-          broadcastArr = true)
+          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4)
         val sym = ver.select(col("a").as("doc_id"), col("b").as("other"), col("jaccard"))
           .union(ver.select(col("b").as("doc_id"), col("a").as("other"), col("jaccard")))
         // best_jaccard is a ratio of two exact ints — pure IEEE division,
@@ -600,25 +598,24 @@ object DocQueries {
     //      buckets / rare-shingle blocks — never corpus-quadratic);
     //      the metric joins run on pair keys, counts are exact ints,
     //      ratios pure IEEE division — bit-identical cross-engine.
-    //      Truth SHARES the LSH stage's (id, sh) frame (round 12; the
-    //      sampled row always did): shingling the corpus twice bought
-    //      no isolation — the shingle arrays are identical by
-    //      construction — and cost a full extra tokenize pass. ----
+    //      Truth blocks on the LSH stage's Keys: shingling the corpus
+    //      twice bought no isolation — the shingle arrays are identical
+    //      by construction — and cost a full extra tokenize pass. ----
     QueryDef("dedup_lsh_eval",
       (s, d) => {
         val docs = Tables.documents(s, d)
         // both frames feed two consumers (their count agg + the hit
         // join); without the shares each whole pipeline plans and runs
         // twice — at the 100x slice that doubled an ~40 s computation
-        val (staged, cand0) = Dedup.md5StagedAndCandidates(
+        val (keys, cand0) = Dedup.md5StagedAndCandidates(
           docs, "doc_id", "text", shingleK = 3, numHashes = 16, bands = 4)
         val cand = cand0.stageShare()
-        // truth shares the candidate side's staged (id, sh) frame (round
-        // 12): the corpus is tokenized+shingled ONCE — at 100 TB the
-        // standalone form's second tokenize pass is a full extra corpus
-        // scan, and the oracle shares its sh CTE the same way
-        val truth = Dedup.exactJaccardPairsBlockedStaged(
-          staged, threshold = 0.5, maxShingleDf = 20, broadcastArr = true)
+        // truth blocks on the candidate side's Keys: the corpus is
+        // tokenized+shingled ONCE — at 100 TB a second tokenize pass is a
+        // full extra corpus scan, and the oracle shares its sh CTE the
+        // same way
+        val truth = Dedup.blockedJaccardPairs(
+          keys, threshold = 0.5, maxShingleDf = 20)
           .select(col("a"), col("b")).stageShare()
         val nc = cand.agg(count(lit(1)).as("n_cand"))
         val nt = truth.agg(count(lit(1)).as("n_true"))
@@ -744,7 +741,7 @@ object DocQueries {
     QueryDef("dedup_lsh_eval_sampled",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val (staged, cand0) = Dedup.md5StagedAndCandidates(
+        val (keys, cand0) = Dedup.md5StagedAndCandidates(
           docs, "doc_id", "text", shingleK = 3, numHashes = 16, bands = 4)
         val cand = cand0.stageShare()
         val inCand = cand.select(col("a").as("doc_id"))
@@ -757,24 +754,16 @@ object DocQueries {
               when(col("dense"), lit(0.0625)).otherwise(lit(0.125)))
           .stageShare()
         val sampleIds = samp.where(col("in_s")).select(col("doc_id").as("id"))
-        // staged overload: unlike the full row (whose truth deliberately
-        // re-stages — lifetimes differ in production), the SAMPLED row is
-        // the at-scale recipe, so the corpus is shingled ONCE and the
-        // (id, sh) stage shared with the candidate side — the oracle's
-        // sh CTE is shared the same way
-        val truth = Dedup.exactJaccardPairsBlockedSampledStaged(
-          staged, sampleIds, threshold = 0.5, maxShingleDf = 20,
-          broadcastArr = true)
+        // the corpus is shingled and exploded ONCE: the sampled truth
+        // and the direct verify of sampled candidates read the candidate
+        // side's Keys — the oracle's sh CTE is shared the same way
+        val truth = Dedup.blockedJaccardPairs(
+          keys, threshold = 0.5, maxShingleDf = 20, Some(sampleIds))
           .select(col("a"), col("b")).stageShare()
         val hits = truth.join(cand, Seq("a", "b"))
         val candS = cand.join(sampleIds.select(col("id").as("a")), Seq("a"))
           .stageShare()
-        val sh = staged.select(col("id"), col("sh"))
-        val candTrue = candS
-          .join(sh.select(col("id").as("a"), col("sh").as("sh_a")), Seq("a"))
-          .join(sh.select(col("id").as("b"), col("sh").as("sh_b")), Seq("b"))
-          .where(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double") >= 0.5)
+        val candTrue = Dedup.jaccardPairs(keys, candS, threshold = 0.5)
           .select(col("a"), col("b"))
         val aStrat = samp.select(col("doc_id").as("a"), col("source"), col("dense"))
         def perStratum(pairs: org.apache.spark.sql.DataFrame, name: String) =
@@ -943,8 +932,7 @@ object DocQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val edges = Dedup.nearDuplicatePairsMd5(docs, "doc_id", "text",
-          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4,
-          broadcastArr = true)
+          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4)
           .select(col("a"), col("b"))
         val nodes = docs.select(col("doc_id").as("node"))
         val cc = graft.operators.Curation.connectedComponentsStar(edges, nodes)
@@ -1034,30 +1022,21 @@ object DocQueries {
     QueryDef("dedup_multi_signal",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        // ONE corpus shingling feeds BOTH signals (round 12): the
-        // Jaccard and containment passes run over identical word
-        // shingles, so the LSH front-end's staged (id, sh) frame is
-        // shared instead of re-tokenizing the corpus per signal
-        val (staged, cand) = Dedup.md5StagedAndCandidates(
+        // ONE corpus shingling and ONE explode+hash feed BOTH signals:
+        // the Jaccard verify and the containment staging read the LSH
+        // front-end's Keys (cached once) instead of re-tokenizing or
+        // re-exploding the corpus per signal — each is a full corpus
+        // pass at 100 TB
+        val (keys, cand) = Dedup.md5StagedAndCandidates(
           docs, "doc_id", "text", shingleK = 3, numHashes = 16, bands = 4)
-        // ONE corpus explode+hash feeds BOTH signals' verify/staging
-        // (round 13, one level below the round-12 (id, sh) share): the
-        // Jaccard verify arrays and the containment prefix staging both
-        // derive from the same exploded hashed-key table — a second
-        // explode is a full corpus pass at 100 TB
-        val exk = staged.select(col("id"), explode(col("sh")).as("s"))
-          .select(col("id"), xxhash64(col("s")).as("h"))
-          .stageShare()
-        val jac = Dedup.verifyNearDupCandidatesKeys(exk, cand,
-          threshold = 0.5, broadcastArr = true)
+        val jac = Dedup.jaccardPairs(keys, cand, threshold = 0.5)
           .select(col("a"), col("b"))
         // prefix-filtered containment: EXACTLY containmentPairs ≥ 0.9
         // (spec-proven equal) at a fraction of the pair-join work — the
         // Σdf² term was the whole super-linear cost of the ensemble at
         // the 10× slice (103 s → see NOTES)
-        val cont = Dedup.containmentPairsPrefixFromKeys(
-            exk.select(col("id").as("doc_id"), col("h").as("sk")),
-            threshold = 0.9, maxShingleDf = 100, broadcastArr = true)
+        val cont = Dedup.containmentPairsPrefix(
+            keys, threshold = 0.9, maxShingleDf = 100)
           .select(least(col("a"), col("b")).as("a"),
             greatest(col("a"), col("b")).as("b"))
         val edges = jac.unionByName(cont).distinct()
@@ -2036,13 +2015,13 @@ object DocQueries {
         // containmentPairs ≥ 0.5; the Σdf² pair explosion collapses to
         // Σ(df_prefix·df) + one array-verify per candidate (multi-signal
         // measured −84% at the 10× slice from this switch)
-        // broadcastArr: the campaign/staged setting (pair rows stream
-        // through map-side array probes, no pair exchange) — right for
-        // every corpus whose doc→array table fits a broadcast; beyond
-        // that the staged path's bucketed form applies (see
-        // containmentVerify)
-        Dedup.containmentPairsPrefix(Tables.documents(s, d), "doc_id", "text",
-            k = 3, threshold = 0.5, maxShingleDf = 100, broadcastArr = true)
+        // the verify lookups broadcast by the size rule (Dedup
+        // scaladoc): pair rows stream through map-side array probes while
+        // the doc→array table is under the broadcast threshold, and the
+        // same plan shuffles past it
+        Dedup.containmentPairsPrefix(
+            Dedup.keys(Tables.documents(s, d), "doc_id", "text", 3),
+            threshold = 0.5, maxShingleDf = 100)
           .orderBy(col("containment").desc, col("a"), col("b"))
           .limit(50)
           .select(col("a"), col("b"), col("shared"), col("n_a"), col("n_b"),

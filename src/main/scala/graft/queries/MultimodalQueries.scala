@@ -363,8 +363,7 @@ object MultimodalQueries {
         import graft.operators.{Curation, Dedup}
         val docs = Tables.documents(s, d)
         val jac = Dedup.nearDuplicatePairsMd5(docs, "doc_id", "text",
-          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4,
-          broadcastArr = true)
+          threshold = 0.5, shingleK = 3, numHashes = 16, bands = 4)
           .select(col("a"), col("b"))
         val img = Multimodal.phashPairs(
             Multimodal.perceptualHashBands(

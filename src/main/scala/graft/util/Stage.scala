@@ -55,43 +55,19 @@ object Stage {
     }
   }
 
-  /** [[apply]] fused with the caller's count: a LAZY checkpoint whose
-    * materializing action IS the count, so an iterative loop that
-    * truncates lineage AND needs the iterate's cardinality (the CC
-    * fixpoint check) pays ONE job per iteration instead of two — the
-    * eager checkpoint's materializing job and the follow-up count read
-    * the same blocks anyway. Both modes truncate identically: local
-    * checkpoints persist partitions as the count job computes them;
+  /** [[apply]] fused with the caller's first action: a LAZY checkpoint
+    * whose materializing job IS `action`'s own, so an iterative loop that
+    * truncates lineage AND needs something off the iterate — the CC
+    * fixpoint check's count (`checkpointWith(ds)(_.count())`), the IVF
+    * delta path's DISTINCT PROBED-CELL collect — pays ONE job per
+    * iteration instead of an eager-checkpoint job plus the action's job
+    * over the same blocks. Both modes truncate identically: local
+    * checkpoints persist partitions as the action's job computes them;
     * reliable checkpoints write after that job completes (Spark's
-    * standard lazy-checkpoint contract). Returns the truncated frame
-    * and its row count. */
-  def checkpointCount[T](ds: Dataset[T]): (Dataset[T], Long) = {
-    val spark = ds.sparkSession
-    spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(dir)
-        // cache across the (compute → checkpoint-write) pair, as in
-        // [[apply]]; the count is the computing job
-        ds.persist()
-        try { val c = ds.checkpoint(eager = false); (c, c.count()) }
-        finally ds.unpersist()
-      case None =>
-        val c = ds.localCheckpoint(eager = false); (c, c.count())
-    }
-  }
-
-  /** [[checkpointCount]] generalized to an arbitrary materializing
-    * action (round 13): a LAZY checkpoint whose first — and so
-    * checkpoint-persisting — job is `action`'s own, for callers that
-    * need something richer than a count off the truncated frame (the
-    * IVF delta path needs the DISTINCT PROBED-CELL list: the explode/
-    * distinct/collect computes every partition of `ds`, so the same
-    * job that answers the question persists the frame — one scheduler
-    * round-trip instead of an eager-checkpoint job plus the collect
-    * job over the same blocks). The action MUST compute every
-    * partition of `ds` (aggregations/collects over it do; a LIMIT
-    * would not) — same contract as [[checkpointCount]]'s count. */
+    * standard lazy-checkpoint contract). The action MUST compute every
+    * partition of `ds` (counts, aggregations and collects over it do; a
+    * LIMIT would not). Returns the truncated frame and the action's
+    * result. */
   def checkpointWith[T, A](ds: Dataset[T])(
       action: Dataset[T] => A): (Dataset[T], A) = {
     val spark = ds.sparkSession

@@ -283,8 +283,9 @@ class NewOpsR8Spec extends SparkSpec {
       spark.sparkContext.parallelize(docs.map(t => Row(t._1, t._2))),
       StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
-    val pairs = graft.operators.Dedup.exactJaccardPairsBlocked(
-      df, "doc_id", "text", shingleK = 3, threshold = 0.5, maxShingleDf = 20)
+    val pairs = graft.operators.Dedup.blockedJaccardPairs(
+      graft.operators.Dedup.keys(df, "doc_id", "text", 3),
+      threshold = 0.5, maxShingleDf = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     pairs.map(p => (p._1, p._2)).toSet shouldBe Set((1L, 2L))
     // sh(1)=6 shingles, sh(2)=7, intersect=6 => 6/7
@@ -296,9 +297,9 @@ class NewOpsR8Spec extends SparkSpec {
       spark.sparkContext.parallelize(hot.map(t => Row(t._1, t._2))),
       StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
-    graft.operators.Dedup.exactJaccardPairsBlocked(
-      hotDf, "doc_id", "text", shingleK = 3, threshold = 0.5,
-      maxShingleDf = 20).count() shouldBe 0L
+    graft.operators.Dedup.blockedJaccardPairs(
+      graft.operators.Dedup.keys(hotDf, "doc_id", "text", 3),
+      threshold = 0.5, maxShingleDf = 20).count() shouldBe 0L
   }
 
   test("ann_recall_eval: recall ties to the two rankings it compares") {
@@ -332,7 +333,8 @@ class NewOpsR8Spec extends SparkSpec {
           r.getAs[Long]("shared"), r.getAs[Long]("n_a"),
           r.getAs[Long]("n_b"), r.getAs[Double]("containment"))).toSet
       val pref = graft.operators.Dedup.containmentPairsPrefix(
-        docs, "doc_id", "text", k = 3, threshold = t, maxShingleDf = 100)
+        graft.operators.Dedup.keys(docs, "doc_id", "text", 3),
+        threshold = t, maxShingleDf = 100)
         .collect()
         .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
           r.getAs[Long]("shared"), r.getAs[Long]("n_a"),
@@ -361,7 +363,8 @@ class NewOpsR8Spec extends SparkSpec {
       StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
     val got = graft.operators.Dedup.containmentPairsPrefix(
-      df, "doc_id", "text", k = 3, threshold = 0.9, maxShingleDf = 100)
+      graft.operators.Dedup.keys(df, "doc_id", "text", 3),
+      threshold = 0.9, maxShingleDf = 100)
       .collect()
       .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
         r.getAs[Long]("shared"), r.getAs[Long]("n_a"),
@@ -470,9 +473,9 @@ class NewOpsR8Spec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val (_, cand) = graft.operators.Dedup.md5StagedAndCandidates(
       docs, "doc_id", "text", shingleK = 3, numHashes = 16, bands = 4)
-    val truth = graft.operators.Dedup.exactJaccardPairsBlocked(
-      docs, "doc_id", "text", shingleK = 3, threshold = 0.5,
-      maxShingleDf = 20).select(col("a"), col("b"))
+    val truth = graft.operators.Dedup.blockedJaccardPairs(
+      graft.operators.Dedup.keys(docs, "doc_id", "text", 3),
+      threshold = 0.5, maxShingleDf = 20).select(col("a"), col("b"))
     truth.count() shouldBe nTrue
     cand.count() shouldBe nCand
     cand.join(truth, Seq("a", "b")).count() shouldBe nHit

@@ -17,16 +17,16 @@ class NewOpsR9Spec extends SparkSpec {
     val sampled = docs
       .where(graft.operators.Curation.hashU(col("doc_id"), 91L) < 0.3)
       .select(col("doc_id").as("id"))
-    val full = graft.operators.Dedup.exactJaccardPairsBlocked(
-      docs, "doc_id", "text", shingleK = 3, threshold = 0.5,
-      maxShingleDf = 20)
+    val full = graft.operators.Dedup.blockedJaccardPairs(
+      graft.operators.Dedup.keys(docs, "doc_id", "text", 3),
+      threshold = 0.5, maxShingleDf = 20)
     val expected = full
       .join(sampled.select(col("id").as("a")), Seq("a"))
       .select(col("a"), col("b"), col("jaccard"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val got = graft.operators.Dedup.exactJaccardPairsBlockedSampled(
-      docs, "doc_id", "text", sampled, shingleK = 3, threshold = 0.5,
-      maxShingleDf = 20)
+    val got = graft.operators.Dedup.blockedJaccardPairs(
+      graft.operators.Dedup.keys(docs, "doc_id", "text", 3),
+      threshold = 0.5, maxShingleDf = 20, Some(sampled))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     got shouldBe expected
     expected.nonEmpty shouldBe true // fixture has organic dup groups

@@ -64,30 +64,6 @@ class DedupSpec extends SparkSpec {
     out(0L).getInt(3) shouldBe 0    // bit_count yields IntegerType
   }
 
-  test("incremental dedup finds new-vs-old and new-vs-new pairs without rescanning old docs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigs").toString + "/sigs"
-    val oldDocs = Seq(
-      (0L, base),
-      (1L, "completely different content about spark sql aggregation pipelines and shuffles galore"))
-      .toDF("doc_id", "text")
-    val newDocs = Seq(
-      (10L, base.replace("quick", "speedy")),           // near dup of OLD doc 0
-      (11L, base.replace("quick", "speedy") + " yes"),  // near dup of 10 (new-vs-new)
-      (12L, "entirely novel text mentioning embeddings vectors cosine and large language models"))
-      .toDF("doc_id", "text")
-
-    Dedup.writeSignatureTable(oldDocs, "doc_id", "text", dir)
-    val pairs = Dedup.incrementalNearDuplicatePairs(
-        newDocs, "doc_id", "text", dir, threshold = 0.4)
-      .select("a", "b").as[(Long, Long)].collect()
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toSet
-
-    pairs should contain((0L, 10L))   // new vs persisted
-    pairs should contain((10L, 11L))  // new vs new
-    pairs.exists { case (a, b) => Set(a, b).contains(12L) } shouldBe false
-    pairs.exists { case (a, b) => Set(a, b).contains(1L) } shouldBe false
-  }
-
   test("incremental md5 dedup ≡ batch pairs restricted to ≥1 new endpoint") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sigs-md5").toString + "/sigs"
     val oldDocs = Seq(

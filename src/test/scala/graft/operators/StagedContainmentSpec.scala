@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 class StagedContainmentSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf)
+  private def keys = Dedup.keys(docs, "doc_id", "text", 3)
 
   private def rows(df: DataFrame) = df.collect()
     .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
@@ -22,12 +23,11 @@ class StagedContainmentSpec extends SparkSpec {
   test("staged band-passes ∘ distinct == single-pass containmentPairsPrefix " +
       "(passes = 3 and 5)") {
     val single = rows(Dedup.containmentPairsPrefix(
-      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100))
+      keys, threshold = 0.5, maxShingleDf = 100))
     single should not be empty
     Seq(3, 5).foreach { p =>
       val staged = rows(Dedup.containmentPairsPrefixStaged(
-        docs, "doc_id", "text", k = 3, threshold = 0.5,
-        maxShingleDf = 100, passes = p))
+        keys, threshold = 0.5, maxShingleDf = 100, passes = p))
       withClue(s"passes=$p: ") { staged shouldBe single }
     }
   }
@@ -36,49 +36,44 @@ class StagedContainmentSpec extends SparkSpec {
       "frame == the standalone containmentPairsPrefix (round-12 " +
       "ensemble stage sharing)") {
     val single = rows(Dedup.containmentPairsPrefix(
-      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100))
+      keys, threshold = 0.5, maxShingleDf = 100))
     single should not be empty
-    val (staged, _) = Dedup.md5StagedAndCandidates(
+    val (lshKeys, _) = Dedup.md5StagedAndCandidates(
       docs, "doc_id", "text", shingleK = 3, numHashes = 16, bands = 4)
-    val shared = rows(Dedup.containmentPairsPrefixShared(
-      staged, threshold = 0.5, maxShingleDf = 100, broadcastArr = true))
+    val shared = rows(Dedup.containmentPairsPrefix(
+      lshKeys, threshold = 0.5, maxShingleDf = 100))
     shared shouldBe single
   }
 
   test("round-13 ensemble explode sharing: verifyNearDupCandidatesKeys + " +
       "containmentPairsPrefixFromKeys over ONE shared exploded hashed-key " +
       "table == the per-signal forms") {
-    import graft.util.Stage.StageOps
-    val (staged, cand) = Dedup.md5StagedAndCandidates(
+    val (lshKeys, cand) = Dedup.md5StagedAndCandidates(
       docs, "doc_id", "text", shingleK = 3, numHashes = 16, bands = 4)
-    val exk = staged.select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-      .stageShare()
     val jacPairs = (df: DataFrame) => df.collect()
       .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
         r.getAs[Double]("jaccard"))).toSet
-    val jacShared = jacPairs(Dedup.verifyNearDupCandidatesKeys(
-      exk, cand, threshold = 0.5, broadcastArr = true))
-    val jacOwn = jacPairs(Dedup.verifyNearDupCandidates(
-      staged, cand, threshold = 0.5))
+    val jacShared = jacPairs(Dedup.jaccardPairs(
+      lshKeys, cand, threshold = 0.5))
+    val jacOwn = jacPairs(Dedup.nearDuplicatePairsMd5(
+      docs, "doc_id", "text", threshold = 0.5))
     jacShared should not be empty
     jacShared shouldBe jacOwn
-    val contShared = rows(Dedup.containmentPairsPrefixFromKeys(
-      exk.select(col("id").as("doc_id"), col("h").as("sk")),
-      threshold = 0.5, maxShingleDf = 100, broadcastArr = true))
+    val contShared = rows(Dedup.containmentPairsPrefix(
+      lshKeys, threshold = 0.5, maxShingleDf = 100))
     val contOwn = rows(Dedup.containmentPairsPrefix(
-      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100))
+      keys, threshold = 0.5, maxShingleDf = 100))
     contShared should not be empty
     contShared shouldBe contOwn
   }
 
   test("derived pass count (passes = 0): B from the candidate mass and " +
       "scratch budget; derived-B results == hand-B == single-pass") {
-    val (sh, _, prefix) = Dedup.containmentPrefixStaging(
-      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100)
+    val (sh, _, prefix) = Dedup.containmentStaging(
+      keys, threshold = 0.5, maxShingleDf = 100)
     // exact mass: B scales as ceil(mass·bytes/budget) and floors at 1
-    val mass = prefix.groupBy(col("sk")).agg(count(lit(1)).as("np"))
-      .join(sh.groupBy(col("sk")).agg(count(lit(1)).as("ns")), Seq("sk"))
+    val mass = prefix.groupBy(col("h")).agg(count(lit(1)).as("np"))
+      .join(sh.groupBy(col("h")).agg(count(lit(1)).as("ns")), Seq("h"))
       .agg(sum(col("np") * col("ns"))).head().getLong(0)
     mass should be > 0L
     // a roomy budget collapses to the single-pass plan
@@ -89,10 +84,10 @@ class StagedContainmentSpec extends SparkSpec {
     b3 should (be >= 3 and be <= 4) // ceil rounding
     // and the DERIVED plan is row-identical to hand-set and single-pass
     val single = rows(Dedup.containmentPairsPrefix(
-      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100))
+      keys, threshold = 0.5, maxShingleDf = 100))
     val derived = rows(Dedup.containmentPairsPrefixStaged(
-      docs, "doc_id", "text", k = 3, threshold = 0.5,
-      maxShingleDf = 100, passes = 0, scratchBudgetBytes = third))
+      keys, threshold = 0.5, maxShingleDf = 100, passes = 0,
+      scratchBudgetBytes = third))
     derived shouldBe single
   }
 
@@ -100,11 +95,12 @@ class StagedContainmentSpec extends SparkSpec {
       "some band; bands genuinely split the candidate work") {
     val passes = 4
     val single = rows(Dedup.containmentPairsPrefix(
-      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100))
+      keys, threshold = 0.5, maxShingleDf = 100))
+    val (sh, arr, prefix) = Dedup.containmentStaging(
+      keys, threshold = 0.5, maxShingleDf = 100)
     val perBand = (0 until passes).map { b =>
-      rows(Dedup.containmentPairsPrefixBand(
-        docs, "doc_id", "text", k = 3, threshold = 0.5,
-        maxShingleDf = 100, band = b, passes = passes))
+      rows(Dedup.containmentVerify(
+        Dedup.containmentCandidatesBand(prefix, sh, b, passes), arr, 0.5))
     }
     perBand.foreach(_ should not be empty) // the split is real, 4-way
     perBand.foreach { band => band.subsetOf(single) shouldBe true }
@@ -124,8 +120,8 @@ class StagedContainmentSpec extends SparkSpec {
 
   test("a band index outside [0, passes) is rejected, not written as an " +
       "empty or unfiltered candidate set") {
-    val (sh, _, prefix) = Dedup.containmentPrefixStaging(
-      docs, "doc_id", "text", k = 3, threshold = 0.5, maxShingleDf = 100)
+    val (sh, _, prefix) = Dedup.containmentStaging(
+      keys, threshold = 0.5, maxShingleDf = 100)
     Seq((4, 4), (-1, 4), (1, 1), (0, 0)).foreach { case (band, passes) =>
       withClue(s"band=$band passes=$passes: ") {
         val e = intercept[IllegalArgumentException] {
