@@ -160,7 +160,7 @@ object Bench {
     if (line.length > 1850)
       System.err.println(
         s"[bench] WARNING: JSON line ${line.length} chars > 1850 budget — " +
-          "rotate queries out of SparkEntry.benchRotatedIn/Out before the driver run")
+          "clear the bench flag on some QueryDefs before the driver run")
     println(line)
     spark.stop()
     if (failed.nonEmpty) System.err.println(s"[bench] ${failed.size} queries failed")

@@ -14,8 +14,8 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * single-shot number the round's bench drew.
   *
   * Each query's record also carries its PHYSICAL work over the final
-  * rep — input bytes/records read, shuffle bytes/records written and
-  * read, spill, peak task memory and task count — summed by a
+  * rep — input records read, shuffle bytes/records written and read,
+  * spill, peak task memory and task count — summed by a
   * SparkListener over task metrics. Wall-clock medians on a shared host
   * wobble with neighbor load; these totals are a property of the plan
   * and the data, so "shuffle records grow 10× for 10× input" holds
@@ -44,7 +44,6 @@ object BenchReps {
 
   /** Task-metric totals of every task that ends while attached. */
   private final class TaskTotals extends SparkListener {
-    val inputBytes = new LongAdder
     val inputRecords = new LongAdder
     val shuffleWriteBytes = new LongAdder
     val shuffleWriteRecords = new LongAdder
@@ -58,7 +57,6 @@ object BenchReps {
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
       if (m != null) {
-        inputBytes.add(m.inputMetrics.bytesRead)
         inputRecords.add(m.inputMetrics.recordsRead)
         shuffleWriteBytes.add(m.shuffleWriteMetrics.bytesWritten)
         shuffleWriteRecords.add(m.shuffleWriteMetrics.recordsWritten)
@@ -72,7 +70,7 @@ object BenchReps {
     }
 
     def snapshot(): Seq[(String, Long)] = Seq(
-      "disk_spill_bytes" -> diskSpill.sum, "input_bytes" -> inputBytes.sum,
+      "disk_spill_bytes" -> diskSpill.sum,
       "input_records" -> inputRecords.sum, "mem_spill_bytes" -> memSpill.sum,
       "peak_task_mem_bytes" -> peakTaskMem.get,
       "shuffle_read_bytes" -> shuffleReadBytes.sum,

@@ -33,69 +33,9 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** Bench rotation (started round 5, VERDICT r4 #5; tightened round 8,
-    * VERDICT r7 #2/#7). The driver records only the bench JSON line's
-    * tail (2000 chars); round 7's 77-query set overflowed it and nulled
-    * the round's bench record, so the round-8 set targets ≤ ~1850 emitted
-    * chars (Bench warns on stderr past that). Rotating per round gives
-    * every catalog query a recorded sf0.1 wall-time within a few rounds.
-    * Queries rotated OUT have ≥3 rounds of stable flat history in
-    * BENCH_r1–r7/REPS (cheap fixed shapes — single hash-agg, one window,
-    * scalar-function coverage); rotated IN are the scale-bearing
-    * operators plus the round-7-session-2 additions that had no recorded
-    * sf0.1 number yet. History stays in BASELINE.md; flags in the
-    * QueryDefs are the steady-state membership, these sets are this
-    * round's delta. */
-  private val benchRotatedOut: Set[String] = Set(
-    "array_funcs", "date_funcs", "json_funcs", "map_funcs", "string_funcs",
-    "agg_string_concat", "agg_minmax_by", "set_union", "sort_topk",
-    "events_lag_lead", "events_latest_per_user", "window_running_sum",
-    "window_range_frame", "agg_distinct", "agg_cube", "agg_grouping_sets",
-    "events_pivot_type_counts", "agg_percentiles", "upsert_snapshot",
-    "subquery_decorrelated",
-    // round-8 out-rotation (line-length budget + r7-s2 in-rotation):
-    // all flat since r5 with REPS history
-    "gamma_fixed", "loglik_fixed", "stats_mean_var",
-    "events_tumbling_window", "events_sliding_window",
-    "window_distribution_funcs", "window_rank_topn",
-    "text_token_stats", "text_langid", "text_fingerprint",
-    "sample_stratified", "scrub_pii",
-    "q4_priority_late_ship", "q6_revenue_forecast", "q7_volume_shipping",
-    // second r8 trim: the sf0.1 line measured 1805 chars with the two
-    // new heavy ops in — three flat joins (r5–r7 history, 0.3–0.5 s
-    // steady) restore ~100 chars of margin
-    "join_sort_merge_large", "join_anti_not_exists", "join_semi_exists",
-    // round-12 out-rotation (VERDICT r11 #5): four flat 0.3–0.4 s rows
-    // with identical r9–r11 history make room for the r11/r12 rows
-    // that need recorded sf0.1 gates
-    "dedup_embedding_exact", "em_suffstats_udaf", "embed_quantize",
-    "multimodal_frame_sample")
-  private val benchRotatedIn: Set[String] = Set(
-    "dedup_clusters_star", "dedup_pipeline", "dedup_semantic",
-    "dedup_span_suffix", "graph_pagerank", "embed_kmeans", "embed_pca_power",
-    "ann_pq_topk", "text_bm25_topk", "text_inverted_index", "tokens_bpe_train",
-    // round-9 out-rotation (VERDICT r8 #3): sketch_cms_heavy_hitters,
-    // stats_ks_drift and events_funnel left this set — flat r5–r8
-    // history (0.3–0.7 s steady) makes room for the r8 heavy dedup rows
-    // that were the round-8 line-budget casualty
-    "q9_product_type_profit", "q21_suppliers_kept_waiting",
-    // round-8 in-rotation: the r7-s2 operators (VERDICT r7 #7)
-    "curation_source_overlap", "events_ohlc_bars",
-    "profile_weighted_quantiles", "profile_weighted_quantiles_by_lang",
-    "stats_js_divergence",
-    // round-8 new scale-bearing operators
-    "ann_knn_join", "embed_mutual_knn_clusters",
-    // round-9 in-rotation (VERDICT r8 #3): the r8 heavy dedup rows with
-    // no recorded sf0.1 sweep number yet
-    "dedup_multi_signal", "dedup_lsh_eval", "dedup_containment",
-    // round-12 in-rotation (VERDICT r11 #5): the r11 catalog rows with
-    // oracle rows but no bench history (cross-modal is a heavy ensemble
-    // — it needs a gate) plus the r12 index-rebuild lifecycle row
-    "dedup_cross_modal", "stream_ann_ingest", "ann_index_rebuild")
-
-  /** Headline benchmark subset (graft.Bench). */
+  /** Headline benchmark subset (graft.Bench): the queries whose `bench`
+    * flag is set. The set is sized so Bench's JSON line fits the driver's
+    * 2000-char output tail; past membership history is in BASELINE.md. */
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.filter(q =>
-        (q.bench && !benchRotatedOut(q.name)) || benchRotatedIn(q.name))
-      .map(q => q.name -> q.fn).toMap
+    registry.filter(_.bench).map(q => q.name -> q.fn).toMap
 }

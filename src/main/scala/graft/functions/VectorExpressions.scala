@@ -468,8 +468,6 @@ object VectorExpressions {
     GraftBridge.column(TopCosByCentroids(GraftBridge.expression(vec), centroids))
   def cosineSimFD(a: Column, b: Column): Column =
     GraftBridge.column(CosineSimFD(GraftBridge.expression(a), GraftBridge.expression(b)))
-  def dotProduct(a: Column, b: Column): Column =
-    GraftBridge.column(DotProduct(GraftBridge.expression(a), GraftBridge.expression(b)))
   def l2Norm(a: Column): Column =
     GraftBridge.column(L2Norm(GraftBridge.expression(a)))
   def simhash(tokens: Column): Column =

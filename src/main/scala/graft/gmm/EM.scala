@@ -1,7 +1,7 @@
 package graft.gmm
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -71,20 +71,8 @@ object EM {
       variant: Variant = Textbook,
       init: Init = SpreadInit): FitResult = {
 
-    val x = col(xCol).cast("double")
-    val data = df.select(x.as("x")).where(col("x").isNotNull)
-    // The projected column as one primitive array per partition, cached
-    // across iterations (the reference persists the raw RDD, Main.scala:41).
-    val points = data.queryExecution.toRdd.mapPartitions { rows =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofDouble
-      rows.foreach(r => b += r.getDouble(0))
-      Iterator.single(b.result())
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // The job that fills the cache also computes the dataset moments
-      // (the reference does count/mean/variance as three jobs,
-      // Main.scala:61-64).
-      val m0 = points.map(Moments.of).collect().foldLeft(Moments.Empty)(_ merge _)
+    val data = column(df, xCol)
+    withPoints(data) { (points, m0) =>
       val n = m0.n
       require(n > 0, s"EM.fit: no non-null rows in $xCol")
       val dsVar = math.max(m0.m2 / n, VarFloor)
@@ -102,7 +90,26 @@ object EM {
       }
       val model = GmmModel(Array.fill(k)(1.0 / k), means0, Array.fill(k)(dsVar))
       fitLoop(points, n, model, maxIter, tol, variant)
-    } finally points.unpersist(blocking = true)
+    }
+  }
+
+  /** The fitted column: `cast(xCol as double)` as `x`, nulls dropped. */
+  private def column(df: DataFrame, xCol: String): DataFrame =
+    df.select(col(xCol).cast("double").as("x")).where(col("x").isNotNull)
+
+  /** Runs `body` on `data`'s column as one primitive array per partition,
+    * persisted at MEMORY_AND_DISK until `body` returns (the reference
+    * persists the raw RDD, Main.scala:41), and on the column's moments.
+    * The job that fills the cache also computes the moments (the
+    * reference does count/mean/variance as three jobs, Main.scala:61-64). */
+  private def withPoints[T](data: DataFrame)(body: (RDD[Array[Double]], Moments) => T): T = {
+    val points = data.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofDouble
+      rows.foreach(r => b += r.getDouble(0))
+      Iterator.single(b.result())
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(points, points.map(Moments.of).collect().foldLeft(Moments.Empty)(_ merge _))
+    finally points.unpersist(blocking = true)
   }
 
   /** Count, mean and sum of squared deviations of a set of points. */
@@ -203,10 +210,7 @@ object EM {
   /** Runs ONE job for an EM iteration: [[partitionSums]] per partition,
     * added up in partition order. */
   private def iterationSums(points: RDD[Array[Double]], m: GmmModel, variant: Variant): Array[Double] = {
-    // The SQL form divided by these; under ANSI a zero divisor failed the
-    // query instead of yielding a number.
-    m.variances.foreach(s2 =>
-      if (s2 == 0.0) throw new ArithmeticException("EM.fit: a component variance is 0"))
+    requireNonZeroVariances(m)
     val parts = points.map(xs => partitionSums(xs, m, variant)).collect()
     val total = new Array[Double](3 * m.k + 3)
     parts.foreach { p =>
@@ -215,6 +219,12 @@ object EM {
     }
     total
   }
+
+  /** The SQL forms divided by the variances; under ANSI a zero divisor
+    * failed the query instead of yielding a number. */
+  private def requireNonZeroVariances(m: GmmModel): Unit =
+    m.variances.foreach(s2 =>
+      if (s2 == 0.0) throw new ArithmeticException("EM: a component variance is 0"))
 
   /** The log-likelihood of iteration sums: -inf when no point added a
     * log term, as the SQL `sum` of no values was NULL. */
@@ -281,17 +291,20 @@ object EM {
     FitResult(model, lnp, iters)
   }
 
-  /** Fixed-point EM: one SQL aggregation per iteration computing the
-    * same sufficient statistics as [[fit]], but every per-point
-    * contribution is
-    * integerized to `scale` decimals BEFORE the sum (exact BIGINT
-    * accumulation, see [[graft.util.Det]]), and every parameter update is
-    * a ratio/product of those exact integers — so the ENTIRE multi-
-    * iteration fit is bit-identical across engines and partitionings,
-    * which makes the iterative algorithm DuckDB-oracle-hashable
-    * (chained-CTE oracle: one pair of CTEs per iteration). Runs a fixed
-    * `iters` iterations from explicit `init` parameters (data-derived
-    * init would reintroduce order-dependent float moments).
+  /** Fixed-point EM: the same sufficient statistics as [[fit]], but every
+    * per-point contribution is integerized to `scale` decimals BEFORE the
+    * sum (exact Long accumulation, see [[graft.util.Det]]), and every
+    * parameter update is a ratio/product of those exact integers — so the
+    * ENTIRE multi-iteration fit is bit-identical across engines and
+    * partitionings, which makes the iterative algorithm DuckDB-oracle-
+    * hashable (chained-CTE oracle: one pair of CTEs per iteration). Runs a
+    * fixed `iters` iterations from explicit `init` parameters (data-
+    * derived init would reintroduce order-dependent float moments).
+    *
+    * It runs on [[fit]]'s cached column in 1 + `iters` jobs: each
+    * iteration folds every partition's points through
+    * [[GmmSuffStatsAggregator.reduce]] and adds the Long buffers in
+    * partition order. A sum that overflows Long fails the fit.
     *
     * The quantization perturbs each gamma by ≤ 5e-7 — far below the
     * statistical noise of the fit — while buying exact reproducibility;
@@ -300,24 +313,22 @@ object EM {
       df: DataFrame, xCol: String, init: GmmModel,
       iters: Int, scale: Int = 6): GmmModel = {
     val f = math.pow(10.0, scale.toDouble)
-    val data = df.select(col(xCol).cast("double").as("x"))
-      .where(col("x").isNotNull)
-    data.cache()
-    try {
-      val nD = data.count().toDouble
+    withPoints(column(df, xCol)) { (points, m0) =>
+      val nD = m0.n.toDouble
       var model = init
       var t = 0
       while (t < iters) {
-        val row = fixedIterationAggregate(data, model, scale)
+        val s = fixedIterationSums(points, model, scale)
         val k = model.k
         val weights = new Array[Double](k)
         val means = new Array[Double](k)
         val vars = new Array[Double](k)
         var j = 0
         while (j < k) {
-          val a = row.getLong(3 * j)
-          val b = row.getLong(3 * j + 1)
-          val c = row.getLong(3 * j + 2)
+          // the aggregator's layout: [A_0..A_{k-1} | B_0.. | C_0.. | D | loglik]
+          val a = s(j)
+          val b = s(k + j)
+          val c = s(2 * k + j)
           if (a > 0) {
             weights(j) = a.toDouble / f / nD
             means(j) = b.toDouble / a.toDouble
@@ -334,41 +345,20 @@ object EM {
         t += 1
       }
       model
-    } finally data.unpersist()
+    }
   }
 
-  /** One fixed-point iteration: Row of 3k longs
-    * [toFixed-sums of gamma_j, gamma_j*x, gamma_j*x^2].
-    *
-    * Model parameters are NOT literals: they ride a broadcast 1-row
-    * LocalRelation cross-joined onto the data. Literal params would embed
-    * the values in the generated Java source, recompiling the aggregate
-    * stage every iteration (~0.5 s/iteration of Janino); as input columns
-    * the generated source is identical across iterations and the codegen
-    * cache serves it after the first. */
-  private def fixedIterationAggregate(data: DataFrame, m: GmmModel, scale: Int): Row = {
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    import graft.util.Det
-    val x = col("x")
-    val k = m.k
-    val schema = StructType((0 until k).flatMap(j => Seq(
-      StructField(s"w$j", DoubleType, nullable = false),
-      StructField(s"mu$j", DoubleType, nullable = false),
-      StructField(s"s2$j", DoubleType, nullable = false))))
-    val paramsRow = Row.fromSeq(
-      (0 until k).flatMap(j => Seq(m.weights(j), m.means(j), m.variances(j))))
-    val params = data.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(paramsRow), schema)
-    val joined = data.crossJoin(broadcast(params))
-    val weighted = (0 until k).map(j =>
-      col(s"w$j") * Gaussian.pdf(x, col(s"mu$j"), col(s"s2$j")))
-    val mix = weighted.reduce(_ + _)
-    val gammas = weighted.map(wj =>
-      when(mix > lit(0.0), wj / mix).otherwise(lit(1.0 / k)))
-    val aggs: Seq[Column] = gammas.flatMap(g => Seq(
-      sum(Det.toFixed(g, scale)),
-      sum(Det.toFixed(g * x, scale)),
-      sum(Det.toFixed(g * x * x, scale))))
-    joined.agg(aggs.head, aggs.tail: _*).head()
+  /** Runs ONE job for a fixed-point iteration: each partition's points
+    * folded through [[GmmSuffStatsAggregator.reduce]], the buffers merged
+    * in partition order. */
+  private def fixedIterationSums(points: RDD[Array[Double]], m: GmmModel, scale: Int): Array[Long] = {
+    requireNonZeroVariances(m)
+    val agg = new GmmSuffStatsAggregator(m.weights, m.means, m.variances, scale)
+    points.map { xs =>
+      val buf = agg.zero
+      var i = 0
+      while (i < xs.length) { agg.reduce(buf, xs(i)); i += 1 }
+      buf
+    }.collect().foldLeft(agg.zero)(agg.merge)
   }
 }

@@ -13,8 +13,12 @@ import org.apache.spark.sql.functions._
   *    density — see Krosent/ema-bigdata `Main.scala:106-107` where, by
   *    operator precedence, `1 / covariance * Math.sqrt(2 * Math.PI)`
   *    MULTIPLIES by sqrt(2*pi) and `pow(x-mean,2) / 2 * variance`
-  *    MULTIPLIES the exponent by the variance. `EM.RefCompat`'s kernel
-  *    computes the same density on primitive arrays; this is its SQL form.
+  *    MULTIPLIES the exponent by the variance.
+  *
+  * The EM fits do not plan these per iteration: `EM.partitionSums` and
+  * `GmmSuffStatsAggregator.reduce` compute the same densities on primitive
+  * arrays, bit for bit (EMKernelSpec). These are the SQL forms the
+  * fixed-model catalog queries use and those specs compare against.
   */
 object Gaussian {
   /** Textbook N(x | mean, variance). Constants folded driver-side. */
@@ -28,16 +32,6 @@ object Gaussian {
   def refPdf(x: Column, mean: Double, variance: Double): Column =
     lit(1.0 / math.sqrt(variance) * math.sqrt(2.0 * math.Pi)) *
       exp(-(pow(x - lit(mean), 2) / lit(2.0)) * lit(variance))
-
-  /** Column-parameter overload — identical operations in identical order
-    * (bit-compatible with the scalar form), for plans whose generated
-    * code must not change when the model parameters do
-    * (`EM.fitFixedPoint`: params ride a broadcast relation, so the
-    * per-iteration aggregate hits the codegen cache instead of
-    * recompiling). */
-  def pdf(x: Column, mean: Column, variance: Column): Column =
-    exp(-pow(x - mean, 2) / (lit(2.0) * variance)) /
-      sqrt(lit(2.0 * math.Pi) * variance)
 
   /** Weighted mixture density sum_k w_k * pdf_k(x) for a model. */
   def mixture(x: Column, m: GmmModel): Column =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
+import graft.operators.CovSuffStatsAggregator
+
 /** Output of one sufficient-statistics pass under a fixed model. */
 final case class GmmSuffStats(
     sumGamma: Array[Double],
@@ -12,23 +14,21 @@ final case class GmmSuffStats(
     sumMix: Double,
     loglik: Double)
 
-/** Typed single-pass EM sufficient-statistics aggregator — the
-  * `Aggregator`/`udaf` form of the pure-expression aggregate in
-  * [[EM]] (SURVEY.md §7.5 lists it as the alternative when expression
-  * width becomes a problem at large K).
+/** Fixed-point EM sufficient statistics: the per-point routine of
+  * [[EM.fitFixedPoint]], and its `Aggregator`/`udaf` form (SURVEY.md §7.5).
   *
-  * Accumulates FIXED-POINT integer units: each per-row term is rounded
-  * half-up (away from zero, matching Spark `round` and DuckDB `ROUND`)
-  * to `scale` decimals and added as a Long. Integer addition is exact and
-  * commutative, so the result is independent of partition count and merge
-  * order — reproducible across runs, cluster layouts, and engines, which
-  * no double accumulation guarantees (see graft.util.Det).
+  * Each per-point term is rounded half-up to `scale` decimals by
+  * [[CovSuffStatsAggregator.fixHalfUp]] (the rounding behind `Det.toFixed`)
+  * and added as a Long, failing on overflow as ANSI `sum(bigint)` does.
+  * Integer sums are exact and commutative, so the result does not depend
+  * on partitioning or merge order (see graft.util.Det).
   *
-  * Per-row arithmetic mirrors [[Gaussian.pdf]] / the DuckDB oracle SQL
-  * operation-for-operation (Math.pow square, precomputed 2*sigma^2 and
-  * sqrt(2*pi*sigma^2) constants, left-to-right mixture sum, -Infinity
-  * log guard from the reference's Main.scala:112) so all three paths are
-  * bit-identical before rounding.
+  * The per-point arithmetic is what Spark generates for
+  * `Det.toFixed(w_j * Gaussian.pdf(x, mu_j, s2_j) / mix, scale)` and its
+  * `* x`, `* x * x` forms, operation for operation (EMKernelSpec pins it):
+  * `StrictMath.exp`/`pow`/`log`, `Math.sqrt`, the same association order,
+  * and Spark's `mix > 0`, which holds for NaN. The log term skips a
+  * `-Infinity` log (the reference's guard, Main.scala:112).
   */
 final class GmmSuffStatsAggregator(
     weights: Array[Double], means: Array[Double], variances: Array[Double],
@@ -38,10 +38,11 @@ final class GmmSuffStatsAggregator(
   private val k = weights.length
   private val f = math.pow(10.0, scale.toDouble)
   private val twoVar = variances.map(2.0 * _)
-  private val sqrtNorm = variances.map(v => math.sqrt(2.0 * math.Pi * v))
+  private val sqrtNorm = variances.map(v => Math.sqrt(2.0 * math.Pi * v))
+  private val invK = 1.0 / k
 
-  private def halfUp(v: Double): Long =
-    (if (v >= 0) math.floor(v + 0.5) else math.ceil(v - 0.5)).toLong
+  @inline private def add(buf: Array[Long], i: Int, v: Double): Unit =
+    buf(i) = Math.addExact(buf(i), CovSuffStatsAggregator.fixHalfUp(v))
 
   // buffer layout: [A_0..A_{k-1} | B_0.. | C_0.. | D | loglik]
   override def zero: Array[Long] = new Array[Long](3 * k + 2)
@@ -52,27 +53,28 @@ final class GmmSuffStatsAggregator(
     var j = 0
     while (j < k) {
       wp(j) = weights(j) *
-        (math.exp(-math.pow(x - means(j), 2) / twoVar(j)) / sqrtNorm(j))
+        (StrictMath.exp(-StrictMath.pow(x - means(j), 2.0) / twoVar(j)) / sqrtNorm(j))
       mix += wp(j)
       j += 1
     }
+    val normalize = mix > 0.0 || mix != mix
     j = 0
     while (j < k) {
-      val g = if (mix > 0) wp(j) / mix else 1.0 / k
-      buf(j) += halfUp(g * f)
-      buf(k + j) += halfUp(g * x * f)
-      buf(2 * k + j) += halfUp(g * x * x * f)
+      val g = if (normalize) wp(j) / mix else invK
+      add(buf, j, g * f)
+      add(buf, k + j, g * x * f)
+      add(buf, 2 * k + j, g * x * x * f)
       j += 1
     }
-    buf(3 * k) += halfUp(mix * f)
-    val ll = math.log(mix)
-    if (ll != Double.NegativeInfinity) buf(3 * k + 1) += halfUp(ll * f)
+    add(buf, 3 * k, mix * f)
+    val ll = StrictMath.log(mix)
+    if (ll != Double.NegativeInfinity) add(buf, 3 * k + 1, ll * f)
     buf
   }
 
   override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
+    while (i < a.length) { a(i) = Math.addExact(a(i), b(i)); i += 1 }
     a
   }
 

@@ -18,11 +18,11 @@ import org.apache.spark.sql.expressions.Aggregator
   * that Spark's `round(x·10^k, 0)` and DuckDB's `ROUND(x·10^k, 0)` apply,
   * then summed exactly in Long — so the result is bit-identical to the
   * exploded formulation and to the SQL oracle, independent of partition
-  * count and merge order. NOTE the deliberate difference from
-  * GmmSuffStatsAggregator's floor(v+0.5) fast path: that diverges from
+  * count and merge order. A bare floor(v+0.5) would diverge from
   * decimal HALF_UP for doubles one ulp under a half boundary (e.g.
   * 0.49999999999999994 + 0.5 rounds to 1.0 in IEEE), which a covariance
-  * product can plausibly hit.
+  * product can plausibly hit; [[CovSuffStatsAggregator.fixHalfUp]] guards
+  * that boundary.
   *
   * Ragged input is handled exactly like the explode formulation: a row
   * contributes to pair (i,j) iff its vector has length > j, and the

@@ -72,25 +72,14 @@ object TextAnalysis {
   }
 
   /** Tiny public stopword profiles for the n-gram/stopword langid
-    * heuristic. Scores = fraction of the doc's DISTINCT tokens hitting
-    * each profile; prediction = argmax (ties broken by language code,
-    * deterministic). */
+    * heuristic. Prediction = the profile hit by most of the doc's DISTINCT
+    * tokens (ties broken by language code, deterministic). */
   val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "a", "in", "is", "that", "it", "was", "for", "on"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu", "den", "von", "sich"),
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans", "que", "pour", "qui", "des"),
     "es" -> Seq("el", "los", "de", "que", "y", "en", "un", "es", "por", "con", "una", "para"),
     "zh" -> Seq("的", "是", "不", "了", "在", "人", "有", "我", "他", "这", "个", "们"))
-
-  /** Per-language stopword-hit scores as a struct of doubles. */
-  def langScores(text: Column): Column = {
-    val toks = array_distinct(tokens(lower(text)))
-    val fields = stopwords.toSeq.sortBy(_._1).map { case (langCode, words) =>
-      (size(array_intersect(toks, array(words.map(lit): _*))).cast("double") /
-        greatest(size(toks).cast("double"), lit(1.0))).as(s"score_$langCode")
-    }
-    struct(fields: _*)
-  }
 
   /** Predicted language code = argmax score (deterministic tie-break on
     * the language code via struct ordering). */

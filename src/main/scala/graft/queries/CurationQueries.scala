@@ -264,7 +264,8 @@ object CurationQueries {
           |WHERE u < CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25
           |  WHEN 'fr' THEN 0.25 WHEN 'es' THEN 0.1 WHEN 'zh' THEN 0.1
           |  ELSE 0.0 END
-          |ORDER BY doc_id""".stripMargin)),
+          |ORDER BY doc_id""".stripMargin),
+      bench = false),
 
     // ---- domain-mixture resampling: reshape corpus toward target domain
     // shares (training-data mixing). src5's rate saturates at 1.0 (least
@@ -493,7 +494,8 @@ object CurationQueries {
              |  len(regexp_extract_all(t, 'https?://[^\s]+')) AS n_urls,
              |  len(regexp_extract_all(t, '\+?[0-9]{1,2} [0-9]{3}-[0-9]{4}')) AS n_phones
              |FROM a ORDER BY doc_id""".stripMargin
-      }),
+      },
+      bench = false),
 
     // ---- near-dup cluster resolution: connected components over the
     // exact embedding near-dup pairs (vec_id < 300, cos >= 0.4). The
@@ -610,8 +612,7 @@ object CurationQueries {
            |SELECT node AS vec_id, cluster_id,
            |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
            |  node = cluster_id AS is_representative
-           |FROM lab ORDER BY vec_id""".stripMargin),
-      bench = false),
+           |FROM lab ORDER BY vec_id""".stripMargin)),
 
     // ---- cluster resolution with a QUALITY tie-break: keep the
     //      highest-quality member of each near-dup cluster (quality =
@@ -763,8 +764,7 @@ object CurationQueries {
           |  GROUP BY q)
           |SELECT p.q, p.value, c.cw AS cum_weight, tot.tw AS total_weight
           |FROM pick p JOIN c ON p.value = c.value CROSS JOIN tot
-          |ORDER BY p.q""".stripMargin),
-      bench = false),
+          |ORDER BY p.q""".stripMargin)),
 
     // ---- per-LANGUAGE token-weighted length quantiles: the grouped
     //      sibling of profile_weighted_quantiles. The cumulative is a
@@ -802,8 +802,7 @@ object CurationQueries {
           |FROM pick p
           |JOIN c ON p.lang = c.lang AND p.value = c.value
           |JOIN tot ON p.lang = tot.lang
-          |ORDER BY p.lang, p.q""".stripMargin),
-      bench = false),
+          |ORDER BY p.lang, p.q""".stripMargin)),
 
     // ---- token-count histogram (bucket width 20) ----
     QueryDef("tokens_hist",
@@ -902,7 +901,8 @@ object CurationQueries {
           |)
           |SELECT o_orderkey, o_custkey, o_totalprice FROM merged
           |WHERE o_orderkey % 10 = 0 OR o_orderkey >= 10000000
-          |ORDER BY o_orderkey""".stripMargin)),
+          |ORDER BY o_orderkey""".stripMargin),
+      bench = false),
 
     // ---- snapshot DIFF audit (what changed between version t and t+1):
     //      Snapshot.diff full-outer joins the two versions on the key and
@@ -1111,8 +1111,7 @@ object CurationQueries {
              |    AS jaccard
              |FROM totals ta JOIN totals tb ON ta.src < tb.src
              |LEFT JOIN shared sh2 ON sh2.src_a = ta.src AND sh2.src_b = tb.src
-             |ORDER BY src_a, src_b""".stripMargin),
-      bench = false),
+             |ORDER BY src_a, src_b""".stripMargin)),
 
     // ---- DSIR-style importance weights (data selection for LMs): score
     //      each doc by the mean unigram log-ratio of a target domain
@@ -1400,8 +1399,7 @@ object CurationQueries {
              |  (ROUND((p1 * ln(p1 / ((p1 + p2) / CAST(2 AS DOUBLE)))
              |        + p2 * ln(p2 / ((p1 + p2) / CAST(2 AS DOUBLE))))
              |    / CAST(2 AS DOUBLE) * 1000000, 0) / 1000000) AS jsd_term
-             |FROM probs ORDER BY bin""".stripMargin),
-      bench = false),
+             |FROM probs ORDER BY bin""".stripMargin)),
 
     // ---- chi-square independence test (lang × source association —
     //      catalog-level QA: is a source lang-skewed?). Contingency

@@ -183,7 +183,8 @@ object DocQueries {
              |  len(string_split_regex(trim(text), '\s+')) AS n_tokens,
              |  length(text) AS n_chars_actual,
              |  len(list_distinct(string_split_regex(trim(text), '\s+'))) AS n_unique_tokens
-             |FROM documents ORDER BY doc_id""".stripMargin)),
+             |FROM documents ORDER BY doc_id""".stripMargin),
+      bench = false),
 
     // ---- quality scoring ----
     QueryDef("text_quality_score",
@@ -244,7 +245,8 @@ object DocQueries {
              |  list_sort([
              |    $entries])[-1].lang AS predicted_lang
              |FROM toks ORDER BY doc_id""".stripMargin
-      }),
+      },
+      bench = false),
 
     // ---- BPE-ish sub-word tokenization (brief: "token counting —
     // whitespace + a BPE-ish regex"): alphanumeric runs + individual
@@ -310,8 +312,7 @@ object DocQueries {
     QueryDef("tokens_bpe_train",
       (s, d) => TextAnalysis.bpeTrainMerges(
         Tables.documents(s, d), col("text"), merges = 8),
-      oracle = Some(bpeTrainOracleSql(8)),
-      bench = false),
+      oracle = Some(bpeTrainOracleSql(8))),
 
     // ---- BPE ENCODE step: per-doc word/piece counts under the vocab
     // learned above (tokenizer apply; token budgeting / compression
@@ -365,7 +366,8 @@ object DocQueries {
       oracle = Some(
         raw"""SELECT doc_id,
              |  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
-             |FROM documents ORDER BY doc_id""".stripMargin)),
+             |FROM documents ORDER BY doc_id""".stripMargin),
+      bench = false),
 
     // ---- exact dedup (hash-groupBy on fingerprint) ----
     QueryDef("dedup_exact",
@@ -695,8 +697,7 @@ object DocQueries {
              |  CASE WHEN recall + precision > 0
              |    THEN CAST(2.0 AS DOUBLE) * recall * precision / (recall + precision)
              |    ELSE CAST(0.0 AS DOUBLE) END AS f1
-             |FROM pr""".stripMargin),
-      bench = false),
+             |FROM pr""".stripMargin)),
 
     // ---- SAMPLED-ground-truth LSH eval: the scale-affordable variant
     //      of dedup_lsh_eval. The full row's exact blocked-Jaccard truth
@@ -999,8 +1000,7 @@ object DocQueries {
              |  count(*) OVER (PARTITION BY j.cluster_id) AS cluster_size,
              |  j.n_chars, reps.keep_id, j.node = reps.keep_id AS kept
              |FROM j JOIN reps ON j.cluster_id = reps.cluster_id
-             |ORDER BY doc_id""".stripMargin),
-      bench = false),
+             |ORDER BY doc_id""".stripMargin)),
 
     // ---- MULTI-SIGNAL ensemble dedup: the union of two COMPLEMENTARY
     //      near-dup signals — banded-MinHash verified Jaccard ≥ 0.5
@@ -1139,8 +1139,7 @@ object DocQueries {
              |  count(*) OVER (PARTITION BY j.cluster_id) AS cluster_size,
              |  j.n_chars, reps.keep_id, j.node = reps.keep_id AS kept
              |FROM j JOIN reps ON j.cluster_id = reps.cluster_id
-             |ORDER BY doc_id""".stripMargin),
-      bench = false),
+             |ORDER BY doc_id""".stripMargin)),
 
     // ---- SimHash oracle twin: 60-bit fingerprint over the md5-derived
     // token hash (bit b set iff tokens with bit b set outnumber those
@@ -1554,8 +1553,7 @@ object DocQueries {
              |  CAST(SUM(s_int) AS DOUBLE) / 1000000000 AS bm25
              |FROM scored GROUP BY doc_id
              |ORDER BY bm25 DESC, doc_id LIMIT 50""".stripMargin
-      },
-      bench = false),
+      }),
 
     // ---- Hybrid retrieval: BM25 lexical ranking fused with dense cosine
     //      ranking by reciprocal-rank fusion (RRF, k=60) — the standard
@@ -1776,8 +1774,7 @@ object DocQueries {
              |)
              |SELECT tok, COUNT(DISTINCT doc_id) AS df,
              |  array_to_string(list_sort(list(DISTINCT doc_id))[1:100], ',') AS postings
-             |FROM toks GROUP BY tok ORDER BY tok""".stripMargin),
-      bench = false),
+             |FROM toks GROUP BY tok ORDER BY tok""".stripMargin)),
 
     // ---- Suffix-array span mining (Dedup.suffixSpanDuplicates): every
     //      maximal repeated span >= 4 tokens via sorted-suffix adjacent
@@ -1835,8 +1832,7 @@ object DocQueries {
              |  COUNT(CASE WHEN doc_id <> pdoc THEN 1 END) AS n_cross_doc
              |FROM lcp WHERE lcp >= 4
              |GROUP BY span, span_len
-             |ORDER BY span_len DESC, span LIMIT 100""".stripMargin),
-      bench = false),
+             |ORDER BY span_len DESC, span LIMIT 100""".stripMargin)),
 
     // ---- context-window chunking (training-data pipeline: split long
     //      docs into overlapping token windows for a fixed context
@@ -2051,8 +2047,7 @@ object DocQueries {
              |FROM pairs p, n na, n nb
              |WHERE p.a = na.doc_id AND p.b = nb.doc_id
              |  AND CAST(p.shared AS DOUBLE) / na.n_sh >= 0.5
-             |ORDER BY containment DESC, p.a, p.b LIMIT 50""".stripMargin),
-      bench = false),
+             |ORDER BY containment DESC, p.a, p.b LIMIT 50""".stripMargin)),
 
     // ---- per-source token-budget quota fill (data-mixture budgeting):
     //      each source contributes its best documents — ordered by

@@ -285,8 +285,7 @@ object EmbedQueries {
       (s, d) => Similarity.powerIterationTopEigen(
         Tables.embeddings(s, d), "embedding", iters = 4)
         .orderBy(col("i")),
-      oracle = Some(pcaPowerOracleSql(iters = 4)),
-      bench = false),
+      oracle = Some(pcaPowerOracleSql(iters = 4))),
 
     // ---- PCA APPLY: per-vector score on the learned component — the
     // projection a whitening/pruning pipeline materializes. One explode
@@ -307,8 +306,7 @@ object EmbedQueries {
       (s, d) => VecKMeans.fitFixedPoint(
         Tables.embeddings(s, d), "embedding", k = 8, iters = 3, seed = 42L)
         .orderBy(col("cell"), col("pos")),
-      oracle = Some(kmeansOracleSql(k = 8, iters = 3, seed = 42L)),
-      bench = false),
+      oracle = Some(kmeansOracleSql(k = 8, iters = 3, seed = 42L))),
 
     // ---- SemDeDup-style semantic dedup: coarse-quantizer cells as the
     // blocking structure, within-cell smaller-id near-dup drop. Cells,
@@ -363,8 +361,7 @@ object EmbedQueries {
            |)
            |SELECT c.vec_id, c.cell, d.dup_of, d.dup_of IS NULL AS kept
            |FROM cells c LEFT JOIN dups d ON d.b = c.vec_id
-           |ORDER BY c.vec_id""".stripMargin),
-      bench = false),
+           |ORDER BY c.vec_id""".stripMargin)),
 
     // ---- vector norm statistics per label ----
     QueryDef("embed_norm_stats",
@@ -636,7 +633,8 @@ object EmbedQueries {
           |  len(list_filter(embedding, x -> x > 0)) AS n_positive,
           |  ${Det.fixedSql("CAST(list_max(embedding) AS DOUBLE)", 6)} AS max_elem,
           |  ${Det.fixedSql("CAST(list_sort(embedding)[1] AS DOUBLE)", 6)} AS min_via_sort
-          |FROM embeddings WHERE vec_id < 200 ORDER BY vec_id""".stripMargin)),
+          |FROM embeddings WHERE vec_id < 200 ORDER BY vec_id""".stripMargin),
+      bench = false),
 
     // ---- IVF approximate top-k: seeded coarse quantizer, nProbe cells
     // per query (the recall/cost dial). The centroid sample uses a
@@ -1036,8 +1034,7 @@ object EmbedQueries {
       oracle = Some(
         s"""WITH ${knnJoinCtes(k = 3, nProbe = 4, maxCellSize = 64)}
            |SELECT qid, rank, neighbor_id, cos FROM ranked
-           |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
-      bench = false),
+           |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin)),
 
     // ---- INCREMENTAL kNN maintenance: the ingest sibling of
     //      dedup_incremental_lsh — fold a crawl increment (vec_id % 5
@@ -1218,8 +1215,7 @@ object EmbedQueries {
              centSrc = "u", corpusSrc = "u",
              querySrc = "(SELECT vec_id, embedding FROM u WHERE vec_id % 7 = 0)")}
            |SELECT qid, rank, neighbor_id, cos
-           |FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin),
-      bench = false),
+           |FROM ranked WHERE rank <= 3 ORDER BY qid, rank""".stripMargin)),
 
     // ---- hot-cell cap QUALITY eval: the one scale knob of knnJoinIvf
     //      with no measured quality number until now. The sub-split cap
@@ -1490,8 +1486,7 @@ object EmbedQueries {
            |SELECT node AS vec_id, cluster_id,
            |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
            |  node = cluster_id AS is_representative
-           |FROM lab ORDER BY vec_id""".stripMargin),
-      bench = false),
+           |FROM lab ORDER BY vec_id""".stripMargin)),
 
     // ---- PQ (product quantization) approximate top-k: L2-normalized
     // vectors encoded as 16 subspace codes (4 dims each, 16 Knuth-hash-
@@ -1561,8 +1556,7 @@ object EmbedQueries {
              |  FROM rr
              |)
              |SELECT qid, rank, neighbor_id, cos FROM ranked
-             |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
-      bench = false),
+             |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin)),
 
     // ---- int8 symmetric quantization of the embedding column: the
     // storage/bandwidth dial every vector store exposes. Per-vector
@@ -1601,7 +1595,8 @@ object EmbedQueries {
               "list_sum(list_transform(list_zip(embedding, q), " +
               "p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / (127.0 / absmax)) * " +
               "(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE) / (127.0 / absmax)))) / len(embedding)", 12)} AS mse
-           |FROM quant ORDER BY vec_id""".stripMargin)),
+           |FROM quant ORDER BY vec_id""".stripMargin),
+      bench = false),
     // to the first 300 vectors -- all-pairs is the verifier, not the scale
     // path). Fixture embeddings are near-random (max pairwise cos ~0.46),
     // so threshold 0.4 exercises a real, non-empty result. ----
@@ -1614,7 +1609,8 @@ object EmbedQueries {
            |SELECT q.vec_id AS a, c.vec_id AS b, ${Det.fixedSql(cosSql, 6)} AS cos
            |FROM e q JOIN e c ON q.vec_id < c.vec_id
            |WHERE ${Det.fixedSql(cosSql, 6)} >= 0.4
-           |ORDER BY a, b""".stripMargin)),
+           |ORDER BY a, b""".stripMargin),
+      bench = false),
 
     // ---- embedding-cosine near-dup at scale: hyperplane-LSH bucket
     // self-join for candidates, exact-cosine verify. Oracle reproduces

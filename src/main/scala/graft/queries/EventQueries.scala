@@ -32,7 +32,8 @@ object EventQueries {
            |  count(*) AS n_events,
            |  ${Det.fixedSumSql("value", 2)} AS sum_value,
            |  ${Det.fixedAvgSql("value", 2)} AS avg_value
-           |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+           |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      bench = false),
 
     // ---- sliding windows (1h length, 30min slide): each event lands in
     // exactly 2 windows; oracle = two epoch-aligned shifted buckets ----
@@ -55,7 +56,8 @@ object EventQueries {
            |SELECT window_start, event_type,
            |  count(*) AS n_events,
            |  ${Det.fixedSumSql("value", 2)} AS sum_value
-           |FROM exploded GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+           |FROM exploded GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      bench = false),
 
     // ---- rolling median over a BOUNDED 7-row frame per user: the
     //      robust-smoothing window built-ins don't cover (no median over
@@ -147,7 +149,8 @@ object EventQueries {
           |  SELECT *, row_number() OVER (PARTITION BY user_id
           |                               ORDER BY ts DESC, event_id DESC) AS rn
           |  FROM events
-          |) WHERE rn = 1 ORDER BY user_id""".stripMargin)),
+          |) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+      bench = false),
 
     // ---- as-of join: each purchase <- the user's latest click at or
     // before it (union+window operator, see graft.operators.AsOfJoin) ----
@@ -393,7 +396,8 @@ object EventQueries {
           |  value - lag(value) OVER w AS delta
           |FROM events
           |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-          |ORDER BY user_id, ts, event_id""".stripMargin)),
+          |ORDER BY user_id, ts, event_id""".stripMargin),
+      bench = false),
 
     // ---- pivot (conditional aggregation with a fixed column set) ----
     QueryDef("events_pivot_type_counts",
@@ -410,7 +414,8 @@ object EventQueries {
           |  count(*) FILTER (event_type = 'purchase') AS purchase,
           |  count(*) FILTER (event_type = 'signup') AS signup,
           |  count(*) FILTER (event_type = 'view') AS view
-          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+      bench = false),
 
     // ---- KEYLESS interval join via time-banding (RangeJoin): purchases
     // by ANY user within 1h after each click. No equality conjunct exists,
@@ -560,8 +565,7 @@ object EventQueries {
           |  max(value) AS high, min(value) AS low,
           |  arg_max(value, CAST(epoch_us(ts) AS HUGEINT) * 100000000
           |    + event_id) AS close
-          |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-      bench = false),
+          |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // ---- VARIANT (Spark 4 semi-structured type): parse once, extract
     // typed paths. At scale VARIANT beats per-path get_json_object — the

@@ -44,7 +44,7 @@ object GmmQueries {
     val p0 = (0 until k).map(j =>
       s"${dbl(init.weights(j))} AS w$j, ${dbl(init.means(j))} AS mu$j, " +
         s"${dbl(init.variances(j))} AS s2$j").mkString(", ")
-    // graft.gmm.Gaussian.pdf column overload, same association order
+    // GmmSuffStatsAggregator.reduce's density, same association order
     def pdf(j: Int) =
       s"EXP(-POW(x - mu$j, 2) / (2.0 * s2$j)) / SQRT($twoPi * s2$j)"
     def tofix(e: String) = s"CAST(ROUND(($e) * $f, 0) AS BIGINT)"
@@ -116,7 +116,8 @@ object GmmQueries {
           |  ${Det.fixedSql("stddev_pop(value)", 4)} AS stddev_pop_value,
           |  ${Det.fixedSql("min(value)", 2)} AS min_value,
           |  ${Det.fixedSql("max(value)", 2)} AS max_value
-          |FROM events""".stripMargin)),
+          |FROM events""".stripMargin),
+      bench = false),
 
     QueryDef("gaussian_pdf_fixed",
       (s, d) => Tables.events(s, d)
@@ -153,7 +154,8 @@ object GmmQueries {
            |FROM (
            |  SELECT CASE WHEN isinf(LN($mixSql)) THEN NULL ELSE LN($mixSql) END AS ll
            |  FROM events
-           |)""".stripMargin)),
+           |)""".stripMargin),
+      bench = false),
 
     // Per-point (textbook-normalized) responsibilities under the fixed
     // model — the reference's gamma (Main.scala:123-161) as a derived
@@ -178,7 +180,8 @@ object GmmQueries {
         s"""SELECT event_id,
            |  $cols
            |FROM events WHERE ($mix) > 0 ORDER BY event_id""".stripMargin
-      }),
+      },
+      bench = false),
 
     // One sufficient-statistics pass under the fixed model via the typed
     // Aggregator/udaf surface (GmmSuffStatsAggregator) — fixed-point
@@ -233,7 +236,8 @@ object GmmQueries {
            |)
            |$selects
            |ORDER BY k""".stripMargin
-      }),
+      },
+      bench = false),
 
     // Fixed-point EM: 5 full iterations from the fixed init, sufficient
     // statistics integerized per point each iteration -> the ITERATIVE

@@ -135,8 +135,7 @@ object GraphQueries {
             .as("kind"),
           Det.fixed(col("rank"), 9).as("pagerank"))
         .orderBy(col("node")),
-      oracle = Some(pagerankSql(5)),
-      bench = false),
+      oracle = Some(pagerankSql(5))),
 
     // ---- triangle counting on the supplier co-part projection graph:
     //      bipartite → unipartite projection (suppliers sharing a part),

@@ -72,7 +72,8 @@ object MultimodalQueries {
           |SELECT doc_id, n_frames, CAST(frame_idx AS INT) AS frame_idx,
           |  doc_id || ':' || frame_idx AS frame_tag
           |FROM frames WHERE frame_idx % 5 = 0
-          |ORDER BY doc_id, frame_idx""".stripMargin)),
+          |ORDER BY doc_id, frame_idx""".stripMargin),
+      bench = false),
 
     // ---- perceptual-hash near-dup over media payloads: banded aHash
     //      (codegen'd AHashBands expression, 4×16-bit bands) → bucket
@@ -477,7 +478,6 @@ object MultimodalQueries {
              |  count(*) OVER (PARTITION BY j.cluster_id) AS cluster_size,
              |  j.n_chars, reps.keep_id, j.node = reps.keep_id AS kept
              |FROM j JOIN reps ON j.cluster_id = reps.cluster_id
-             |ORDER BY doc_id""".stripMargin),
-      bench = false)
+             |ORDER BY doc_id""".stripMargin))
   )
 }

@@ -411,7 +411,6 @@ object StreamQueries {
            |  SELECT CAST(1 AS BIGINT) AS batch_id, qid, rank, neighbor_id, cos
            |  FROM b_ranked WHERE rank <= 3
            |) ORDER BY qid, rank""".stripMargin
-      },
-      bench = false)
+      })
   )
 }

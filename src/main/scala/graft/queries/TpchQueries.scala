@@ -174,7 +174,8 @@ object TpchQueries {
            |FROM lineitem
            |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
            |  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-           |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin)),
+           |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin),
+      bench = false),
 
     // ---- join + group + top-k (Q10 shape) ----
     QueryDef("q10_returned_items",
@@ -227,7 +228,8 @@ object TpchQueries {
         """SELECT o_orderkey, o_totalprice FROM orders
           |WHERE EXISTS (SELECT 1 FROM lineitem
           |              WHERE l_orderkey = o_orderkey AND l_discount > 0.09)
-          |ORDER BY o_orderkey""".stripMargin)),
+          |ORDER BY o_orderkey""".stripMargin),
+      bench = false),
 
     // ---- left-anti join (NOT EXISTS) ----
     QueryDef("join_anti_not_exists",
@@ -246,7 +248,8 @@ object TpchQueries {
           |                  WHERE o_custkey = c_custkey
           |                    AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
           |                    AND o_orderdate <  TIMESTAMP '1995-07-01 00:00:00')
-          |ORDER BY c_custkey""".stripMargin)),
+          |ORDER BY c_custkey""".stripMargin),
+      bench = false),
 
     // ---- ROLLUP ----
     QueryDef("agg_rollup",
@@ -271,7 +274,8 @@ object TpchQueries {
         s"""SELECT o_orderstatus, o_orderpriority,
            |  ${Det.fixedSumSql("o_totalprice", 2)} AS sum_price, count(*) AS n
            |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-           |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)),
+           |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+      bench = false),
 
     // ---- Q4-style: orders with any late-shipped line (semi join),
     // counted per priority ----
@@ -295,7 +299,8 @@ object TpchQueries {
           |WHERE EXISTS (
           |  SELECT 1 FROM lineitem l
           |  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
-          |GROUP BY 1 ORDER BY 1""".stripMargin)),
+          |GROUP BY 1 ORDER BY 1""".stripMargin),
+      bench = false),
 
     // ---- Q14-style: promo revenue share per month (conditional agg over
     // a fact-dim join) ----
@@ -387,7 +392,8 @@ object TpchQueries {
           |WHERE o_totalprice > 1.5 * (
           |  SELECT avg(o2.o_totalprice) FROM orders o2
           |  WHERE o2.o_custkey = o.o_custkey)
-          |ORDER BY o_orderkey""".stripMargin)),
+          |ORDER BY o_orderkey""".stripMargin),
+      bench = false),
 
     // ---- TPC-H Q13 shape: order-count distribution including
     // zero-order customers (left join + count of the nullable side,
@@ -482,7 +488,8 @@ object TpchQueries {
            |  ${Det.fixedSumSql("l_quantity", 2)} AS sum_qty, count(*) AS n
            |FROM lineitem
            |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-           |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)),
+           |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+      bench = false),
 
     // ---- grouping()/grouping_id(): distinguish "NULL because subtotal"
     // from "NULL in the data" — the disambiguator every ROLLUP consumer
@@ -521,7 +528,8 @@ object TpchQueries {
       oracle = Some(
         """SELECT o_custkey, o_orderpriority, count(*) AS n
           |FROM orders WHERE o_custkey < 500
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      bench = false),
 
     // ---- distinct aggregates (exact) ----
     QueryDef("agg_distinct",
@@ -537,7 +545,8 @@ object TpchQueries {
           |  count(DISTINCT o_custkey) AS uniq_custs,
           |  CAST(sum(DISTINCT o_custkey) AS BIGINT) AS sum_distinct_cust,
           |  count(*) AS n
-          |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+          |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+      bench = false),
 
     // ---- approximate distinct (HLL) — sketches differ across engines, so
     // no SQL oracle; rows-only + ApproxSpec tolerance test vs exact count.
@@ -605,7 +614,8 @@ object TpchQueries {
           |    row_number() OVER (PARTITION BY o_custkey
           |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
           |  FROM orders
-          |) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)),
+          |) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
+      bench = false),
 
     // ---- window: running sum (frame), exact via integer cents ----
     QueryDef("window_running_sum",
@@ -637,7 +647,8 @@ object TpchQueries {
            |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0
            |    AS running_revenue
            |FROM lineitem
-           |ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""".stripMargin)),
+           |ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""".stripMargin),
+      bench = false),
 
     // ---- window RANGE frame (value-based, vs the ROWS frames above):
     // per customer, orders in the trailing 30-day window ----
@@ -662,7 +673,8 @@ object TpchQueries {
            |FROM orders
            |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
            |  RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
-           |ORDER BY o_orderkey""".stripMargin)),
+           |ORDER BY o_orderkey""".stripMargin),
+      bench = false),
 
     // ---- window distribution functions (ntile / percent_rank /
     // cume_dist) ----
@@ -686,7 +698,8 @@ object TpchQueries {
           |  (ROUND((cume_dist() OVER w) * 1000000000, 0) / 1000000000) AS cume
           |FROM orders WHERE o_orderkey < 5000
           |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-          |ORDER BY o_orderkey""".stripMargin)),
+          |ORDER BY o_orderkey""".stripMargin),
+      bench = false),
 
     // ---- ordered string aggregation (sorted collect -> join) ----
     QueryDef("agg_string_concat",
@@ -696,7 +709,8 @@ object TpchQueries {
         .orderBy(col("n_regionkey")),
       oracle = Some(
         """SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations
-          |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin)),
+          |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin),
+      bench = false),
 
     // ---- argmin/argmax aggregates (min_by / max_by). Single-key
     // ordering: per-group max/min prices are unique in BOTH the sf0.01
@@ -718,7 +732,8 @@ object TpchQueries {
           |  arg_min(o_orderkey, o_totalprice) AS smallest_order,
           |  (ROUND((max(o_totalprice)) * 100, 0) / 100) AS max_price,
           |  (ROUND((min(o_totalprice)) * 100, 0) / 100) AS min_price
-          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
+          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+      bench = false),
 
     // ---- top-k as a TRUE aggregate (bounded partial heaps — see
     //      operators/TopK): the scale-correct alternative to the
@@ -788,7 +803,8 @@ object TpchQueries {
         s"""${custSql("1995-01-01", "1996-01-01")}
            |UNION
            |${custSql("2000-01-01", "2001-01-01")}
-           |ORDER BY custkey""".stripMargin)),
+           |ORDER BY custkey""".stripMargin),
+      bench = false),
 
     QueryDef("set_intersect",
       (s, d) => {
@@ -824,7 +840,8 @@ object TpchQueries {
         .limit(100),
       oracle = Some(
         """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-          |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100""".stripMargin)),
+          |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100""".stripMargin),
+      bench = false),
 
     // ---- string functions ----
     QueryDef("string_funcs",
@@ -852,7 +869,8 @@ object TpchQueries {
           |  regexp_replace(p_name, '[aeiou]', '', 'g') AS name_novowel,
           |  string_split(p_name, ' ')[1] AS first_word,
           |  trim(lpad(p_brand, 12, '_'), ' ') AS brand_padded
-          |FROM part ORDER BY p_partkey""".stripMargin)),
+          |FROM part ORDER BY p_partkey""".stripMargin),
+      bench = false),
 
     // ---- date/time functions ----
     QueryDef("date_funcs",
@@ -875,7 +893,8 @@ object TpchQueries {
           |  CAST(quarter(o_orderdate) AS INT) AS o_quarter,
           |  CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
           |  date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since_epoch_start
-          |FROM orders ORDER BY o_orderkey""".stripMargin)),
+          |FROM orders ORDER BY o_orderkey""".stripMargin),
+      bench = false),
 
     // ---- large-large shuffle join: pin sort-merge via hint (dims are
     // small enough to auto-broadcast at test SF; at 100 TB lineitem x
@@ -893,7 +912,8 @@ object TpchQueries {
         s"""SELECT o_orderpriority, count(*) AS n_items,
            |  ${Det.fixedSumSql("l_extendedprice", 2)} AS sum_price
            |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |GROUP BY 1 ORDER BY 1""".stripMargin)),
+           |GROUP BY 1 ORDER BY 1""".stripMargin),
+      bench = false),
 
     // ---- bucketed fact-fact SMJ: both sides pre-hash-clustered into the
     // same bucket layout on the join key, so the join (and the per-order
@@ -1018,7 +1038,8 @@ object TpchQueries {
           |  (ROUND((quantile_cont(l_quantity, 0.5)) * 1000000, 0) / 1000000) AS median,
           |  (ROUND((quantile_cont(l_quantity, 0.9)) * 1000000, 0) / 1000000) AS q90,
           |  (ROUND((quantile_cont(l_extendedprice, 0.99)) * 1000000, 0) / 1000000) AS price_p99
-          |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
+          |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+      bench = false),
 
     // ---- sketch-based percentiles (single-pass mergeable sketch — the
     // 100 TB path; approximate, so no cross-engine oracle) ----
@@ -1202,7 +1223,8 @@ object TpchQueries {
           |  CAST(json_extract(to_json(struct_pack(o_orderkey := o_orderkey,
           |                      o_orderpriority := o_orderpriority)),
           |                    '$.o_orderkey') AS BIGINT) AS parsed_key
-          |FROM orders WHERE o_orderkey < 2000 ORDER BY o_orderkey""".stripMargin)),
+          |FROM orders WHERE o_orderkey < 2000 ORDER BY o_orderkey""".stripMargin),
+      bench = false),
 
     // ---- TPC-H Q7 shape: volume shipping between a nation pair. The
     // nation dimension joins in TWICE under different roles (supplier
@@ -1242,7 +1264,8 @@ object TpchQueries {
            |JOIN nation n2 ON c_nationkey = n2.n_nationkey
            |WHERE (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18')
            |   OR (n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
-           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+           |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+      bench = false),
 
     // ---- TPC-H Q8 shape: market share of one nation within a region's
     // order volume, per year. The share is a ratio of two fixed-point-
@@ -1435,8 +1458,7 @@ object TpchQueries {
            |JOIN supplier ON l_suppkey = s_suppkey
            |JOIN nation ON s_nationkey = n_nationkey
            |WHERE p_name LIKE 'red%'
-           |GROUP BY 1, 2 ORDER BY 1 ASC, 2 DESC""".stripMargin),
-      bench = false),
+           |GROUP BY 1, 2 ORDER BY 1 ASC, 2 DESC""".stripMargin)),
 
     // ---- TPC-H Q11 shape: groups whose share of a global total exceeds
     // a threshold — HAVING against a scalar subquery. Spark side: the
@@ -1646,8 +1668,7 @@ object TpchQueries {
           |                    AND l3.l_suppkey <> l1.l_suppkey
           |                    AND o3.o_orderstatus = 'F'
           |                    AND l3.l_shipdate > o3.o_orderdate + INTERVAL 90 DAY)
-          |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin),
-      bench = false),
+          |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin)),
 
     // ---- FULL OUTER join of two grouped aggregates with coalesced keys
     // — the reconciliation shape (rows surviving from either side).

@@ -71,12 +71,6 @@ object Det {
     round(c * lit(f), 0).cast("decimal(38,0)")
   }
 
-  /** The DuckDB SQL text matching [[toFixedWide]]. */
-  def toFixedWideSql(expr: String, scale: Int): String = {
-    val f = "1" + ("0" * scale)
-    s"CAST(ROUND(($expr) * $f, 0) AS HUGEINT)"
-  }
-
   /** Exact sum of `c` interpreted as fixed-point with `scale` decimals.
     * SQL equivalent: CAST(SUM(CAST(ROUND(c * 10^scale, 0) AS BIGINT)) AS DOUBLE) / 10^scale
     */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.util.Det
 
 /** The per-partition EM kernel against the SQL forms it replaced, its
   * edge semantics, and the job count and layout behaviour of a fit. */
@@ -99,6 +100,41 @@ class EMKernelSpec extends SparkSpec {
     }
   }
 
+  test("fixed-point aggregator terms are bit-identical to SQL Det.toFixed, point by point") {
+    // the input of the kernel case above: underflowed points get
+    // gamma = 1/k and no log term; a NaN mix counts as `mix > 0`, so its
+    // gammas are NaN and toFixed gives 0
+    val rnd = new scala.util.Random(11)
+    val xs = Array.fill(2000)(rnd.nextGaussian() * 40.0 + 60.0) ++ Array(1e6, -3e5, Double.NaN)
+    val x = col("x")
+    val weighted = textbookWeighted(model)
+    val mix = weighted.reduce(_ + _)
+    val gammas = weighted.map(wj => when(mix > 0, wj / mix).otherwise(lit(1.0 / model.k)))
+    // the aggregator's layout: [A_j.. | B_j.. | C_j.. | D | loglik]
+    val terms = (gammas ++ gammas.map(_ * x) ++ gammas.map(_ * x * x) :+ mix)
+      .map(Det.toFixed(_, 6)) :+ coalesce(Det.toFixed(log(mix), 6), lit(0L))
+    val agg = new GmmSuffStatsAggregator(model.weights, model.means, model.variances)
+    val rows = spark.sparkContext.parallelize(xs.toSeq, 1).toDF("x")
+      .select(x +: terms: _*).collect()
+    rows.length shouldBe xs.length
+    rows.foreach { r =>
+      val want = Seq.tabulate(terms.size)(i => r.getLong(i + 1))
+      val got = agg.reduce(agg.zero, r.getDouble(0)).toSeq
+      withClue(s"x=${r.getDouble(0)}: ") { got shouldBe want }
+    }
+  }
+
+  test("a fixed-point sum past Long range fails the fit and the aggregator") {
+    // every point underflows: gamma = 1/3 and each adds x*x/3 * 1e6 ≈
+    // 3.3e17 to every C_j; 40 of them pass Long.MaxValue ≈ 9.2e18
+    val far = Seq.fill(40)(1e6)
+    def arithmetic(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+    arithmetic(intercept[Exception](EM.fitFixedPoint(far.toDF("x"), "x", model, iters = 1))) shouldBe true
+    val agg = new GmmSuffStatsAggregator(model.weights, model.means, model.variances)
+    arithmetic(intercept[Exception](far.toDS().select(agg.toColumn).head())) shouldBe true
+  }
+
   test("underflowed points get gamma = 1/k and no log term; all underflowed is -inf") {
     val m = GmmModel(Array(0.5, 0.5), Array(0.0, 1.0), Array(1.0, 1.0))
     // exp(-(1e6)^2 / 2) underflows to 0 for both components: mix = 0
@@ -142,6 +178,14 @@ class EMKernelSpec extends SparkSpec {
     sc.addSparkListener(l)
     try {
       EM.fit(df, "x", k = 2, maxIter = 5, tol = None, init = EM.SpreadInit).iterations shouldBe 5
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    jobs.get shouldBe 1 + 5
+
+    jobs.set(0)
+    sc.addSparkListener(l)
+    try {
+      EM.fitFixedPoint(df, "x", GmmModel(Array(0.5, 0.5), Array(0.0, 6.0), Array(1.0, 1.0)), iters = 5)
       ListenerBusDrain(sc)
     } finally sc.removeSparkListener(l)
     jobs.get shouldBe 1 + 5
