@@ -1,5 +1,6 @@
 package graft.gmm
 
+import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,16 +15,20 @@ import org.apache.spark.storage.StorageLevel
   * is 1 + (iterations) jobs:
   *  - Catalyst plans and codegens the projection `cast(x as double)
   *    where x is not null` once. Its rows are copied into one primitive
-  *    `Array[Double]` per partition, persisted at MEMORY_AND_DISK, and the
-  *    job that fills that cache also returns each partition's
+  *    `Array[Double]` per scan partition, persisted at MEMORY_AND_DISK,
+  *    and the job that fills that cache also returns each partition's
   *    (n, mean, M2); the driver merges them with Chan's update.
-  *  - Each iteration is ONE job over the cached arrays: a while-loop
-  *    kernel ([[partitionSums]]) returns every sufficient statistic
+  *  - The cached column is cut into `defaultParallelism` slices whose
+  *    sizes differ by at most one point, so no iteration waits on the
+  *    largest scan split while a core idles. A slice is one or more
+  *    (array, from, until) ranges of the cached arrays; nothing is copied.
+  *  - Each iteration is ONE job over the slices: a while-loop kernel
+  *    ([[partitionSums]]) returns every sufficient statistic
   *    (sum gamma_k, sum gamma_k*x, sum gamma_k*x^2 for every k) plus the
-  *    log-likelihood, 3k+3 doubles per partition regardless of data size.
+  *    log-likelihood, 3k+3 doubles per range regardless of data size.
   *    No query is planned, nothing is broadcast and nothing is shuffled
-  *    per iteration. The driver adds the partition results in partition
-  *    order, so a fixed partitioning gives a deterministic fit.
+  *    per iteration. The driver adds the range results in slice order,
+  *    so a fixed partitioning and core count give a deterministic fit.
   *
   * Two semantic variants (SURVEY.md §7.4), sharing the kernel:
   *  - Textbook: per-point-normalized responsibilities, monotone
@@ -72,7 +77,7 @@ object EM {
       init: Init = SpreadInit): FitResult = {
 
     val data = column(df, xCol)
-    withPoints(data) { (points, m0) =>
+    withPoints(data) { (slices, m0) =>
       val n = m0.n
       require(n > 0, s"EM.fit: no non-null rows in $xCol")
       val dsVar = math.max(m0.m2 / n, VarFloor)
@@ -82,6 +87,7 @@ object EM {
           // k quantile-ish spread points in [-1.5, 1.5] sigma
           Array.tabulate(k)(j => m0.mean + math.sqrt(dsVar) * (-1.5 + 3.0 * (j + 0.5) / k))
         case SampleInit(seed) =>
+          require(n >= k, s"EM.fit: SampleInit needs $k non-null rows in $xCol, found $n")
           // Seeded exact-K sample; deterministic given fixed seed AND input
           // partitioning. K rows only — the sort is a top-K (TakeOrdered),
           // not a full sort, so this scales.
@@ -89,7 +95,7 @@ object EM {
             .collect().map(_.getDouble(0)).sorted
       }
       val model = GmmModel(Array.fill(k)(1.0 / k), means0, Array.fill(k)(dsVar))
-      fitLoop(points, n, model, maxIter, tol, variant)
+      fitLoop(slices, n, model, maxIter, tol, variant)
     }
   }
 
@@ -97,19 +103,74 @@ object EM {
   private def column(df: DataFrame, xCol: String): DataFrame =
     df.select(col(xCol).cast("double").as("x")).where(col("x").isNotNull)
 
-  /** Runs `body` on `data`'s column as one primitive array per partition,
-    * persisted at MEMORY_AND_DISK until `body` returns (the reference
-    * persists the raw RDD, Main.scala:41), and on the column's moments.
-    * The job that fills the cache also computes the moments (the
-    * reference does count/mean/variance as three jobs, Main.scala:61-64). */
-  private def withPoints[T](data: DataFrame)(body: (RDD[Array[Double]], Moments) => T): T = {
+  /** A range of one cached array: its points `from` until `until`. */
+  private type Span = (Array[Double], Int, Int)
+
+  /** Runs `body` on `data`'s column, cut into [[Slices]], and on the
+    * column's moments. The column is cached as one primitive array per
+    * scan partition, persisted at MEMORY_AND_DISK until `body` returns
+    * (the reference persists the raw RDD, Main.scala:41). The job that
+    * fills the cache also computes each partition's moments (the
+    * reference does count/mean/variance as three jobs, Main.scala:61-64),
+    * whose counts lay out the slices. */
+  private def withPoints[T](data: DataFrame)(body: (RDD[Span], Moments) => T): T = {
     val points = data.queryExecution.toRdd.mapPartitions { rows =>
       val b = new scala.collection.mutable.ArrayBuilder.ofDouble
       rows.foreach(r => b += r.getDouble(0))
       Iterator.single(b.result())
     }.persist(StorageLevel.MEMORY_AND_DISK)
-    try body(points, points.map(Moments.of).collect().foldLeft(Moments.Empty)(_ merge _))
-    finally points.unpersist(blocking = true)
+    try {
+      val moments = points.map(Moments.of).collect()
+      val parents = points.partitions
+      val slices = sliceRanges(moments.map(_.n.toInt), points.sparkContext.defaultParallelism)
+        .zipWithIndex.map { case (ranges, s) =>
+          new Slice(s, ranges.map { case (p, from, until) => (parents(p), from, until) })
+        }
+      body(new Slices(points, slices), moments.foldLeft(Moments.Empty)(_ merge _))
+    } finally points.unpersist(blocking = true)
+  }
+
+  /** Cuts a column of `sizes(p)` points in partition p into `count`
+    * slices: slice s holds the points [s*N/count, (s+1)*N/count) of the
+    * column in partition order, so slice sizes differ by at most one.
+    * Each slice is a list of (partition, from, until) ranges. */
+  private[gmm] def sliceRanges(sizes: Array[Int], count: Int): Array[Array[(Int, Int, Int)]] = {
+    val total = sizes.map(_.toLong).sum
+    var p = 0
+    var offset = 0
+    Array.tabulate(count) { s =>
+      var need = (s + 1) * total / count - s * total / count
+      val ranges = Array.newBuilder[(Int, Int, Int)]
+      while (need > 0) {
+        while (offset == sizes(p)) { p += 1; offset = 0 }
+        val take = math.min(need, (sizes(p) - offset).toLong).toInt
+        ranges += ((p, offset, offset + take))
+        offset += take
+        need -= take
+      }
+      ranges.result()
+    }
+  }
+
+  /** One slice: ranges over the cached partitions. It holds the parent
+    * `Partition`s themselves, since a task cannot call `points.partitions`. */
+  private final class Slice(val index: Int, val ranges: Array[(Partition, Int, Int)])
+    extends Partition
+
+  /** The cached column as equal slices, one task each, in the stage that
+    * reads the cache: no point is copied and no shuffle is added. A slice
+    * that spans two partitions reads both cached blocks. That is free in
+    * `local[n]`, the engine's only deployment (`graft.GraftSession`); on a
+    * cluster it would fetch a block from the executor that cached it. */
+  private final class Slices(points: RDD[Array[Double]], slices: Array[Slice])
+    extends RDD[Span](points.sparkContext, Seq(new NarrowDependency(points) {
+      override def getParents(s: Int): Seq[Int] = slices(s).ranges.map(_._1.index).toSeq
+    })) {
+    override protected def getPartitions: Array[Partition] = slices.toArray[Partition]
+    override def compute(split: Partition, context: TaskContext): Iterator[Span] =
+      split.asInstanceOf[Slice].ranges.iterator.map { case (p, from, until) =>
+        (firstParent[Array[Double]].iterator(p, context).next(), from, until)
+      }
   }
 
   /** Count, mean and sum of squared deviations of a set of points. */
@@ -146,14 +207,15 @@ object EM {
   private val TwoPi = 2.0 * math.Pi
   private val Sqrt2Pi = math.sqrt(2.0 * math.Pi)
 
-  /** One EM iteration's sums over one partition's points, in the layout
-    * [A_j, B_j, C_j for each j] ++ [D, sum log(mix), log terms].
+  /** One EM iteration's sums over the points `xs(from until until)`, in
+    * the layout [A_j, B_j, C_j for each j] ++ [D, sum log(mix), log terms].
     *
-    * The arithmetic is the code Spark generated for the former per-
-    * iteration SQL aggregate, operation for operation: `StrictMath.exp`,
-    * `StrictMath.pow(_, 2.0)`, `StrictMath.log`, `Math.sqrt`, the same
-    * association order, and the per-component constants the SQL path
-    * computed from its parameter columns. SQL semantics carried over:
+    * The arithmetic gives, bit for bit, what Spark generated for the
+    * former per-iteration SQL aggregate: `StrictMath.exp`,
+    * `StrictMath.log`, `Math.sqrt`, the same association order, and the
+    * per-component constants the SQL path computed from its parameter
+    * columns. The square is `d * d`, which is what `StrictMath.pow(d, 2.0)`
+    * returns. SQL semantics carried over:
     *  - `log` of a value <= 0 is NULL, which `sum` skips: such a point adds
     *    no log term (a count of 0 terms means a log-likelihood of -inf);
     *  - Textbook gamma_j = w_j*pdf_j/mix only where `mix > 0`, which in
@@ -161,7 +223,8 @@ object EM {
     *  - RefCompat gamma_j is the un-normalized w_j*pdf_j (the global
     *    denominator D is applied driver-side).
     */
-  private[gmm] def partitionSums(xs: Array[Double], m: GmmModel, variant: Variant): Array[Double] = {
+  private[gmm] def partitionSums(
+      xs: Array[Double], from: Int, until: Int, m: GmmModel, variant: Variant): Array[Double] = {
     val k = m.k
     val ref = variant == RefCompat
     val w = m.weights
@@ -173,13 +236,14 @@ object EM {
     val invK = 1.0 / k
     val wp = new Array[Double](k)
     val out = new Array[Double](3 * k + 3)
-    var i = 0
-    while (i < xs.length) {
+    var i = from
+    while (i < until) {
       val x = xs(i)
       var mix = 0.0
       var j = 0
       while (j < k) {
-        val sq = StrictMath.pow(x - mu(j), 2.0)
+        val d = x - mu(j)
+        val sq = d * d
         val pdf =
           if (ref) refCoef(j) * StrictMath.exp(-(sq / 2.0) * v(j))
           else StrictMath.exp(-sq / twoVar(j)) / sqrtNorm(j)
@@ -207,11 +271,12 @@ object EM {
     out
   }
 
-  /** Runs ONE job for an EM iteration: [[partitionSums]] per partition,
-    * added up in partition order. */
-  private def iterationSums(points: RDD[Array[Double]], m: GmmModel, variant: Variant): Array[Double] = {
+  /** Runs ONE job for an EM iteration: [[partitionSums]] per range of
+    * each slice, added up in slice order. */
+  private def iterationSums(slices: RDD[Span], m: GmmModel, variant: Variant): Array[Double] = {
     requireNonZeroVariances(m)
-    val parts = points.map(xs => partitionSums(xs, m, variant)).collect()
+    val parts = slices.map { case (xs, from, until) => partitionSums(xs, from, until, m, variant) }
+      .collect()
     val total = new Array[Double](3 * m.k + 3)
     parts.foreach { p =>
       var i = 0
@@ -232,7 +297,7 @@ object EM {
     if (sums(sums.length - 1) == 0.0) Double.NegativeInfinity else sums(sums.length - 2)
 
   private def fitLoop(
-      points: RDD[Array[Double]], n: Long, init: GmmModel,
+      slices: RDD[Span], n: Long, init: GmmModel,
       maxIter: Int, tol: Option[Double], variant: Variant): FitResult = {
     var model = init
     var lnpPrev = Double.NaN
@@ -241,7 +306,7 @@ object EM {
     var stop = false
 
     while (iters < maxIter && !stop) {
-      val s = iterationSums(points, model, variant)
+      val s = iterationSums(slices, model, variant)
       val k = model.k
       // layout: [A_j, B_j, C_j per j] ++ [D, sum log(mix), log terms]
       val A = Array.tabulate(k)(j => s(3 * j))
@@ -301,10 +366,10 @@ object EM {
     * fixed `iters` iterations from explicit `init` parameters (data-
     * derived init would reintroduce order-dependent float moments).
     *
-    * It runs on [[fit]]'s cached column in 1 + `iters` jobs: each
-    * iteration folds every partition's points through
+    * It runs on [[fit]]'s cached column and slices in 1 + `iters` jobs:
+    * each iteration folds every slice's points through
     * [[GmmSuffStatsAggregator.reduce]] and adds the Long buffers in
-    * partition order. A sum that overflows Long fails the fit.
+    * slice order. A sum that overflows Long fails the fit.
     *
     * The quantization perturbs each gamma by ≤ 5e-7 — far below the
     * statistical noise of the fit — while buying exact reproducibility;
@@ -313,12 +378,12 @@ object EM {
       df: DataFrame, xCol: String, init: GmmModel,
       iters: Int, scale: Int = 6): GmmModel = {
     val f = math.pow(10.0, scale.toDouble)
-    withPoints(column(df, xCol)) { (points, m0) =>
+    withPoints(column(df, xCol)) { (slices, m0) =>
       val nD = m0.n.toDouble
       var model = init
       var t = 0
       while (t < iters) {
-        val s = fixedIterationSums(points, model, scale)
+        val s = fixedIterationSums(slices, model, scale)
         val k = model.k
         val weights = new Array[Double](k)
         val means = new Array[Double](k)
@@ -348,16 +413,16 @@ object EM {
     }
   }
 
-  /** Runs ONE job for a fixed-point iteration: each partition's points
+  /** Runs ONE job for a fixed-point iteration: each range of each slice
     * folded through [[GmmSuffStatsAggregator.reduce]], the buffers merged
-    * in partition order. */
-  private def fixedIterationSums(points: RDD[Array[Double]], m: GmmModel, scale: Int): Array[Long] = {
+    * in slice order. */
+  private def fixedIterationSums(slices: RDD[Span], m: GmmModel, scale: Int): Array[Long] = {
     requireNonZeroVariances(m)
     val agg = new GmmSuffStatsAggregator(m.weights, m.means, m.variances, scale)
-    points.map { xs =>
+    slices.map { case (xs, from, until) =>
       val buf = agg.zero
-      var i = 0
-      while (i < xs.length) { agg.reduce(buf, xs(i)); i += 1 }
+      var i = from
+      while (i < until) { agg.reduce(buf, xs(i)); i += 1 }
       buf
     }.collect().foldLeft(agg.zero)(agg.merge)
   }

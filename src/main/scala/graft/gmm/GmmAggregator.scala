@@ -23,12 +23,13 @@ final case class GmmSuffStats(
   * Integer sums are exact and commutative, so the result does not depend
   * on partitioning or merge order (see graft.util.Det).
   *
-  * The per-point arithmetic is what Spark generates for
+  * The per-point arithmetic gives, bit for bit, what Spark generates for
   * `Det.toFixed(w_j * Gaussian.pdf(x, mu_j, s2_j) / mix, scale)` and its
-  * `* x`, `* x * x` forms, operation for operation (EMKernelSpec pins it):
-  * `StrictMath.exp`/`pow`/`log`, `Math.sqrt`, the same association order,
-  * and Spark's `mix > 0`, which holds for NaN. The log term skips a
-  * `-Infinity` log (the reference's guard, Main.scala:112).
+  * `* x`, `* x * x` forms (EMKernelSpec pins it): `StrictMath.exp`/`log`,
+  * `Math.sqrt`, the same association order, and Spark's `mix > 0`, which
+  * holds for NaN. The square is `d * d`, which is what
+  * `StrictMath.pow(d, 2.0)` returns. The log term skips a `-Infinity` log
+  * (the reference's guard, Main.scala:112).
   */
 final class GmmSuffStatsAggregator(
     weights: Array[Double], means: Array[Double], variances: Array[Double],
@@ -52,8 +53,8 @@ final class GmmSuffStatsAggregator(
     var mix = 0.0
     var j = 0
     while (j < k) {
-      wp(j) = weights(j) *
-        (StrictMath.exp(-StrictMath.pow(x - means(j), 2.0) / twoVar(j)) / sqrtNorm(j))
+      val d = x - means(j)
+      wp(j) = weights(j) * (StrictMath.exp(-(d * d) / twoVar(j)) / sqrtNorm(j))
       mix += wp(j)
       j += 1
     }

@@ -16,6 +16,10 @@ class EMKernelSpec extends SparkSpec {
   private val model = GmmModel(
     Array(0.5, 0.3, 0.2), Array(20.0, 60.0, 150.0), Array(400.0, 900.0, 2500.0))
 
+  /** The kernel over a whole array. */
+  private def sums(xs: Array[Double], m: GmmModel, variant: EM.Variant): Array[Double] =
+    EM.partitionSums(xs, 0, xs.length, m, variant)
+
   private def eventValues(): Array[Double] =
     Tables.events(spark, sf).select(col("value").cast("double"))
       .where(col("value").isNotNull).as[Double].collect()
@@ -48,7 +52,7 @@ class EMKernelSpec extends SparkSpec {
 
   test("textbook kernel sums match GmmSuffStatsAggregator within its rounding") {
     val xs = eventValues()
-    val got = EM.partitionSums(xs, model, EM.Textbook)
+    val got = sums(xs, model, EM.Textbook)
     val agg = new GmmSuffStatsAggregator(model.weights, model.means, model.variances)
     val want = xs.toSeq.toDF("x").as[Double](Encoders.scalaDouble).select(agg.toColumn).head()
     val tol = xs.length * 0.5e-6
@@ -67,7 +71,7 @@ class EMKernelSpec extends SparkSpec {
     // the variance, so realistic ones underflow every point
     val m = GmmModel(Array(0.5, 0.3, 0.2), Array(20.0, 60.0, 150.0), Array(0.002, 0.001, 0.0005))
     val xs = eventValues()
-    val got = EM.partitionSums(xs, m, EM.RefCompat)
+    val got = sums(xs, m, EM.RefCompat)
     val weighted = (0 until m.k).map(j =>
       lit(m.weights(j)) * Gaussian.refPdf(col("x"), m.means(j), m.variances(j)))
     val want = sqlSums(xs.toSeq.toDF("x"), weighted, normalize = false)
@@ -92,7 +96,7 @@ class EMKernelSpec extends SparkSpec {
         .select(col("x") +: terms: _*).collect()
       rows.foreach { r =>
         val want = Array.tabulate(terms.size)(i => if (r.isNullAt(i + 1)) 0.0 else r.getDouble(i + 1))
-        val got = EM.partitionSums(Array(r.getDouble(0)), m, variant)
+        val got = sums(Array(r.getDouble(0)), m, variant)
         withClue(s"$variant x=${r.getDouble(0)}: ${got.toSeq} vs ${want.toSeq}") {
           got.zip(want).forall { case (g, w) => g == w || (g.isNaN && w.isNaN) } shouldBe true
         }
@@ -138,12 +142,12 @@ class EMKernelSpec extends SparkSpec {
   test("underflowed points get gamma = 1/k and no log term; all underflowed is -inf") {
     val m = GmmModel(Array(0.5, 0.5), Array(0.0, 1.0), Array(1.0, 1.0))
     // exp(-(1e6)^2 / 2) underflows to 0 for both components: mix = 0
-    val far = EM.partitionSums(Array(1e6), m, EM.Textbook)
+    val far = sums(Array(1e6), m, EM.Textbook)
     far.toSeq shouldBe Seq(0.5, 0.5e6, 0.5e12, 0.5, 0.5e6, 0.5e12, 0.0, 0.0, 0.0)
     EM.logLikelihood(far) shouldBe Double.NegativeInfinity
 
     val mixed = Array(0.0, 1e6, 0.5, -1e6)
-    val s = EM.partitionSums(mixed, m, EM.Textbook)
+    val s = sums(mixed, m, EM.Textbook)
     s(3 * m.k + 2) shouldBe 2.0
     EM.logLikelihood(s) should not be Double.NegativeInfinity
     s.toSeq shouldBe
@@ -155,8 +159,8 @@ class EMKernelSpec extends SparkSpec {
     val sql = sqlSums(spark.sparkContext.parallelize(allFar.toSeq, 1).toDF("x"),
       textbookWeighted(m), normalize = true)
     sql(3 * m.k + 2) shouldBe 0.0
-    EM.logLikelihood(EM.partitionSums(allFar, m, EM.Textbook)) shouldBe Double.NegativeInfinity
-    EM.logLikelihood(EM.partitionSums(allFar, m, EM.RefCompat)) shouldBe Double.NegativeInfinity
+    EM.logLikelihood(sums(allFar, m, EM.Textbook)) shouldBe Double.NegativeInfinity
+    EM.logLikelihood(sums(allFar, m, EM.RefCompat)) shouldBe Double.NegativeInfinity
   }
 
   test("a component variance of exactly 0 fails the fit") {
@@ -189,6 +193,50 @@ class EMKernelSpec extends SparkSpec {
       ListenerBusDrain(sc)
     } finally sc.removeSparkListener(l)
     jobs.get shouldBe 1 + 5
+  }
+
+  test("the slices cover every point once, in order, and differ by at most one point") {
+    for {
+      sizes <- Seq(Array(700, 250, 50), Array(0, 5, 0, 3, 0), Array(1000), Array.empty[Int])
+      count <- Seq(1, 3, 4, spark.sparkContext.defaultParallelism, 7, 2000)
+    } withClue(s"sizes ${sizes.toSeq}, $count slices: ") {
+      val slices = EM.sliceRanges(sizes, count)
+      slices.length shouldBe count
+      val lengths = slices.map(_.map { case (_, from, until) => until - from }.sum)
+      (lengths.max - lengths.min) should be <= 1
+      slices.flatten.foreach { case (_, from, until) => from should be < until }
+      // the ranges, in slice order, are every partition's points in order
+      slices.flatten.toSeq.flatMap { case (p, from, until) => (from until until).map((p, _)) } shouldBe
+        sizes.indices.flatMap(p => (0 until sizes(p)).map((p, _)))
+    }
+  }
+
+  test("every iteration runs one task per core, whatever the scan partitions") {
+    // three unequal partitions, fewer than the cores: one task per
+    // partition would idle a core and wait on the 700-point one
+    val sizes = Seq(700, 250, 50)
+    val sc = spark.sparkContext
+    val df = sc.parallelize(sizes.indices, sizes.size).flatMap { p =>
+      val rnd = new scala.util.Random(p)
+      Seq.fill(sizes(p))(if (rnd.nextBoolean()) rnd.nextGaussian() else 6.0 + rnd.nextGaussian())
+    }.toDF("x")
+    df.rdd.glom().map(_.length).collect().toSeq shouldBe sizes
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = tasks.add(e.stageInfos.map(_.numTasks))
+    }
+    def taskLayout(fit: => Any): Seq[Seq[Int]] = {
+      ListenerBusDrain(sc)
+      tasks.clear()
+      sc.addSparkListener(l)
+      try { fit; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
+      tasks.toArray(Array.empty[Seq[Int]]).toSeq
+    }
+    val cores = sc.defaultParallelism
+    val want = Seq(3) +: Seq.fill(5)(Seq(cores))
+    taskLayout(EM.fit(df, "x", k = 2, maxIter = 5, tol = None, init = EM.SpreadInit)) shouldBe want
+    taskLayout(EM.fitFixedPoint(df, "x",
+      GmmModel(Array(0.5, 0.5), Array(0.0, 6.0), Array(1.0, 1.0)), iters = 5)) shouldBe want
   }
 
   test("a fit does not depend on the partition count beyond rounding") {

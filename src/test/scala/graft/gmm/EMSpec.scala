@@ -69,6 +69,32 @@ class EMSpec extends SparkSpec {
     m.weights.sum shouldBe 1.0 +- 1e-9
   }
 
+  test("SampleInit: a seeded fit is reproducible and starts from input points") {
+    val rnd = new scala.util.Random(5)
+    val xs = Seq.fill(300)(rnd.nextGaussian()) ++ Seq.fill(300)(8.0 + rnd.nextGaussian())
+    val df = xs.toDF("x")
+    // no iteration: the returned model is the initial one
+    val start = EM.fit(df, "x", k = 3, maxIter = 0, init = EM.SampleInit(17))
+    start.iterations shouldBe 0
+    start.model.means.distinct.length shouldBe 3
+    start.model.means.foreach(m => xs should contain(m))
+    val a = EM.fit(df, "x", k = 3, maxIter = 10, init = EM.SampleInit(17))
+    val b = EM.fit(df, "x", k = 3, maxIter = 10, init = EM.SampleInit(17))
+    a.iterations shouldBe 10
+    a.model.weights.toSeq shouldBe b.model.weights.toSeq
+    a.model.means.toSeq shouldBe b.model.means.toSeq
+    a.model.variances.toSeq shouldBe b.model.variances.toSeq
+    a.logLikelihood shouldBe b.logLikelihood
+  }
+
+  test("SampleInit on fewer than k non-null rows names the column, k and the row count") {
+    val df = Seq(Some(1.0), None, Some(2.0)).toDF("score")
+    val e = intercept[IllegalArgumentException](
+      EM.fit(df, "score", k = 3, maxIter = 5, init = EM.SampleInit(1)))
+    e.getMessage should include("3 non-null rows in score")
+    e.getMessage should include("found 2")
+  }
+
   test("fixed-point EM: bit-identical across partitionings, close to native fit") {
     val init = GmmModel(Array(0.5, 0.3, 0.2), Array(20.0, 60.0, 150.0),
       Array(400.0, 900.0, 2500.0))
