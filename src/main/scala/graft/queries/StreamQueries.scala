@@ -382,10 +382,9 @@ object StreamQueries {
         StreamHarness.stampChunk(in, 1)
         val stream = s.readStream.schema(chunk(0).schema)
           .option("maxFilesPerTrigger", "1").parquet(in)
-        val q = AnnIngest.writer(
+        val q = StreamingOps.start(s, AnnIngest.writer(
             stream, idxDir, edgesDir, k = 3, nProbe = 4, maxCellSize = 64)
-          .option("checkpointLocation", s"$root/ckpt")
-          .start()
+          .option("checkpointLocation", s"$root/ckpt"))
         q.awaitTermination()
         s.read.parquet(edgesDir)
           .select(col("_batch_id").cast("long").as("batch_id"),

@@ -81,75 +81,74 @@ object StreamHarness {
     val chunks = sys.props.get("graft.stream.chunks")
       .orElse(sys.env.get("SPARK_GRAFT_STREAM_CHUNKS"))
       .map(_.toInt).filter(_ > 1).getOrElse(0)
-    // transformWithState (ewma, running totals, timer sessions) requires
-    // the RocksDB state store; the default HDFSBackedStateStoreProvider
-    // rejects its multiple column families. Session-wide and harmless for
-    // the other state machines, which also run fine on RocksDB.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // The state-store partition count is fixed per CHECKPOINT at first
-    // run; this harness creates a fresh checkpoint every call, so scope
-    // the shuffle width down for the run: 32 RocksDB instances per
-    // stateful operator over a staged sub-GB table is pure per-instance
-    // overhead (~3x the wall time of the same pipeline at 4). Results
-    // are partition-count-independent; restored in finally.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     val rootPath = Files.createTempDirectory("graft-stream")
-    val root = rootPath.toString
-    val in = s"$root/in"
-    val tsCol = source.schema.fields
-      .find(_.dataType == org.apache.spark.sql.types.TimestampType)
-      .map(_.name)
-    val chunked = chunks > 1 && tsCol.isDefined
-    if (chunked) {
-      import org.apache.spark.sql.functions.col
-      val c = tsCol.get
-      // range boundaries from an approximate quantile sketch on epoch
-      // micros — distributed, no global sort of the staged table
-      val micros = source.select(
-        org.apache.spark.sql.functions.expr(s"unix_micros(`$c`)")
-          .cast("double").as("m"))
-      val probs = (1 until chunks).map(_.toDouble / chunks).toArray
-      val bounds = micros.stat.approxQuantile("m", probs, 0.01)
-        .map(_.toLong).distinct.sorted
-      val staged = source.persist()
-      staged.count()
-      val edges = ((Long.MinValue +: bounds) :+ Long.MaxValue).toSeq
-      edges.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
-        staged
-          .where(org.apache.spark.sql.functions.expr(s"unix_micros(`$c`)")
-            .between(lo, hi - 1))
-          .coalesce(1)
-          .write.mode(if (i == 0) "overwrite" else "append").parquet(in)
-        stampChunk(in, i) // distinct mtimes => deterministic batch order
-      }
-      staged.unpersist()
-    } else {
-      source.write.mode("overwrite").parquet(in)
-    }
-    val reader = spark.readStream.schema(source.schema)
-    val stream = (if (chunked) reader.option("maxFilesPerTrigger", "1")
-                  else reader).parquet(in)
     val name = s"graft_stream_sink_${seq.incrementAndGet()}"
-    val q = build(stream).writeStream
-      .format("memory").queryName(name).outputMode(outputMode)
-      .option("checkpointLocation", s"$root/ckpt")
-      .start()
-    try {
-      q.processAllAvailable()
-      flushes.foreach { f =>
-        f.write.mode("append").parquet(in)
-        q.processAllAvailable()
+    // Two confs scoped to the run, restored however it ends:
+    //  - transformWithState (ewma, running totals, timer sessions)
+    //    requires the RocksDB state store; the default
+    //    HDFSBackedStateStoreProvider rejects its multiple column
+    //    families. The other state machines also run fine on RocksDB.
+    //  - The state-store partition count is fixed per CHECKPOINT at first
+    //    run; this harness creates a fresh checkpoint every call, so the
+    //    shuffle width goes down for the run: 32 RocksDB instances per
+    //    stateful operator over a staged sub-GB table is pure
+    //    per-instance overhead (~3x the wall time of the same pipeline
+    //    at 4). Results are partition-count-independent.
+    try StreamingOps.withConfs(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.shuffle.partitions" -> "4") {
+      val root = rootPath.toString
+      val in = s"$root/in"
+      val tsCol = source.schema.fields
+        .find(_.dataType == org.apache.spark.sql.types.TimestampType)
+        .map(_.name)
+      val chunked = chunks > 1 && tsCol.isDefined
+      if (chunked) {
+        val c = tsCol.get
+        // range boundaries from an approximate quantile sketch on epoch
+        // micros — distributed, no global sort of the staged table
+        val micros = source.select(
+          org.apache.spark.sql.functions.expr(s"unix_micros(`$c`)")
+            .cast("double").as("m"))
+        val probs = (1 until chunks).map(_.toDouble / chunks).toArray
+        val bounds = micros.stat.approxQuantile("m", probs, 0.01)
+          .map(_.toLong).distinct.sorted
+        val staged = source.persist()
+        try {
+          staged.count()
+          val edges = ((Long.MinValue +: bounds) :+ Long.MaxValue).toSeq
+          edges.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
+            staged
+              .where(org.apache.spark.sql.functions.expr(s"unix_micros(`$c`)")
+                .between(lo, hi - 1))
+              .coalesce(1)
+              .write.mode(if (i == 0) "overwrite" else "append").parquet(in)
+            stampChunk(in, i) // distinct mtimes => deterministic batch order
+          }
+        } finally staged.unpersist()
+      } else {
+        source.write.mode("overwrite").parquet(in)
       }
-      lastProgress = q.recentProgress.toSeq
+      val reader = spark.readStream.schema(source.schema)
+      val stream = (if (chunked) reader.option("maxFilesPerTrigger", "1")
+                    else reader).parquet(in)
+      val q = StreamingOps.start(spark, build(stream).writeStream
+        .format("memory").queryName(name).outputMode(outputMode)
+        .option("checkpointLocation", s"$root/ckpt"))
+      try {
+        q.processAllAvailable()
+        flushes.foreach { f =>
+          f.write.mode("append").parquet(in)
+          q.processAllAvailable()
+        }
+        lastProgress = q.recentProgress.toSeq
+      } finally q.stop()
     } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       // The memory sink holds the committed result rows in the driver;
       // the staged input copy + RocksDB checkpoint (a full source-table
-      // footprint per query) are dead weight once the query stops —
-      // delete, or certification runs accumulate them in tmp.
+      // footprint per query) are dead weight once the query stops or the
+      // run fails — delete, or certification runs accumulate them in tmp.
       try {
         import scala.jdk.CollectionConverters._
         Files.walk(rootPath).iterator().asScala.toSeq.reverse

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
+  GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor,
+  StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Structured Streaming operators for the events stream (SURVEY.md §7.6):
   * the streaming duals of the batch EventQueries. Each transform takes a
@@ -18,6 +18,45 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * MemoryStream source.
   */
 object StreamingOps {
+
+  /** Runs `body` with `confs` set on `spark`, then restores each key to
+    * what it was before: its earlier explicit value, or unset when it had
+    * none. Restored also when `body` throws. */
+  private[graft] def withConfs[T](spark: SparkSession,
+      confs: (String, String)*)(body: => T): T = {
+    val explicit = spark.conf.getAll
+    val before = confs.map { case (k, _) => k -> explicit.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Starts a stream so that its tasks reuse the generated code that
+    * earlier runs of the same pipeline compiled. The one place under
+    * `src/main` that calls a stream writer's `start()`.
+    *
+    * Spark's codegen cache is keyed by the task thread's context class
+    * loader together with the generated source. `start()` clones the
+    * session, and under the default
+    * `spark.sql.artifact.isolation.enabled=true` each clone gets its own
+    * executor class-loader scope, so a byte-identical plan is compiled
+    * again on every start (~52 Janino classes per `stream_ann_ingest`
+    * run), and the cache and the executor's isolated-session cache keep
+    * the dead scope's loader and classes alive afterwards. Cloning copies
+    * the conf, so isolation is off for the stream's session alone: the
+    * conf is set on `spark` only around `start()` and restored at once.
+    *
+    * The toggle assumes streams are started from one thread: a session
+    * that another thread clones from `spark` during `start()` would also
+    * lose isolation, and that thread's own change to the key would be
+    * overwritten by the restore. */
+  def start(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery =
+    withConfs(spark, "spark.sql.artifact.isolation.enabled" -> "false") {
+      writer.start()
+    }
 
   /** Tumbling-window counts/sums per event type, tolerating `lateness`
     * of out-of-order data before a window closes (watermark). */

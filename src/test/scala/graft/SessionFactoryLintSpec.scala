@@ -13,6 +13,11 @@ import org.scalatest.matchers.should.Matchers
   * the test suite without the extensions), so any other builder call under
   * `src/` fails the build.
   *
+  * Stream starts go through [[graft.streaming.StreamingOps.start]], which
+  * keeps a started stream on the engine's generated code; any other
+  * `.start(` call under `src/main` fails the build. Specs start their
+  * streams directly.
+  *
   * Reachability: the oracle and the bench check only what `SparkEntry`
   * reaches, so a public operator that nothing in `src/main` calls is
   * untested by either. Each such function needs a place on [[Unreached]]. */
@@ -90,5 +95,22 @@ class SessionFactoryLintSpec extends AnyFunSuite with Matchers {
     val hits = files.filter(f => Files.readString(f.toPath).contains(Needle))
       .map(f => src.toPath.relativize(f.toPath).toString)
     hits shouldBe Seq("main/scala/graft/GraftSession.scala")
+  }
+
+  test("a stream writer's start() appears under src/main only in StreamingOps.start") {
+    val main = new File(repoRoot, "src/main/scala")
+    // a call on anything but StreamingOps itself
+    val StartCall = """(?<!StreamingOps)\.start\s*\(""".r
+    val hits = for {
+      f <- scalaFiles(main)
+      code = withoutComments(Files.readString(f.toPath))
+      m <- StartCall.findAllMatchIn(code)
+    } yield {
+      // the def whose body holds the call: the last one opened before it
+      val enclosing = """\bdef\s+([A-Za-z_]\w*)""".r
+        .findAllMatchIn(code.substring(0, m.start)).map(_.group(1)).toSeq.lastOption
+      s"${main.toPath.relativize(f.toPath)}:${enclosing.getOrElse("")}"
+    }
+    hits shouldBe Seq("graft/streaming/StreamingOps.scala:start")
   }
 }
