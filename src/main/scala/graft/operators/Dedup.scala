@@ -521,43 +521,6 @@ object Dedup {
       mass * bytesPerCandidate / scratchBudgetBytes.toDouble).toInt)
   }
 
-  /** [[containmentPairsPrefix]] as `passes` SEQUENTIAL band passes, each
-    * written before the next starts: peak shuffle scratch is ~1/passes of
-    * the single pass, which clears a corpus whose one-shot candidate
-    * shuffle exceeds the spill volume (graft.ContainmentStaged runs one
-    * JVM per pass for the same reason). Row-identical to the single pass.
-    * `passes = 0` derives the count from `scratchBudgetBytes`
-    * ([[deriveContainmentPasses]]). */
-  def containmentPairsPrefixStaged(keys: Keys, threshold: Double,
-      maxShingleDf: Long, passes: Int = 0,
-      scratchDir: Option[String] = None,
-      scratchBudgetBytes: Long = 24L << 30): DataFrame = {
-    require(passes >= 0, s"passes must be >= 0 (0 = derive), got $passes")
-    val dir = scratchDir.getOrElse(
-      graft.util.Scratch.dir("graft_containment_staged_"))
-    val (sh, arr, prefix0) = containmentStaging(keys, threshold, maxShingleDf)
-    // the derivation re-reads the prefix index — share its one
-    // computation with the band passes (`sh` is shared by the staging)
-    val prefix = if (passes >= 1) prefix0 else prefix0.stageShare()
-    val nPasses =
-      if (passes >= 1) passes
-      else deriveContainmentPasses(prefix, sh, scratchBudgetBytes)
-    // per band: CANDIDATE id pairs only, materialized — the banded key
-    // join is the scratch hog the decomposition bounds; array payloads
-    // never enter a band pass
-    (0 until nPasses).foreach { b =>
-      containmentCandidatesBand(prefix, sh, b, nPasses)
-        .write.mode("overwrite").parquet(s"$dir/cand_$b")
-    }
-    // verify ONCE over the distinct union: a pair can share prefix keys
-    // in several bands, so dedup BEFORE the (expensive, deterministic)
-    // array verification instead of re-verifying per band
-    val cand = arr.sparkSession.read
-      .parquet((0 until nPasses).map(b => s"$dir/cand_$b"): _*)
-      .distinct()
-    containmentVerify(cand, arr, threshold)
-  }
-
   /** Per-document SimHash fingerprints plus the nearest candidate within
     * `maxHamming` bits (candidates = documents sharing any 16-bit chunk
     * of the fingerprint — the standard chunk-blocking for Hamming space).
@@ -649,39 +612,6 @@ object Dedup {
         coalesce(col("covered_tokens"), lit(0L)).as("covered_tokens"),
         (coalesce(col("covered_tokens"), lit(0L)).cast("double") /
           col("n_tokens").cast("double")).as("dup_ratio"))
-  }
-
-  /** The removal action for [[spanDuplication]]: rebuild each document
-    * keeping only tokens NOT covered by a cross-doc duplicated k-gram.
-    * Duplicated span start positions are gathered per doc (array size ≤
-    * token count), and an indexed `filter` HOF drops covered tokens —
-    * per-doc O(tokens × dup-spans), fine because both are document-
-    * bounded; the corpus-scale work (finding the spans) is the same
-    * two-shuffle dataflow as the metric. */
-  def removeDuplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 5): DataFrame = {
-    // Same xxhash64 span-key shuffle as [[spanDuplication]].
-    val spans = docs.select(col(idCol).as("doc_id"),
-        posexplode(VectorExpressions.wordShinglesAll(col(textCol), k))
-          .as(Seq("pos", "span")))
-      .select(col("doc_id"), col("pos"), xxhash64(col("span")).as("sk"))
-    val crossDocSpans = spans.groupBy(col("sk"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .where(col("nd") >= 2)
-      .select(col("sk"))
-    val dupStarts = spans.join(crossDocSpans, Seq("sk"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("pos"))).as("starts"))
-    // Built from the RENAMED column: the frame below aliases textCol to
-    // "text", so resolving against textCol would fail for any textCol
-    // other than the literal name "text".
-    val toks = split(trim(col("text")), "\\s+")
-    docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .join(dupStarts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        concat_ws(" ", filter(toks, (t, i) =>
-          !exists(coalesce(col("starts"), array().cast("array<int>")),
-            p => i >= p && i < p + lit(k)))).as("clean_text"))
   }
 
   /** Suffix-array span duplication: every MAXIMAL repeated token span of

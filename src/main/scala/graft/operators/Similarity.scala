@@ -953,7 +953,7 @@ object Similarity {
       // streaming ingest: EXACTLY-ONCE per micro-batch — a dynamic
       // overwrite keyed by the batch's own partitions, so replaying a
       // crashed batch replaces its rows instead of duplicating them
-      // (the foreachBatchParquetSink recipe applied to the index)
+      // (the standard idempotent-sink recipe applied to the index)
       case Some(_) => assigned.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell", "_batch_id").parquet(s"$root/cells")

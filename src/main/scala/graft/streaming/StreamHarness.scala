@@ -22,9 +22,10 @@ import org.apache.spark.sql.DataFrame
   * which the timers/eviction actually run).
   *
   * This is a TEST harness for bounded correctness runs; the production
-  * path for the same pipelines is `writeStream` to a real sink
-  * (ParquetSink / StagedCommitSink). The memory sink bounds driver memory
-  * by the RESULT size (aggregated state), not the input.
+  * path for the same pipelines is `writeStream` to a real sink (a
+  * batch-id-keyed parquet write, as `stream_ann_ingest`'s foreachBatch
+  * does). The memory sink bounds driver memory by the RESULT size
+  * (aggregated state), not the input.
   */
 object StreamHarness {
   private val seq = new AtomicInteger(0)
@@ -84,10 +85,10 @@ object StreamHarness {
     val rootPath = Files.createTempDirectory("graft-stream")
     val name = s"graft_stream_sink_${seq.incrementAndGet()}"
     // Two confs scoped to the run, restored however it ends:
-    //  - transformWithState (ewma, running totals, timer sessions)
-    //    requires the RocksDB state store; the default
-    //    HDFSBackedStateStoreProvider rejects its multiple column
-    //    families. The other state machines also run fine on RocksDB.
+    //  - transformWithState (the ewma processor) requires the RocksDB
+    //    state store; the default HDFSBackedStateStoreProvider rejects
+    //    its multiple column families. The other state machines also run
+    //    fine on RocksDB.
     //  - The state-store partition count is fixed per CHECKPOINT at first
     //    run; this harness creates a fresh checkpoint every call, so the
     //    shuffle width goes down for the run: 32 RocksDB instances per

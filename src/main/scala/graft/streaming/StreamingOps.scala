@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
-  GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor,
-  StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery,
+  TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Structured Streaming operators for the events stream (SURVEY.md §7.6):
   * the streaming duals of the batch EventQueries. Each transform takes a
@@ -88,9 +88,7 @@ object StreamingOps {
     * Scope: exact for watermark lateness 0 (the spec's deployment).
     * A gap crossed INSIDE one micro-batch emits the earlier session
     * immediately; with lateness > 0 an admissible late event could have
-    * bridged that gap, so for late-tolerant pipelines use
-    * [[sessionizeWithTimers]], which never emits from input processing
-    * (its documented invariant) and holds sessions until the timer. */
+    * bridged that gap, and the two sessions then stay split. */
   def sessionize(events: Dataset[Event], gapMs: Long = 1800000L,
       lateness: String = "0 seconds"): Dataset[Session] = {
     import events.sparkSession.implicits._
@@ -170,13 +168,6 @@ object StreamingOps {
       }
   }
 
-  /** Streaming exact dedup on a key expression within the watermark
-    * horizon — `dropDuplicates` with event-time bound state. */
-  def streamingDedup(events: DataFrame, lateness: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Streaming CONTENT dedup: normalized-text fingerprints
     * (graft.operators.TextAnalysis.fingerprint) deduplicated within the
     * watermark horizon — the streaming face of the batch exact-dedup
@@ -186,28 +177,6 @@ object StreamingOps {
   def streamingContentDedup(docs: DataFrame, lateness: String = "1 hour"): DataFrame =
     docs
       .withColumn("fingerprint", graft.operators.TextAnalysis.fingerprint(col("text")))
-      .withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("fingerprint")
-
-  /** Streaming INGEST CURATION: the batch curation gate composed as one
-    * streaming-safe transform — per-row quality scoring (stateless column
-    * expressions), a score threshold, then content-fingerprint dedup
-    * bounded by the watermark horizon. Docs stream in as (doc_id, ts,
-    * text); survivors carry their score and fingerprint. The only state
-    * is the dedup key set inside the watermark — the same pipeline a
-    * 100 TB/day ingest runs ahead of the batch curation stages, and the
-    * SAME function applied to a static frame is the batch reference
-    * (parity asserted in StreamingSpec). */
-  def streamingCurate(
-      docs: DataFrame, minScore: Double = 0.5,
-      lateness: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("quality_score",
-        graft.operators.TextAnalysis.qualityFeatures(col("text"))
-          .getField("quality_score"))
-      .where(col("quality_score") >= minScore)
-      .withColumn("fingerprint",
-        graft.operators.TextAnalysis.fingerprint(col("text")))
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark("fingerprint")
 
@@ -257,40 +226,6 @@ object StreamingOps {
       .agg(counts.head, counts.tail: _*)
       .withColumn("n", total)
       .select(col("window.start").as("window_start"), col("n"), psi.as("psi"))
-  }
-
-  case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Spark 4 arbitrary-state operator (`transformWithState`): per-user
-    * running totals in a typed ValueState slot, re-emitted every
-    * micro-batch (Update mode). This is the modern replacement for
-    * mapGroupsWithState — named state slots (value/list/map) with
-    * per-slot TTL, timers, and the RocksDB state-store backend (required:
-    * set spark.sql.streaming.stateStore.providerClass to
-    * RocksDBStateStoreProvider). At scale the state lives off-heap in
-    * RocksDB with incremental checkpointing to the checkpoint location —
-    * state size is bounded by distinct keys, not stream length. */
-  class RunningTotalsProcessor
-      extends StatefulProcessor[Long, Event, UserRunning] {
-    @transient private var agg: ValueState[(Long, Double)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      agg = getHandle.getValueState[(Long, Double)]("agg",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble), TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[UserRunning] = {
-      var (n, tot) = if (agg.exists()) agg.get() else (0L, 0.0)
-      rows.foreach { e => n += 1; tot += e.value }
-      agg.update((n, tot))
-      Iterator(UserRunning(key, n, tot))
-    }
-  }
-
-  /** Running per-user (count, sum) via [[RunningTotalsProcessor]]. */
-  def runningTotals(events: Dataset[Event]): Dataset[UserRunning] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 
   /** Streaming TOP-K per group: the bounded-heap aggregate
@@ -351,91 +286,6 @@ object StreamingOps {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** Gap-session state machine on the Spark 4 arbitrary-state API with
-    * EVENT-TIME TIMERS: the same sessionization semantics as [[sessionize]]
-    * but expressed as a [[StatefulProcessor]] — state in a named
-    * ListState slot, idle-session eviction via `registerTimer`, emission
-    * in `handleExpiredTimer` when the watermark crosses session end + gap.
-    *
-    * A session is NEVER emitted from `handleInputRows`, even when a gap
-    * is crossed inside one micro-batch: until the watermark passes
-    * `end + gap`, a still-admissible late event can land inside that gap
-    * and must extend or even bridge sessions. So the state is the full
-    * list of not-yet-final sessions per key, input rows interval-merge
-    * into it (an event joins a session within `gap` of it; two sessions
-    * a bridging event connects coalesce into one), and finalization
-    * happens only in the timer callback — the point where `watermark >
-    * end + gap` guarantees no admissible event can reach the session.
-    * Exactly one live timer per key (re-armed at the earliest pending
-    * close horizon), so timer state is O(keys) alongside the RocksDB
-    * list state; the list length is bounded by the number of distinct
-    * in-flight sessions inside the watermark delay, typically 1-2. */
-  class SessionTimerProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Event, Session] {
-    @transient private var sess: ListState[SessionState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getListState[SessionState]("sess",
-        Encoders.product[SessionState], TTLConfig.NONE)
-
-    private def toSession(key: Long, s: SessionState): Session =
-      Session(key, new java.sql.Timestamp(s.start),
-        new java.sql.Timestamp(s.end), s.n, s.total)
-
-    /** Coalesce sessions sorted by start: neighbors within `gapMs` merge
-      * (sums accumulate in event-time order — same order as the batch
-      * sessionization's running sum). */
-    private def coalesceSessions(xs: Seq[SessionState]): List[SessionState] =
-      xs.sortBy(s => (s.start, s.end)).foldLeft(List.empty[SessionState]) {
-        case (h :: t, s) if s.start - h.end <= gapMs =>
-          SessionState(h.start, math.max(h.end, s.end),
-            h.n + s.n, h.total + s.total) :: t
-        case (acc, s) => s :: acc
-      }.reverse
-
-    private def armTimer(pending: Seq[SessionState]): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      if (pending.nonEmpty)
-        getHandle.registerTimer(pending.map(_.end).min + gapMs)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[Session] = {
-      val singletons = rows.map(e =>
-        SessionState(e.ts.getTime, e.ts.getTime, 1, e.value)).toSeq
-      val merged = coalesceSessions(sess.get().toSeq ++ singletons)
-      sess.clear()
-      merged.foreach(sess.appendValue)
-      armTimer(merged)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Session] = {
-      val horizon = math.max(timerValues.getCurrentWatermarkInMs(),
-        expiredTimerInfo.getExpiryTimeInMs())
-      val (done, live) = sess.get().toSeq.partition(_.end + gapMs <= horizon)
-      sess.clear()
-      live.foreach(sess.appendValue)
-      armTimer(live)
-      done.sortBy(_.start).iterator.map(toSession(key, _))
-    }
-  }
-
-  /** Per-user gap sessions via [[SessionTimerProcessor]] (event-time
-    * timers). `lateness` bounds out-of-order arrival; sessions close when
-    * the watermark passes last-event + gap. */
-  def sessionizeWithTimers(
-      events: Dataset[Event], gapMs: Long = 1800000L,
-      lateness: String = "1 minute"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .as[Event]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionTimerProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
   /** Stream-static enrichment join: each streaming event joined to a
     * STATIC dimension table (here: per-user attributes). The static side
     * is broadcast — no streaming state at all, and the dim table is
@@ -444,27 +294,6 @@ object StreamingOps {
     * "attach metadata to an ingest stream". */
   def enrichWithDim(events: DataFrame, dim: DataFrame, key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left")
-
-  /** Micro-batch sink with exactly-once-per-batch semantics: foreachBatch
-    * writing each batch to a parquet dir partitioned by `partitionCol`,
-    * tagged with the batch id for idempotent replay (a restarted query
-    * re-running batch N overwrites batch N's rows instead of duplicating
-    * them — the standard idempotent-sink recipe when the target has no
-    * transactional MERGE). */
-  def foreachBatchParquetSink(
-      transformed: DataFrame, path: String, partitionCol: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    transformed.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // dynamic partition overwrite keyed by batch id: replaying a batch
-        // replaces exactly its own partition, nothing else
-        batch.withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id", partitionCol)
-          .parquet(path)
-      }
 
   /** Stream-stream inner join: each click joined to the same user's
     * purchases within (click_ts, click_ts + window]. Both sides carry

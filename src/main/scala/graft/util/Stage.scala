@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftBridge}
 
 /** Lineage truncation for iterative operators (CC, pagerank, k-means,
   * BPE merge rounds, …) with a cluster-durability knob.
@@ -18,9 +18,10 @@ import org.apache.spark.sql.Dataset
   *    `checkpoint()` to that directory (HDFS/object store on a cluster),
   *    recomputable after any executor loss.
   *
-  * Both are EAGER, so the caller's contract — "this frame is
-  * materialized once and every downstream branch reuses it" — is
-  * identical either way; a spec asserts result equality across modes.
+  * [[checkpointWith]] holds that switch once; [[apply]] is its eager
+  * form. The caller's contract — "this frame is materialized once and
+  * every downstream branch reuses it" — is identical in both modes;
+  * StageSpec asserts equal results and pins each mode's job count.
   *
   * Checkpoint-file lifecycle: Spark deletes a reliable checkpoint's
   * files when its RDD is GC'd ONLY under
@@ -34,29 +35,16 @@ import org.apache.spark.sql.Dataset
 object Stage {
   val ConfKey = "spark.graft.checkpointDir"
 
-  def apply[T](ds: Dataset[T]): Dataset[T] = {
-    val spark = ds.sparkSession
-    spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        // setCheckpointDir materializes a UUID subdir under `dir`; set it
-        // once per context (first staged frame wins — the knob is meant
-        // to be fixed for a job, not varied mid-query)
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(dir)
-        // Reliable checkpoint runs TWO jobs: the eager count, then the
-        // checkpoint-file write — each recomputing the plan unless it is
-        // cached. Cache across the pair so the frame is computed once
-        // (the write job reads cache blocks), then release: downstream
-        // reads come from the checkpoint files, not the cache.
-        ds.persist()
-        try ds.checkpoint()
-        finally ds.unpersist()
-      case None => ds.localCheckpoint()
-    }
-  }
+  /** An EAGER checkpoint: [[checkpointWith]] whose action writes the
+    * checkpoint itself, in the one job `Dataset.checkpoint(eager = true)`
+    * runs in either mode. A counting action would cost a job more in
+    * reliable mode (the count, then the write) and, as `count()`, can
+    * add an AQE stage job. */
+  def apply[T](ds: Dataset[T]): Dataset[T] =
+    checkpointWith(ds)(GraftBridge.checkpointNow)._1
 
-  /** [[apply]] fused with the caller's first action: a LAZY checkpoint
-    * whose materializing job IS `action`'s own, so an iterative loop that
+  /** A LAZY checkpoint fused with the caller's first action: the
+    * materializing job IS `action`'s own, so an iterative loop that
     * truncates lineage AND needs something off the iterate — the CC
     * fixpoint check's count (`checkpointWith(ds)(_.count())`), the IVF
     * delta path's DISTINCT PROBED-CELL collect — pays ONE job per
@@ -73,8 +61,17 @@ object Stage {
     val spark = ds.sparkSession
     spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
+        // setCheckpointDir materializes a UUID subdir under `dir`; set it
+        // once per context (first staged frame wins — the knob is meant
+        // to be fixed for a job, not varied mid-query)
         if (spark.sparkContext.getCheckpointDir.isEmpty)
           spark.sparkContext.setCheckpointDir(dir)
+        // Unless the action is the write itself ([[apply]]), a lazy
+        // reliable checkpoint runs TWO jobs: the action, then the
+        // checkpoint-file write — each recomputing the plan unless it is
+        // cached. Cache across the pair so the frame is computed once
+        // (the write job reads cache blocks), then release: downstream
+        // reads come from the checkpoint files, not the cache.
         ds.persist()
         try { val c = ds.checkpoint(eager = false); (c, action(c)) }
         finally ds.unpersist()

@@ -19,8 +19,10 @@ import org.scalatest.matchers.should.Matchers
   * streams directly.
   *
   * Reachability: the oracle and the bench check only what `SparkEntry`
-  * reaches, so a public operator that nothing in `src/main` calls is
-  * untested by either. Each such function needs a place on [[Unreached]]. */
+  * reaches, so code under `src/main` that nothing else in `src/main`
+  * names is untested by either. A public `def` no other code calls
+  * needs a place on [[Unreached]]; a file whose types no other file
+  * names needs a `main`. */
 class SessionFactoryLintSpec extends AnyFunSuite with Matchers {
 
   // split so this file does not match its own needle
@@ -39,53 +41,57 @@ class SessionFactoryLintSpec extends AnyFunSuite with Matchers {
       else Nil
     }
 
-  /** Public defs under operators/, streaming/ and functions/ that no code
-    * in src/main references. Each keeps a SURVEY.md §2 capability that no
-    * declared query covers yet; the comment names the query that should. */
+  /** Public defs that no code in src/main references: references the
+    * specs compare the engine against, each named with its spec. */
   private val Unreached = Seq(
-    // Streaming "watermark dedup (id + content)": stream_dedup_content
-    // covers content; a stream_dedup_id row should cover the id form
-    "streamingDedup",
-    // Streaming "streaming ingest curation": a stream_curate row
-    "streamingCurate",
-    // Streaming "transformWithState typed-state running totals": a
-    // stream_running_totals row, batch dual window_running_sum
-    "runningTotals",
-    // Streaming "event-time-TIMER sessionization": stream_sessions runs
-    // the flatMapGroupsWithState form; a stream_sessions_timers row
-    "sessionizeWithTimers",
-    // Streaming "idempotent foreachBatch parquet sink": a stream_* row
-    // that writes through it (stream_ann_ingest has its own sink)
-    "foreachBatchParquetSink",
-    // Dedup "span-coverage + removal": dedup_span_coverage covers the
-    // metric; a dedup_span_removal row should cover the rewrite
-    "removeDuplicatedSpans",
-    // Dedup "containment-STAGED": dedup_containment runs the one-pass
-    // prefix join; a staged dedup_containment row at passes > 1
-    "containmentPairsPrefixStaged",
     // Dedup "containment": the unfiltered reference the prefix path is
     // spec-checked against (NewOpsR8Spec); dedup_containment covers the
     // capability through the prefix path
-    "containmentPairs").sorted
+    "containmentPairs",
+    // Gaussian.refPdf: the reference program's density, which the
+    // RefCompat kernel's sums are checked against (EMKernelSpec)
+    "refPdf").sorted
+
+  /** Entry points: what a launcher calls, so nothing in src/main does. */
+  private val Roots = Set("main", "entry")
 
   private val PublicDef = """(?m)^  (?:final |@inline )*def ([A-Za-z_]\w*)""".r
+  private val Ident = "[A-Za-z_]\\w*".r
 
   private def withoutComments(code: String): String =
     code.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
 
-  test("every public def in operators/, streaming/ and functions/ has a caller in src/main") {
+  /** Every src/main file's path under src/main/scala, without comments. */
+  private def mainCode: Map[String, String] = {
     val main = new File(repoRoot, "src/main/scala")
-    val code = scalaFiles(main).map(f => f.getCanonicalPath -> withoutComments(Files.readString(f.toPath))).toMap
-    val defs = for {
-      dir <- Seq("operators", "streaming", "functions")
-      f <- scalaFiles(new File(main, s"graft/$dir"))
-      m <- PublicDef.findAllMatchIn(code(f.getCanonicalPath))
-    } yield m.group(1)
+    scalaFiles(main).map(f => main.toPath.relativize(f.toPath).toString ->
+      withoutComments(Files.readString(f.toPath))).toMap
+  }
+
+  test("every public def in src/main has a caller in src/main") {
+    val code = mainCode
+    val defs = code.values.flatMap(PublicDef.findAllMatchIn(_).map(_.group(1)))
+      .toSet -- Roots
     defs should not be empty
     // every identifier in src/main except the name a `def` introduces
     val used = code.values.flatMap(c =>
-      "[A-Za-z_]\\w*".r.findAllIn(c.replaceAll("\\bdef\\s+[A-Za-z_]\\w*", ""))).toSet
-    defs.distinct.filterNot(used).sorted shouldBe Unreached
+      Ident.findAllIn(c.replaceAll("\\bdef\\s+[A-Za-z_]\\w*", ""))).toSet
+    defs.filterNot(used).toSeq.sorted shouldBe Unreached
+  }
+
+  test("every src/main file without a main has a type another src/main file names") {
+    val code = mainCode
+    val TopLevelType =
+      """(?m)^(?:(?:final|sealed|abstract|case|implicit|private\[\w+\])\s+)*(?:class|object|trait)\s+([A-Za-z_]\w*)""".r
+    val MainDef = """\bdef\s+main\s*\(""".r
+    val idents = code.map { case (f, c) => f -> Ident.findAllIn(c).toSet }
+    val orphans = code.collect {
+      case (f, c) if MainDef.findFirstIn(c).isEmpty &&
+          !TopLevelType.findAllMatchIn(c).map(_.group(1)).exists(t =>
+            idents.exists { case (g, ids) => g != f && ids(t) }) => f
+    }
+    code.size should be > 1
+    orphans.toSeq.sorted shouldBe Nil
   }
 
   test("SparkSession.builder appears under src/ only in GraftSession") {

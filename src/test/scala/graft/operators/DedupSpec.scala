@@ -117,20 +117,6 @@ class DedupSpec extends SparkSpec {
     got(5L) should (be >= 0.5 and be < 1.0) // shares base's spans, not the tail
   }
 
-  test("removeDuplicatedSpans drops exactly the cross-doc spans") {
-    val docs = Seq(
-      (0L, "alpha beta gamma delta epsilon zeta unique one"),
-      (1L, "prefix words alpha beta gamma delta epsilon zeta suffix"),
-      (2L, "totally different text with no shared five gram")).toDF("doc_id", "text")
-    val cleaned = Dedup.removeDuplicatedSpans(docs, "doc_id", "text", k = 5)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // shared 6-token run covers spans starting at its first 2 positions:
-    // tokens alpha..zeta go; the unshared tails stay
-    cleaned(0L) shouldBe "unique one"
-    cleaned(1L) shouldBe "prefix words suffix"
-    cleaned(2L) shouldBe "totally different text with no shared five gram"
-  }
-
   test("murmur-kernel and md5-oracle-twin pipelines agree on planted duplicates") {
     // Exact duplicates have Jaccard 1.0, so EVERY banded-LSH variant must
     // surface them regardless of hash family; the planted near-dup is

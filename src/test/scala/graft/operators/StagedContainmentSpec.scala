@@ -20,15 +20,24 @@ class StagedContainmentSpec extends SparkSpec {
       r.getAs[Long]("shared"), r.getAs[Long]("n_a"),
       r.getAs[Long]("n_b"), r.getAs[Double]("containment"))).toSet
 
+  /** ContainmentStaged's composition: bands 0..passes−1 of the candidate
+    * join, their union, `distinct`, and ONE verify. */
+  private def staged(passes: Int) = {
+    val (sh, arr, prefix) = Dedup.containmentStaging(
+      keys, threshold = 0.5, maxShingleDf = 100)
+    val cand = (0 until passes)
+      .map(b => Dedup.containmentCandidatesBand(prefix, sh, b, passes))
+      .reduce(_ union _).distinct()
+    rows(Dedup.containmentVerify(cand, arr, threshold = 0.5))
+  }
+
   test("staged band-passes ∘ distinct == single-pass containmentPairsPrefix " +
       "(passes = 3 and 5)") {
     val single = rows(Dedup.containmentPairsPrefix(
       keys, threshold = 0.5, maxShingleDf = 100))
     single should not be empty
     Seq(3, 5).foreach { p =>
-      val staged = rows(Dedup.containmentPairsPrefixStaged(
-        keys, threshold = 0.5, maxShingleDf = 100, passes = p))
-      withClue(s"passes=$p: ") { staged shouldBe single }
+      withClue(s"passes=$p: ") { staged(p) shouldBe single }
     }
   }
 
@@ -82,13 +91,10 @@ class StagedContainmentSpec extends SparkSpec {
     val third = math.max(1L, (mass * 48.0 / 3).toLong)
     val b3 = Dedup.deriveContainmentPasses(prefix, sh, third)
     b3 should (be >= 3 and be <= 4) // ceil rounding
-    // and the DERIVED plan is row-identical to hand-set and single-pass
+    // and the DERIVED plan is row-identical to the single pass
     val single = rows(Dedup.containmentPairsPrefix(
       keys, threshold = 0.5, maxShingleDf = 100))
-    val derived = rows(Dedup.containmentPairsPrefixStaged(
-      keys, threshold = 0.5, maxShingleDf = 100, passes = 0,
-      scratchBudgetBytes = third))
-    derived shouldBe single
+    staged(b3) shouldBe single
   }
 
   test("each band emits a subset; every single-pass pair appears in " +

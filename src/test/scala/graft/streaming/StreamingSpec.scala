@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.{SparkSpec, Tables}
 import graft.streaming.StreamingOps.Event
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -22,6 +23,19 @@ class StreamingSpec extends SparkSpec {
   private def ts(min: Long) = new Timestamp(min * 60000L)
   private val flushA = Event(9001L, ts(10000), 999L, "flush", 0.0)
   private val flushB = Event(9002L, ts(10001), 999L, "flush", 0.0)
+
+  /** The idempotent micro-batch parquet sink the crash-resume cases
+    * write through: each batch overwrites only its own `_batch_id`
+    * partition, so a batch replayed after a kill replaces its rows. */
+  private def batchIdParquetSink(df: DataFrame, path: String, partitionCol: String) =
+    df.writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.withColumn("_batch_id", lit(batchId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("_batch_id", partitionCol)
+          .parquet(path)
+      }
 
   test("tumblingWindowStats: append-mode stream output equals the batch transform") {
     val events = Seq(
@@ -228,59 +242,6 @@ class StreamingSpec extends SparkSpec {
     spark.table("cdedup").select("doc_id").as[Long].collect().sorted shouldBe Array(1L, 3L)
   }
 
-  test("streamingCurate: quality gate + content dedup, batch parity") {
-    import StreamingSpec.Doc
-    val docs = Seq(
-      Doc(1, ts(1), "a clean well formed sentence about data processing engines"),
-      Doc(2, ts(2), "another clean sentence with reasonable words and length"),
-      Doc(3, ts(3), "!!!! ???? ,,,, ;;;; ::: garbage punctuation soup #### $$$$"),
-      Doc(4, ts(4), "A Clean  Well Formed sentence ABOUT data processing engines"), // dup of 1
-      Doc(5, ts(5), "x"))
-    val in = MemoryStream[Doc]
-    val q = StreamingOps.streamingCurate(in.toDF(), minScore = 0.5)
-      .writeStream.format("memory").queryName("curate").outputMode("append").start()
-    try {
-      in.addData(docs.take(3): _*); q.processAllAvailable()
-      in.addData(docs.drop(3): _*); q.processAllAvailable()
-    } finally q.stop()
-    // stream keeps the FIRST arrival per fingerprint: exactly docs 1, 2
-    spark.table("curate").select("doc_id").as[Long].collect().toSet shouldBe
-      Set(1L, 2L) // garbage, dup-of-1, and too-short are gone
-    // batch parity on the surviving CONTENT set: the batch dual is the
-    // same gate + plain dropDuplicates (dropDuplicatesWithinWatermark is
-    // streaming-only, and batch keeps an arbitrary representative — so
-    // compare fingerprints, not doc ids)
-    val batchFps = docs.toDF()
-      .withColumn("quality_score",
-        graft.operators.TextAnalysis.qualityFeatures(col("text"))
-          .getField("quality_score"))
-      .where(col("quality_score") >= 0.5)
-      .withColumn("fingerprint",
-        graft.operators.TextAnalysis.fingerprint(col("text")))
-      .dropDuplicates("fingerprint")
-      .select("fingerprint").as[String].collect().toSet
-    spark.table("curate").select("fingerprint").as[String].collect().toSet shouldBe
-      batchFps
-  }
-
-  test("streamingDedup: duplicate event_ids within the watermark are dropped") {
-    val in = MemoryStream[Event]
-    val q = StreamingOps.streamingDedup(in.toDF(), "1 hour")
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      in.addData(
-        Event(1, ts(1), 1, "view", 1.0),
-        Event(1, ts(2), 1, "view", 1.0),   // dup id, same batch
-        Event(2, ts(3), 2, "view", 2.0))
-      q.processAllAvailable()
-      in.addData(Event(1, ts(4), 1, "view", 1.0)) // dup id, later batch
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val ids = spark.table("dedup").select("event_id").as[Long].collect().sorted
-    ids shouldBe Array(1L, 2L)
-  }
-
   test("enrichWithDim: stream-static broadcast join attaches dim attributes") {
     val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
     val in = MemoryStream[Event]
@@ -297,33 +258,6 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_id"), col("tier")).as[(Long, Option[String])]
       .collect().toMap
     got shouldBe Map(1L -> Some("gold"), 2L -> Some("silver"), 3L -> None)
-  }
-
-  test("foreachBatchParquetSink: batch replay is idempotent per batch id") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fbsink").toString
-    val in = MemoryStream[Event]
-    val sink = StreamingOps.foreachBatchParquetSink(in.toDF(), dir, "event_type")
-      .option("checkpointLocation", s"$dir/_ckpt")
-    val q = sink.start()
-    try {
-      in.addData(Event(1, ts(1), 1, "view", 1.0), Event(2, ts(2), 1, "click", 2.0))
-      q.processAllAvailable()
-      in.addData(Event(3, ts(3), 2, "view", 3.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out1 = spark.read.parquet(dir)
-    out1.select("event_id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
-
-    // simulate a replay of batch 0: same rows, same batch id -> its
-    // partition is overwritten, not duplicated
-    Seq(Event(1, ts(1), 1, "view", 1.0), Event(2, ts(2), 1, "click", 2.0)).toDF()
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id", "event_type")
-      .parquet(dir)
-    val out2 = spark.read.parquet(dir)
-    out2.select("event_id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
   }
 
   test("streamingSuffStats: incremental state equals the batch suffstats pass") {
@@ -383,8 +317,9 @@ class StreamingSpec extends SparkSpec {
         val stream = spark.readStream.schema(f1.toDF().schema)
           .option("maxFilesPerTrigger", "1") // force multiple micro-batches
           .parquet(inDir)
-        StreamingOps.foreachBatchParquetSink(
-          StreamingOps.streamingDedup(stream), outDir, "event_type")
+        val deduped = stream.withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("event_id")
+        batchIdParquetSink(deduped, outDir, "event_type")
           .option("checkpointLocation", ckpt)
           .start()
       }
@@ -463,7 +398,7 @@ class StreamingSpec extends SparkSpec {
           stream.where(col("event_type") === "click"),
           stream.where(col("event_type") === "purchase"),
           window = "1 hour", lateness = "1 hour")
-        StreamingOps.foreachBatchParquetSink(joined, outDir, "user_id")
+        batchIdParquetSink(joined, outDir, "user_id")
           .option("checkpointLocation", ckpt)
           .start()
       }
@@ -530,72 +465,6 @@ class StreamingSpec extends SparkSpec {
     spark.read.parquet(outDir).count() shouldBe Tables.orders(spark, sf).count()
     spark.read.parquet(outDir).select("o_orderkey").distinct().count() shouldBe
       Tables.orders(spark, sf).count()
-  }
-
-  test("transformWithState timers: sessions evicted by event-time timer match sessionize") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val gapMs = 30L * 60000
-      val events = Seq(
-        Event(1, ts(1), 1, "view", 1.0),
-        Event(2, ts(10), 1, "click", 2.0),  // same session (gap 9 min)
-        Event(3, ts(100), 1, "view", 4.0),  // new session (gap 90 min)
-        Event(4, ts(5), 2, "view", 8.0))
-
-      val in = MemoryStream[Event]
-      val q = StreamingOps.sessionizeWithTimers(in.toDS(), gapMs)
-        .writeStream.format("memory").queryName("timersess")
-        .outputMode("append").start()
-      try {
-        in.addData(events: _*); q.processAllAvailable()
-        in.addData(flushA); q.processAllAvailable()
-        in.addData(flushB); q.processAllAvailable()
-      } finally q.stop()
-
-      val got = spark.table("timersess").where(col("user_id") < 999)
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-          r.getLong(3), r.getDouble(4))).toSet
-      got shouldBe Set(
-        (1L, ts(1), ts(10), 2L, 3.0),
-        (1L, ts(100), ts(100), 1L, 4.0),
-        (2L, ts(5), ts(5), 1L, 8.0))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("transformWithState runningTotals: final per-user state equals the batch aggregate") {
-    // transformWithState requires the RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // dyadic values: sums are exact in any accumulation order
-      val b1 = Seq(
-        Event(1, ts(1), 1, "view", 1.5),
-        Event(2, ts(2), 1, "click", 2.25),
-        Event(3, ts(3), 2, "view", 4.0))
-      val b2 = Seq(
-        Event(4, ts(4), 1, "view", 0.5),
-        Event(5, ts(5), 2, "click", 1.25))
-      val in = MemoryStream[Event]
-      val q = StreamingOps.runningTotals(in.toDS())
-        .writeStream.format("memory").queryName("twstate")
-        .outputMode("update").start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      // update mode re-emits a row per key per batch; the final state is
-      // the row with the highest running count
-      val got = spark.table("twstate")
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n_events"), col("total_value"))).as("m"))
-        .select(col("user_id"), col("m.n_events"), col("m.total_value"))
-        .as[(Long, Long, Double)].collect().toSet
-      val want = (b1 ++ b2).groupBy(_.user_id).map { case (u, es) =>
-        (u, es.size.toLong, es.map(_.value).sum)
-      }.toSet
-      got shouldBe want
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("streamingEwma: O(1)-state stream fold equals the batch collect+fold, across batches") {
