@@ -1,5 +1,7 @@
 package graft.gmm
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -22,7 +24,8 @@ import org.apache.spark.storage.StorageLevel
   *    sizes differ by at most one point, so no iteration waits on the
   *    largest scan split while a core idles. A slice is one or more
   *    (array, from, until) ranges of the cached arrays; nothing is copied.
-  *  - Each iteration is ONE job over the slices: a while-loop kernel
+  *  - Each iteration is ONE job over the slices, submitted straight to
+  *    `SparkContext.runJob` ([[runIteration]]): a block kernel
   *    ([[partitionSums]]) returns every sufficient statistic
   *    (sum gamma_k, sum gamma_k*x, sum gamma_k*x^2 for every k) plus the
   *    log-likelihood, 3k+3 doubles per range regardless of data size.
@@ -207,6 +210,11 @@ object EM {
   private val TwoPi = 2.0 * math.Pi
   private val Sqrt2Pi = math.sqrt(2.0 * math.Pi)
 
+  /** Points per block of [[partitionSums]]. A block's per-component
+    * terms and mixtures are (k + 1) * 512 doubles: 16 KB at k = 3, which
+    * a core's L1 data cache holds. */
+  private val Block = 512
+
   /** One EM iteration's sums over the points `xs(from until until)`, in
     * the layout [A_j, B_j, C_j for each j] ++ [D, sum log(mix), log terms].
     *
@@ -222,6 +230,14 @@ object EM {
     *    Spark holds for NaN too; elsewhere gamma_j = 1/k;
     *  - RefCompat gamma_j is the un-normalized w_j*pdf_j (the global
     *    denominator D is applied driver-side).
+    *
+    * The range is walked in blocks of [[Block]] points. Per block, one
+    * loop per component fills w_j*pdf_j and adds it into each point's
+    * mixture in component order; one loop per component sums g, g*x and
+    * g*x*x; one loop sums D; one loop sums the log terms. Every output
+    * slot is still one sequential sum over the points in point order, so
+    * the layout changes no bit of the result. It keeps `StrictMath.log`,
+    * a native call, out of the loops that do the rest of the work.
     */
   private[gmm] def partitionSums(
       xs: Array[Double], from: Int, until: Int, m: GmmModel, variant: Variant): Array[Double] = {
@@ -234,49 +250,97 @@ object EM {
     val sqrtNorm = v.map(s2 => Math.sqrt(TwoPi * s2))
     val refCoef = v.map(s2 => 1.0 / Math.sqrt(s2) * Sqrt2Pi)
     val invK = 1.0 / k
-    val wp = new Array[Double](k)
+    // wp(j * Block + i) = w_j*pdf_j of the block's point i
+    val wp = new Array[Double](k * Block)
+    val mix = new Array[Double](Block)
     val out = new Array[Double](3 * k + 3)
-    var i = from
-    while (i < until) {
-      val x = xs(i)
-      var mix = 0.0
+    var start = from
+    while (start < until) {
+      val n = math.min(Block, until - start)
+      java.util.Arrays.fill(mix, 0, n, 0.0)
       var j = 0
       while (j < k) {
-        val d = x - mu(j)
-        val sq = d * d
-        val pdf =
-          if (ref) refCoef(j) * StrictMath.exp(-(sq / 2.0) * v(j))
-          else StrictMath.exp(-sq / twoVar(j)) / sqrtNorm(j)
-        wp(j) = w(j) * pdf
-        mix += wp(j)
+        val base = j * Block
+        val wj = w(j)
+        val muj = mu(j)
+        var i = 0
+        if (ref) {
+          val coef = refCoef(j)
+          val vj = v(j)
+          while (i < n) {
+            val d = xs(start + i) - muj
+            val p = wj * (coef * StrictMath.exp(-(d * d / 2.0) * vj))
+            wp(base + i) = p
+            mix(i) += p
+            i += 1
+          }
+        } else {
+          val tv = twoVar(j)
+          val norm = sqrtNorm(j)
+          while (i < n) {
+            val d = xs(start + i) - muj
+            val p = wj * (StrictMath.exp(-(d * d) / tv) / norm)
+            wp(base + i) = p
+            mix(i) += p
+            i += 1
+          }
+        }
         j += 1
       }
-      val normalize = mix > 0.0 || mix != mix
       j = 0
       while (j < k) {
-        val g = if (ref) wp(j) else if (normalize) wp(j) / mix else invK
-        val gx = g * x
-        out(3 * j) += g
-        out(3 * j + 1) += gx
-        out(3 * j + 2) += gx * x
+        val base = j * Block
+        var a = out(3 * j)
+        var b = out(3 * j + 1)
+        var c = out(3 * j + 2)
+        var i = 0
+        while (i < n) {
+          val x = xs(start + i)
+          val mi = mix(i)
+          val g =
+            if (ref) wp(base + i)
+            else if (mi > 0.0 || mi != mi) wp(base + i) / mi
+            else invK
+          val gx = g * x
+          a += g
+          b += gx
+          c += gx * x
+          i += 1
+        }
+        out(3 * j) = a
+        out(3 * j + 1) = b
+        out(3 * j + 2) = c
         j += 1
       }
-      out(3 * k) += mix
-      if (!(mix <= 0.0)) {
-        out(3 * k + 1) += StrictMath.log(mix)
-        out(3 * k + 2) += 1.0
+      var dSum = out(3 * k)
+      var i = 0
+      while (i < n) { dSum += mix(i); i += 1 }
+      out(3 * k) = dSum
+      var ll = out(3 * k + 1)
+      var terms = out(3 * k + 2)
+      i = 0
+      while (i < n) {
+        val mi = mix(i)
+        if (!(mi <= 0.0)) {
+          ll += StrictMath.log(mi)
+          terms += 1.0
+        }
+        i += 1
       }
-      i += 1
+      out(3 * k + 1) = ll
+      out(3 * k + 2) = terms
+      start += n
     }
     out
   }
 
   /** Runs ONE job for an EM iteration: [[partitionSums]] per range of
-    * each slice, added up in slice order. */
+    * each slice, added up in slice order, submitted by [[runIteration]]. */
   private def iterationSums(slices: RDD[Span], m: GmmModel, variant: Variant): Array[Double] = {
     requireNonZeroVariances(m)
-    val parts = slices.map { case (xs, from, until) => partitionSums(xs, from, until, m, variant) }
-      .collect()
+    val parts = runIteration(slices) { case (xs, from, until) =>
+      partitionSums(xs, from, until, m, variant)
+    }
     val total = new Array[Double](3 * m.k + 3)
     parts.foreach { p =>
       var i = 0
@@ -284,6 +348,14 @@ object EM {
     }
     total
   }
+
+  /** Runs ONE job over the slices: `f` on every range of every slice, the
+    * results in slice order and, within a slice, in range order. The job
+    * goes straight to `SparkContext.runJob` on the slices, whose closure
+    * captures only `f`; `slices.map(f).collect()` would build and submit
+    * a new RDD for every iteration. */
+  private def runIteration[U: ClassTag](slices: RDD[Span])(f: Span => U): Array[U] =
+    slices.sparkContext.runJob(slices, (ranges: Iterator[Span]) => ranges.map(f).toArray).flatten
 
   /** The SQL forms divided by the variances; under ANSI a zero divisor
     * failed the query instead of yielding a number. */
@@ -419,11 +491,11 @@ object EM {
   private def fixedIterationSums(slices: RDD[Span], m: GmmModel, scale: Int): Array[Long] = {
     requireNonZeroVariances(m)
     val agg = new GmmSuffStatsAggregator(m.weights, m.means, m.variances, scale)
-    slices.map { case (xs, from, until) =>
+    runIteration(slices) { case (xs, from, until) =>
       val buf = agg.zero
       var i = from
       while (i < until) { agg.reduce(buf, xs(i)); i += 1 }
       buf
-    }.collect().foldLeft(agg.zero)(agg.merge)
+    }.foldLeft(agg.zero)(agg.merge)
   }
 }

@@ -104,6 +104,35 @@ class EMKernelSpec extends SparkSpec {
     }
   }
 
+  test("the block kernel is the point-order sum of single-point sums, bit for bit") {
+    // ranges that end and start mid-block, over far points (mix
+    // underflows: gamma = 1/k, no log term), ±0, and one NaN or ±Inf
+    // point; the case above pins each single-point sum to the SQL
+    val rnd = new scala.util.Random(17)
+    val finite = Array.tabulate(5 + 3 * 512 + 17) { i =>
+      if (i % 101 == 7) 1e6 else if (i % 101 == 50) -3e5
+      else if (i % 211 == 9) 0.0 else if (i % 211 == 99) -0.0
+      else rnd.nextGaussian() * 40.0 + 60.0
+    }
+    val inputs = finite +: Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .map(v => finite.updated(600, v))
+    val ref = GmmModel(Array(0.5, 0.3, 0.2), Array(20.0, 60.0, 150.0), Array(0.02, 0.01, 0.005))
+    def bits(a: Array[Double]): Seq[Long] = a.toSeq.map(java.lang.Double.doubleToLongBits)
+    for {
+      (variant, m) <- Seq((EM.Textbook, model), (EM.RefCompat, ref))
+      xs <- inputs
+      from <- Seq(0, 5)
+      len <- Seq(0, 1, 511, 512, 513, 3 * 512 + 17)
+    } withClue(s"$variant, x(600) = ${xs(600)}, from $from, $len points: ") {
+      val want = new Array[Double](3 * m.k + 3)
+      (from until from + len).foreach { i =>
+        val p = EM.partitionSums(xs, i, i + 1, m, variant)
+        want.indices.foreach(s => want(s) += p(s))
+      }
+      bits(EM.partitionSums(xs, from, from + len, m, variant)) shouldBe bits(want)
+    }
+  }
+
   test("fixed-point aggregator terms are bit-identical to SQL Det.toFixed, point by point") {
     // the input of the kernel case above: underflowed points get
     // gamma = 1/k and no log term; a NaN mix counts as `mix > 0`, so its
