@@ -668,37 +668,21 @@ object CurationQueries {
     //      shuffle on the key; the summary side is a 2-value broadcast.
     //      Counts are exact ints; share/skew are IEEE ratios of exact
     //      ints — bit-identical cross-engine. ----
-    QueryDef("profile_key_skew",
-      (s, d) => {
-        val counts = Tables.events(s, d)
-          .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-        val tot = counts.agg(count(lit(1)).as("n_keys"),
-          sum(col("cnt")).as("n_rows"))
-        val skew = col("cnt").cast("double") * col("n_keys").cast("double") /
-          col("n_rows").cast("double")
-        counts.crossJoin(broadcast(tot))
-          .select(col("user_id"), col("cnt"),
-            (col("cnt").cast("double") / col("n_rows").cast("double"))
-              .as("share"),
-            skew.as("skew_factor"),
-            ceil(skew).cast("long").as("salt_factor"))
-          .orderBy(col("cnt").desc, col("user_id")).limit(10)
-      },
-      oracle = Some(
-        """WITH counts AS (
-          |  SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY user_id
-          |), tot AS (
-          |  SELECT COUNT(*) AS n_keys, CAST(SUM(cnt) AS BIGINT) AS n_rows
-          |  FROM counts
-          |)
-          |SELECT user_id, cnt,
-          |  CAST(cnt AS DOUBLE) / CAST(n_rows AS DOUBLE) AS share,
-          |  CAST(cnt AS DOUBLE) * CAST(n_keys AS DOUBLE)
-          |    / CAST(n_rows AS DOUBLE) AS skew_factor,
-          |  CAST(CEIL(CAST(cnt AS DOUBLE) * CAST(n_keys AS DOUBLE)
-          |    / CAST(n_rows AS DOUBLE)) AS BIGINT) AS salt_factor
-          |FROM counts CROSS JOIN tot
-          |ORDER BY cnt DESC, user_id LIMIT 10""".stripMargin),
+    QueryDef.sql("profile_key_skew",
+      """WITH counts AS (
+        |  SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY user_id
+        |), tot AS (
+        |  SELECT COUNT(*) AS n_keys, CAST(SUM(cnt) AS BIGINT) AS n_rows
+        |  FROM counts
+        |)
+        |SELECT /*+ BROADCAST(tot) */ user_id, cnt,
+        |  CAST(cnt AS DOUBLE) / CAST(n_rows AS DOUBLE) AS share,
+        |  CAST(cnt AS DOUBLE) * CAST(n_keys AS DOUBLE)
+        |    / CAST(n_rows AS DOUBLE) AS skew_factor,
+        |  CAST(CEIL(CAST(cnt AS DOUBLE) * CAST(n_keys AS DOUBLE)
+        |    / CAST(n_rows AS DOUBLE)) AS BIGINT) AS salt_factor
+        |FROM counts CROSS JOIN tot
+        |ORDER BY cnt DESC NULLS LAST, user_id NULLS FIRST LIMIT 10""".stripMargin,
       bench = false),
 
     QueryDef("profile_columns",
@@ -843,6 +827,7 @@ object CurationQueries {
       bench = false),
 
     // ---- unpivot / melt (Dataset.unpivot; oracle = UNION ALL form) ----
+    // Kept as a DataFrame: one Expand over one scan, where the text plans a Union of four scans.
     QueryDef("unpivot_stack",
       (s, d) => Tables.lineitem(s, d)
         .where(col("l_orderkey") < 100)
@@ -974,31 +959,16 @@ object CurationQueries {
 
     // ---- correlated LATERAL subquery (top-2 orders per customer; the
     // decorrelation-into-window shape Catalyst plans for lateral joins) ----
-    QueryDef("join_lateral",
-      (s, d) => {
-        Tables.customer(s, d).createOrReplaceTempView("customer_lat")
-        Tables.orders(s, d).createOrReplaceTempView("orders_lat")
-        s.sql(
-          """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-            |FROM customer_lat c
-            |JOIN LATERAL (
-            |  SELECT o_orderkey, o_totalprice FROM orders_lat
-            |  WHERE o_custkey = c.c_custkey
-            |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
-            |) o
-            |WHERE c.c_custkey < 200
-            |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
-      },
-      oracle = Some(
-        """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-          |FROM customer c
-          |JOIN LATERAL (
-          |  SELECT o_orderkey, o_totalprice FROM orders
-          |  WHERE o_custkey = c.c_custkey
-          |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
-          |) o ON true
-          |WHERE c.c_custkey < 200
-          |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin),
+    QueryDef.sql("join_lateral",
+      """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+        |FROM customer c
+        |JOIN LATERAL (
+        |  SELECT o_orderkey, o_totalprice FROM orders
+        |  WHERE o_custkey = c.c_custkey
+        |  ORDER BY o_totalprice DESC NULLS LAST, o_orderkey NULLS FIRST LIMIT 2
+        |) o ON true
+        |WHERE c.c_custkey < 200
+        |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
       bench = false),
 
     // ---- bitwise aggregates + scalar bit ops ----
@@ -1920,6 +1890,7 @@ object CurationQueries {
     //      standard two-phase expand) plus one anti-join for the foreign
     //      key. All metrics are ratios/counts of exact BIGINTs, so the
     //      row set is bit-identical cross-engine. ----
+    // Kept as a DataFrame: its checks read one cached frame, where the text re-scans per check.
     QueryDef("quality_constraints",
       (s, d) => {
         val li = Tables.lineitem(s, d)

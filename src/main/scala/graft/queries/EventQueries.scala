@@ -134,22 +134,12 @@ object EventQueries {
            |ORDER BY user_id, session_seq""".stripMargin)),
 
     // ---- latest event per user (as-of snapshot via row_number) ----
-    QueryDef("events_latest_per_user",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-        Tables.events(s, d)
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .select(col("user_id"), col("event_id"), col("ts"), col("event_type"), col("value"))
-          .orderBy(col("user_id"))
-      },
-      oracle = Some(
-        """SELECT user_id, event_id, ts, event_type, value FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY user_id
-          |                               ORDER BY ts DESC, event_id DESC) AS rn
-          |  FROM events
-          |) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    QueryDef.sql("events_latest_per_user",
+      """SELECT user_id, event_id, ts, event_type, value FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY user_id
+        |                               ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events
+        |) WHERE rn = 1 ORDER BY user_id""".stripMargin,
       bench = false),
 
     // ---- as-of join: each purchase <- the user's latest click at or
@@ -378,25 +368,14 @@ object EventQueries {
            |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin)),
 
     // ---- lag/lead analytics ----
-    QueryDef("events_lag_lead",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        Tables.events(s, d)
-          .select(
-            col("user_id"), col("event_id"), col("ts"), col("value"),
-            lag(col("value"), 1).over(w).as("prev_value"),
-            lead(col("value"), 1).over(w).as("next_value"),
-            (col("value") - lag(col("value"), 1).over(w)).as("delta"))
-          .orderBy(col("user_id"), col("ts"), col("event_id"))
-      },
-      oracle = Some(
-        """SELECT user_id, event_id, ts, value,
-          |  lag(value) OVER w AS prev_value,
-          |  lead(value) OVER w AS next_value,
-          |  value - lag(value) OVER w AS delta
-          |FROM events
-          |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-          |ORDER BY user_id, ts, event_id""".stripMargin),
+    QueryDef.sql("events_lag_lead",
+      """SELECT user_id, event_id, ts, value,
+        |  lag(value) OVER w AS prev_value,
+        |  lead(value) OVER w AS next_value,
+        |  value - lag(value) OVER w AS delta
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |ORDER BY user_id, ts, event_id""".stripMargin,
       bench = false),
 
     // ---- pivot (conditional aggregation with a fixed column set) ----
@@ -672,29 +651,17 @@ object EventQueries {
     // match NULL keys, so a nullable dimension key still hash-joins (the
     // null bucket is a normal hash bucket, not a dropped row). Ordering
     // pinned NULLS FIRST on both engines (their defaults differ). ----
-    QueryDef("join_null_safe",
-      (s, d) => {
-        val a = Tables.events(s, d)
-          .groupBy(nullif(col("event_type"), lit("click")).as("k"))
-          .agg(count(lit(1)).as("n_all"))
-        val b = Tables.events(s, d).where(col("user_id") < 75)
-          .groupBy(nullif(col("event_type"), lit("click")).as("k2"))
-          .agg(count(lit(1)).as("n_small"))
-        a.join(b, col("k") <=> col("k2"))
-          .select(col("k"), col("n_all"), col("n_small"))
-          .orderBy(col("k").asc_nulls_first)
-      },
-      oracle = Some(
-        """WITH a AS (
-          |  SELECT nullif(event_type, 'click') AS k, count(*) AS n_all
-          |  FROM events GROUP BY 1
-          |), b AS (
-          |  SELECT nullif(event_type, 'click') AS k2, count(*) AS n_small
-          |  FROM events WHERE user_id < 75 GROUP BY 1
-          |)
-          |SELECT k, n_all, n_small
-          |FROM a JOIN b ON k IS NOT DISTINCT FROM k2
-          |ORDER BY k NULLS FIRST""".stripMargin),
+    QueryDef.sql("join_null_safe",
+      """WITH a AS (
+        |  SELECT nullif(event_type, 'click') AS k, count(*) AS n_all
+        |  FROM events GROUP BY 1
+        |), b AS (
+        |  SELECT nullif(event_type, 'click') AS k2, count(*) AS n_small
+        |  FROM events WHERE user_id < 75 GROUP BY 1
+        |)
+        |SELECT k, n_all, n_small
+        |FROM a JOIN b ON k IS NOT DISTINCT FROM k2
+        |ORDER BY k NULLS FIRST""".stripMargin,
       bench = false),
 
     // ---- funnel conversion (view -> click -> purchase, strictly ordered
@@ -702,6 +669,7 @@ object EventQueries {
     // previous stage's timestamp — three small aggs chained by user-key
     // joins (same-key shuffles; AQE coalesces), then one global count.
     // Conversion rates are ratios of exact counts. ----
+    // Kept as a DataFrame: one cached events scan feeds the stages, where the text plans three.
     QueryDef("events_funnel",
       (s, d) => {
         val ev = Tables.events(s, d)

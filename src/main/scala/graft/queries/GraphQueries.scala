@@ -152,6 +152,7 @@ object GraphQueries {
     //      edges low-degree→high-degree instead of by id: that bounds
     //      every out-neighbor array at sqrt(2|E|), which also caps the
     //      per-row array memory this formulation carries.
+    // Kept as a DataFrame: the adjacency-array plan above, where the text plans 18 scans.
     QueryDef("graph_triangles",
       (s, d) => {
         val ps = Tables.lineitem(s, d)

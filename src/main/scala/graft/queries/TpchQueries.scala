@@ -48,15 +48,15 @@ object TpchQueries {
     if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(lt)) {
       // the in-memory catalog is per-session but the warehouse DIRECTORY
       // persists: a fresh session's saveAsTable would hit
-      // LOCATION_ALREADY_EXISTS on the previous run's files — clear both
-      // the (possibly absent) catalog entry and the stale location
+      // LOCATION_ALREADY_EXISTS on the previous run's files — clear the
+      // stale location (an existing catalog entry is replaced by the
+      // overwrite-mode saveAsTable below)
       // Resolve the managed-table location from the CURRENT database
       // (not warehouse.dir directly — wrong when the session's database
       // has its own LOCATION, as BucketingSpec's does).
       val dbLoc = new org.apache.hadoop.fs.Path(
         s.catalog.getDatabase(s.catalog.currentDatabase).locationUri)
       Seq(ot, lt).foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
         val wh = new org.apache.hadoop.fs.Path(dbLoc, t)
         val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
         if (fs.exists(wh)) fs.delete(wh, true)
@@ -105,130 +105,70 @@ object TpchQueries {
            |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // ---- 3-way join + grouped agg + top-k (Q3 shape) ----
-    QueryDef("q3_shipping_priority",
-      (s, d) => {
-        val c = Tables.customer(s, d).where(col("c_mktsegment") === "BUILDING")
-        val o = Tables.orders(s, d).where(col("o_orderdate") < ts("1998-01-01"))
-        val l = Tables.lineitem(s, d).where(col("l_shipdate") > ts("1998-01-01"))
-        l.join(o, col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-          .agg(Det.fixedSum(revenueExpr, 2).as("revenue"))
-          .orderBy(col("revenue").desc, col("l_orderkey"))
-          .limit(10)
-      },
-      oracle = Some(
-        s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
-           |  ${Det.fixedSumSql(revenueSql, 2)} AS revenue
-           |FROM lineitem
-           |JOIN orders ON l_orderkey = o_orderkey
-           |JOIN customer ON o_custkey = c_custkey
-           |WHERE c_mktsegment = 'BUILDING'
-           |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-           |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-           |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-           |ORDER BY revenue DESC, l_orderkey
-           |LIMIT 10""".stripMargin)),
+    QueryDef.sql("q3_shipping_priority",
+      s"""SELECT /*+ BROADCAST(customer) */ l_orderkey, o_orderdate, o_orderpriority,
+         |  ${Det.fixedSumSql(revenueSql, 2)} AS revenue
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN customer ON o_custkey = c_custkey
+         |WHERE c_mktsegment = 'BUILDING'
+         |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+         |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
+         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         |ORDER BY revenue DESC NULLS LAST, l_orderkey NULLS FIRST
+         |LIMIT 10""".stripMargin),
 
     // ---- 6-way star join (Q5 shape): broadcast dims, shuffle facts ----
-    QueryDef("q5_local_supplier_volume",
-      (s, d) => {
-        val r = Tables.region(s, d).where(col("r_name") === "ASIA")
-        val joined = Tables.lineitem(s, d)
-          .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.supplier(s, d)),
-            col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-          .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-          .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-          .where(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1998-01-01"))
-        joined.groupBy(col("n_name"))
-          .agg(Det.fixedSum(revenueExpr, 2).as("revenue"))
-          .orderBy(col("revenue").desc, col("n_name"))
-      },
-      oracle = Some(
-        s"""SELECT n_name, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
-           |FROM lineitem
-           |JOIN orders ON l_orderkey = o_orderkey
-           |JOIN customer ON o_custkey = c_custkey
-           |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-           |JOIN nation ON s_nationkey = n_nationkey
-           |JOIN region ON n_regionkey = r_regionkey
-           |WHERE r_name = 'ASIA'
-           |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-           |  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-           |GROUP BY n_name
-           |ORDER BY revenue DESC, n_name""".stripMargin)),
+    QueryDef.sql("q5_local_supplier_volume",
+      s"""SELECT /*+ BROADCAST(supplier, nation, region) */ n_name, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN customer ON o_custkey = c_custkey
+         |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+         |JOIN nation ON s_nationkey = n_nationkey
+         |JOIN region ON n_regionkey = r_regionkey
+         |WHERE r_name = 'ASIA'
+         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+         |  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
+         |GROUP BY n_name
+         |ORDER BY revenue DESC, n_name""".stripMargin),
 
     // ---- scan + filter + global agg (Q6 shape): full predicate pushdown ----
-    QueryDef("q6_revenue_forecast",
-      (s, d) => Tables.lineitem(s, d)
-        .where(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01")
-          && col("l_discount") >= 0.05 && col("l_discount") <= 0.07 && col("l_quantity") < 24)
-        .agg(
-          Det.fixedSum(col("l_extendedprice") * col("l_discount"), 4).as("revenue"),
-          count(lit(1)).as("n_items")),
-      oracle = Some(
-        s"""SELECT ${Det.fixedSumSql("l_extendedprice * l_discount", 4)} AS revenue,
-           |  count(*) AS n_items
-           |FROM lineitem
-           |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-           |  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-           |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin),
+    QueryDef.sql("q6_revenue_forecast",
+      s"""SELECT ${Det.fixedSumSql("l_extendedprice * l_discount", 4)} AS revenue,
+         |  count(*) AS n_items
+         |FROM lineitem
+         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+         |  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
+         |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
       bench = false),
 
     // ---- join + group + top-k (Q10 shape) ----
-    QueryDef("q10_returned_items",
-      (s, d) => Tables.lineitem(s, d).where(col("l_returnflag") === "R")
-        .join(Tables.orders(s, d).where(
-          col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1996-07-01")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(Det.fixedSum(revenueExpr, 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20),
-      oracle = Some(
-        s"""SELECT c_custkey, c_name, n_name, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
-           |FROM lineitem
-           |JOIN orders ON l_orderkey = o_orderkey
-           |JOIN customer ON o_custkey = c_custkey
-           |JOIN nation ON c_nationkey = n_nationkey
-           |WHERE l_returnflag = 'R'
-           |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-           |  AND o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
-           |GROUP BY c_custkey, c_name, n_name
-           |ORDER BY revenue DESC, c_custkey
-           |LIMIT 20""".stripMargin)),
+    QueryDef.sql("q10_returned_items",
+      s"""SELECT /*+ BROADCAST(nation) */ c_custkey, c_name, n_name, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN customer ON o_custkey = c_custkey
+         |JOIN nation ON c_nationkey = n_nationkey
+         |WHERE l_returnflag = 'R'
+         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+         |  AND o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
+         |GROUP BY c_custkey, c_name, n_name
+         |ORDER BY revenue DESC NULLS LAST, c_custkey NULLS FIRST
+         |LIMIT 20""".stripMargin),
 
     // ---- explicit broadcast dim join ----
-    QueryDef("join_broadcast_dim",
-      (s, d) => Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_items"), Det.fixedSum(revenueExpr, 2).as("revenue"))
-        .orderBy(col("p_brand")),
-      oracle = Some(
-        s"""SELECT p_brand, count(*) AS n_items, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
-           |FROM lineitem JOIN part ON l_partkey = p_partkey
-           |GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
+    QueryDef.sql("join_broadcast_dim",
+      s"""SELECT /*+ BROADCAST(part) */ p_brand, count(*) AS n_items, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
+         |FROM lineitem JOIN part ON l_partkey = p_partkey
+         |GROUP BY p_brand ORDER BY p_brand""".stripMargin),
 
     // ---- left-semi join (EXISTS) ----
-    QueryDef("join_semi_exists",
-      (s, d) => {
-        val heavy = Tables.lineitem(s, d).where(col("l_discount") > 0.09)
-          .select(col("l_orderkey"))
-        Tables.orders(s, d)
-          .join(heavy, col("o_orderkey") === col("l_orderkey"), "left_semi")
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .orderBy(col("o_orderkey"))
-      },
-      oracle = Some(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE EXISTS (SELECT 1 FROM lineitem
-          |              WHERE l_orderkey = o_orderkey AND l_discount > 0.09)
-          |ORDER BY o_orderkey""".stripMargin),
+    QueryDef.sql("join_semi_exists",
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey AND l_discount > 0.09)
+        |ORDER BY o_orderkey""".stripMargin,
       bench = false),
 
     // ---- left-anti join (NOT EXISTS) ----
@@ -252,54 +192,30 @@ object TpchQueries {
       bench = false),
 
     // ---- ROLLUP ----
-    QueryDef("agg_rollup",
-      (s, d) => Tables.lineitem(s, d)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(Det.fixedSum(col("l_quantity"), 2).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first),
-      oracle = Some(
-        s"""SELECT l_returnflag, l_linestatus,
-           |  ${Det.fixedSumSql("l_quantity", 2)} AS sum_qty, count(*) AS n
-           |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-           |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    QueryDef.sql("agg_rollup",
+      s"""SELECT l_returnflag, l_linestatus,
+         |  ${Det.fixedSumSql("l_quantity", 2)} AS sum_qty, count(*) AS n
+         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
       bench = false),
 
     // ---- CUBE ----
-    QueryDef("agg_cube",
-      (s, d) => Tables.orders(s, d)
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(Det.fixedSum(col("o_totalprice"), 2).as("sum_price"), count(lit(1)).as("n"))
-        .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first),
-      oracle = Some(
-        s"""SELECT o_orderstatus, o_orderpriority,
-           |  ${Det.fixedSumSql("o_totalprice", 2)} AS sum_price, count(*) AS n
-           |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-           |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+    QueryDef.sql("agg_cube",
+      s"""SELECT o_orderstatus, o_orderpriority,
+         |  ${Det.fixedSumSql("o_totalprice", 2)} AS sum_price, count(*) AS n
+         |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+         |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
       bench = false),
 
     // ---- Q4-style: orders with any late-shipped line (semi join),
     // counted per priority ----
-    QueryDef("q4_priority_late_ship",
-      (s, d) => {
-        val lateOrders = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"))
-          .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate")),
-            Seq("o_orderkey"))
-          .where(col("l_shipdate") > col("o_orderdate"))
-          .select(col("o_orderkey"))
-        Tables.orders(s, d)
-          .join(lateOrders, Seq("o_orderkey"), "left_semi")
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("order_count"))
-          .orderBy(col("o_orderpriority"))
-      },
-      oracle = Some(
-        """SELECT o_orderpriority, count(*) AS order_count
-          |FROM orders o
-          |WHERE EXISTS (
-          |  SELECT 1 FROM lineitem l
-          |  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef.sql("q4_priority_late_ship",
+      """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders o
+        |WHERE EXISTS (
+        |  SELECT 1 FROM lineitem l
+        |  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
       bench = false),
 
     // ---- Q14-style: promo revenue share per month (conditional agg over
@@ -375,120 +291,64 @@ object TpchQueries {
 
     // ---- correlated scalar subquery (Catalyst decorrelates into an
     // aggregate + join; the reference has no subqueries at all) ----
-    QueryDef("subquery_decorrelated",
-      (s, d) => {
-        Tables.orders(s, d).createOrReplaceTempView("orders_sq")
-        s.sql(
-          """SELECT o_orderkey, o_custkey, (ROUND((o_totalprice) * 100, 0) / 100) AS o_totalprice
-            |FROM orders_sq o
-            |WHERE o_totalprice > 1.5 * (
-            |  SELECT avg(o2.o_totalprice) FROM orders_sq o2
-            |  WHERE o2.o_custkey = o.o_custkey)
-            |ORDER BY o_orderkey""".stripMargin)
-      },
-      oracle = Some(
-        """SELECT o_orderkey, o_custkey, (ROUND((o_totalprice) * 100, 0) / 100) AS o_totalprice
-          |FROM orders o
-          |WHERE o_totalprice > 1.5 * (
-          |  SELECT avg(o2.o_totalprice) FROM orders o2
-          |  WHERE o2.o_custkey = o.o_custkey)
-          |ORDER BY o_orderkey""".stripMargin),
+    QueryDef.sql("subquery_decorrelated",
+      """SELECT o_orderkey, o_custkey, (ROUND((o_totalprice) * 100, 0) / 100) AS o_totalprice
+        |FROM orders o
+        |WHERE o_totalprice > 1.5 * (
+        |  SELECT avg(o2.o_totalprice) FROM orders o2
+        |  WHERE o2.o_custkey = o.o_custkey)
+        |ORDER BY o_orderkey""".stripMargin,
       bench = false),
 
     // ---- TPC-H Q13 shape: order-count distribution including
     // zero-order customers (left join + count of the nullable side,
     // then a second aggregation over the counts). ----
-    QueryDef("q13_custdist",
-      (s, d) => Tables.customer(s, d)
-        .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc),
-      oracle = Some(
-        """SELECT c_count, count(*) AS custdist FROM (
-          |  SELECT c_custkey, count(o_orderkey) AS c_count
-          |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |  GROUP BY c_custkey
-          |) GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    QueryDef.sql("q13_custdist",
+      """SELECT c_count, count(*) AS custdist FROM (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        |  GROUP BY c_custkey
+        |) GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
       bench = false),
 
     // ---- TPC-H Q17 shape: correlated scalar-aggregate subquery per
     // part (decorrelated by Catalyst into an aggregate + join). The
     // threshold avg(l_quantity) is a sum of small integers in double —
     // exact under any merge order, so the filter is cross-engine-safe. ----
-    QueryDef("q17_small_quantity_revenue",
-      (s, d) => {
-        Tables.lineitem(s, d).createOrReplaceTempView("lineitem_q17")
-        Tables.part(s, d).createOrReplaceTempView("part_q17")
-        s.sql(
-          s"""SELECT ${Det.fixedSumSql("l_extendedprice", 2)} / 7.0 AS avg_yearly,
-             |  count(*) AS n_items
-             |FROM lineitem_q17 JOIN part_q17 ON p_partkey = l_partkey
-             |WHERE p_brand = 'Brand#23'
-             |  AND l_quantity < 0.2 * (
-             |    SELECT avg(l2.l_quantity) FROM lineitem_q17 l2
-             |    WHERE l2.l_partkey = p_partkey)""".stripMargin)
-      },
-      oracle = Some(
-        s"""SELECT ${Det.fixedSumSql("l_extendedprice", 2)} / 7.0 AS avg_yearly,
-           |  count(*) AS n_items
-           |FROM lineitem JOIN part ON p_partkey = l_partkey
-           |WHERE p_brand = 'Brand#23'
-           |  AND l_quantity < 0.2 * (
-           |    SELECT avg(l2.l_quantity) FROM lineitem l2
-           |    WHERE l2.l_partkey = p_partkey)""".stripMargin),
+    QueryDef.sql("q17_small_quantity_revenue",
+      s"""SELECT ${Det.fixedSumSql("l_extendedprice", 2)} / 7.0 AS avg_yearly,
+         |  count(*) AS n_items
+         |FROM lineitem JOIN part ON p_partkey = l_partkey
+         |WHERE p_brand = 'Brand#23'
+         |  AND l_quantity < 0.2 * (
+         |    SELECT avg(l2.l_quantity) FROM lineitem l2
+         |    WHERE l2.l_partkey = p_partkey)""".stripMargin,
       bench = false),
 
     // ---- TPC-H Q22 shape: positive-balance customers above the exact
     // (integerized) average with no RECENT orders (the fixture has no
     // fully order-less customers) — scalar subquery + anti join,
     // grouped by a derived country code. ----
-    QueryDef("q22_global_sales_opportunity",
-      (s, d) => {
-        Tables.customer(s, d).createOrReplaceTempView("customer_q22")
-        Tables.orders(s, d).createOrReplaceTempView("orders_q22")
-        s.sql(
-          s"""SELECT c_nationkey % 10 AS cntrycode, count(*) AS numcust,
-             |  ${Det.fixedSumSql("c_acctbal", 2)} AS totacctbal
-             |FROM customer_q22 c
-             |WHERE c_acctbal > (
-             |    SELECT ${Det.fixedAvgSql("c2.c_acctbal", 2)}
-             |    FROM customer_q22 c2 WHERE c2.c_acctbal > 0)
-             |  AND NOT EXISTS (
-             |    SELECT 1 FROM orders_q22 o WHERE o.o_custkey = c.c_custkey
-             |      AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-             |GROUP BY 1 ORDER BY 1""".stripMargin)
-      },
-      oracle = Some(
-        s"""SELECT c_nationkey % 10 AS cntrycode, count(*) AS numcust,
-           |  ${Det.fixedSumSql("c_acctbal", 2)} AS totacctbal
-           |FROM customer c
-           |WHERE c_acctbal > (
-           |    SELECT ${Det.fixedAvgSql("c2.c_acctbal", 2)}
-           |    FROM customer c2 WHERE c2.c_acctbal > 0)
-           |  AND NOT EXISTS (
-           |    SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-           |      AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-           |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef.sql("q22_global_sales_opportunity",
+      s"""SELECT c_nationkey % 10 AS cntrycode, count(*) AS numcust,
+         |  ${Det.fixedSumSql("c_acctbal", 2)} AS totacctbal
+         |FROM customer c
+         |WHERE c_acctbal > (
+         |    SELECT ${Det.fixedAvgSql("c2.c_acctbal", 2)}
+         |    FROM customer c2 WHERE c2.c_acctbal > 0)
+         |  AND NOT EXISTS (
+         |    SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
+         |      AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
       bench = false),
 
     // ---- GROUPING SETS (explicit set list, Dataset.groupingSets) ----
-    QueryDef("agg_grouping_sets",
-      (s, d) => Tables.lineitem(s, d)
-        .groupingSets(
-          Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-            Seq(col("l_returnflag")), Seq.empty),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(Det.fixedSum(col("l_quantity"), 2).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first),
-      oracle = Some(
-        s"""SELECT l_returnflag, l_linestatus,
-           |  ${Det.fixedSumSql("l_quantity", 2)} AS sum_qty, count(*) AS n
-           |FROM lineitem
-           |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-           |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    QueryDef.sql("agg_grouping_sets",
+      s"""SELECT l_returnflag, l_linestatus,
+         |  ${Det.fixedSumSql("l_quantity", 2)} AS sum_qty, count(*) AS n
+         |FROM lineitem
+         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
       bench = false),
 
     // ---- grouping()/grouping_id(): distinguish "NULL because subtotal"
@@ -532,20 +392,12 @@ object TpchQueries {
       bench = false),
 
     // ---- distinct aggregates (exact) ----
-    QueryDef("agg_distinct",
-      (s, d) => Tables.orders(s, d)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          countDistinct(col("o_custkey")).as("uniq_custs"),
-          sum_distinct(col("o_custkey")).as("sum_distinct_cust"),
-          count(lit(1)).as("n"))
-        .orderBy(col("o_orderstatus")),
-      oracle = Some(
-        """SELECT o_orderstatus,
-          |  count(DISTINCT o_custkey) AS uniq_custs,
-          |  CAST(sum(DISTINCT o_custkey) AS BIGINT) AS sum_distinct_cust,
-          |  count(*) AS n
-          |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    QueryDef.sql("agg_distinct",
+      """SELECT o_orderstatus,
+        |  count(DISTINCT o_custkey) AS uniq_custs,
+        |  CAST(sum(DISTINCT o_custkey) AS BIGINT) AS sum_distinct_cust,
+        |  count(*) AS n
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
       bench = false),
 
     // ---- approximate distinct (HLL) — sketches differ across engines, so
@@ -618,36 +470,22 @@ object TpchQueries {
       bench = false),
 
     // ---- window: running sum (frame), exact via integer cents ----
-    QueryDef("window_running_sum",
-      (s, d) => {
-        // cents is the FINAL window-order key: the synthetic lineitem
-        // duplicates (l_orderkey, l_linenumber) (~118k groups at sf0.1),
-        // so the "PK" alone leaves ties whose running prefix depends on
-        // each engine's arbitrary tie order — a latent cross-engine
-        // flake (surfaced at sf0.1 round 5). Ordering ties by their own
-        // contribution pins the prefix; equal-cents ties are harmless
-        // (same multiset of running values either way).
-        val w = Window.partitionBy(col("l_suppkey"))
-          .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-            col("cents"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        Tables.lineitem(s, d)
-          .withColumn("cents", round(revenueExpr * lit(100), 0).cast("long"))
-          .select(
-            col("l_suppkey"), col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-            (sum(col("cents")).over(w) / lit(100.0)).as("running_revenue"))
-          .orderBy(col("l_suppkey"), col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-      },
-      oracle = Some(
-        s"""SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber,
-           |  CAST(sum(CAST(round(($revenueSql) * 100, 0) AS BIGINT)) OVER (
-           |    PARTITION BY l_suppkey
-           |    ORDER BY l_shipdate, l_orderkey, l_linenumber,
-           |      CAST(round(($revenueSql) * 100, 0) AS BIGINT)
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0
-           |    AS running_revenue
-           |FROM lineitem
-           |ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""".stripMargin),
+    // cents is the FINAL window-order key: the synthetic lineitem
+    // duplicates (l_orderkey, l_linenumber) (~118k groups at sf0.1), so
+    // the "PK" alone leaves ties whose running prefix depends on each
+    // engine's arbitrary tie order. Ordering ties by their own
+    // contribution pins the prefix; equal-cents ties are harmless (same
+    // multiset of running values either way).
+    QueryDef.sql("window_running_sum",
+      s"""SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber,
+         |  CAST(sum(CAST(round(($revenueSql) * 100, 0) AS BIGINT)) OVER (
+         |    PARTITION BY l_suppkey
+         |    ORDER BY l_shipdate, l_orderkey, l_linenumber,
+         |      CAST(round(($revenueSql) * 100, 0) AS BIGINT)
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0
+         |    AS running_revenue
+         |FROM lineitem
+         |ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""".stripMargin,
       bench = false),
 
     // ---- window RANGE frame (value-based, vs the ROWS frames above):
@@ -793,54 +631,32 @@ object TpchQueries {
       bench = false),
 
     // ---- set operations ----
-    QueryDef("set_union",
-      (s, d) => {
-        val a = custsIn(s, d, "1995-01-01", "1996-01-01")
-        val b = custsIn(s, d, "2000-01-01", "2001-01-01")
-        a.union(b).distinct().orderBy(col("custkey"))
-      },
-      oracle = Some(
-        s"""${custSql("1995-01-01", "1996-01-01")}
-           |UNION
-           |${custSql("2000-01-01", "2001-01-01")}
-           |ORDER BY custkey""".stripMargin),
+    QueryDef.sql("set_union",
+      s"""${custSql("1995-01-01", "1996-01-01")}
+         |UNION
+         |${custSql("2000-01-01", "2001-01-01")}
+         |ORDER BY custkey""".stripMargin,
       bench = false),
 
-    QueryDef("set_intersect",
-      (s, d) => {
-        val a = custsIn(s, d, "1995-01-01", "1996-01-01")
-        val b = custsIn(s, d, "2000-01-01", "2001-01-01")
-        a.intersect(b).orderBy(col("custkey"))
-      },
-      oracle = Some(
-        s"""${custSql("1995-01-01", "1996-01-01")}
-           |INTERSECT
-           |${custSql("2000-01-01", "2001-01-01")}
-           |ORDER BY custkey""".stripMargin),
+    QueryDef.sql("set_intersect",
+      s"""${custSql("1995-01-01", "1996-01-01")}
+         |INTERSECT
+         |${custSql("2000-01-01", "2001-01-01")}
+         |ORDER BY custkey""".stripMargin,
       bench = false),
 
-    QueryDef("set_except",
-      (s, d) => {
-        val a = custsIn(s, d, "1995-01-01", "1996-01-01")
-        val b = custsIn(s, d, "2000-01-01", "2001-01-01")
-        a.except(b).orderBy(col("custkey"))
-      },
-      oracle = Some(
-        s"""${custSql("1995-01-01", "1996-01-01")}
-           |EXCEPT
-           |${custSql("2000-01-01", "2001-01-01")}
-           |ORDER BY custkey""".stripMargin),
+    QueryDef.sql("set_except",
+      s"""${custSql("1995-01-01", "1996-01-01")}
+         |EXCEPT
+         |${custSql("2000-01-01", "2001-01-01")}
+         |ORDER BY custkey""".stripMargin,
       bench = false),
 
     // ---- global top-k: TakeOrderedAndProject, never a full sort ----
-    QueryDef("sort_topk",
-      (s, d) => Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-        .limit(100),
-      oracle = Some(
-        """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-          |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100""".stripMargin),
+    QueryDef.sql("sort_topk",
+      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
+        |ORDER BY l_extendedprice DESC NULLS LAST, l_orderkey NULLS FIRST,
+        |  l_linenumber NULLS FIRST LIMIT 100""".stripMargin,
       bench = false),
 
     // ---- string functions ----
@@ -899,20 +715,11 @@ object TpchQueries {
     // ---- large-large shuffle join: pin sort-merge via hint (dims are
     // small enough to auto-broadcast at test SF; at 100 TB lineitem x
     // orders IS the co-partitioned shuffle join this demonstrates) ----
-    QueryDef("join_sort_merge_large",
-      (s, d) => Tables.lineitem(s, d).hint("merge")
-        .join(Tables.orders(s, d).hint("merge"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          count(lit(1)).as("n_items"),
-          Det.fixedSum(col("l_extendedprice"), 2).as("sum_price"))
-        .orderBy(col("o_orderpriority")),
-      oracle = Some(
-        s"""SELECT o_orderpriority, count(*) AS n_items,
-           |  ${Det.fixedSumSql("l_extendedprice", 2)} AS sum_price
-           |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef.sql("join_sort_merge_large",
+      s"""SELECT /*+ MERGE(lineitem, orders) */ o_orderpriority, count(*) AS n_items,
+         |  ${Det.fixedSumSql("l_extendedprice", 2)} AS sum_price
+         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
       bench = false),
 
     // ---- bucketed fact-fact SMJ: both sides pre-hash-clustered into the
@@ -1312,26 +1119,15 @@ object TpchQueries {
     // and pushes the p_brand/p_size disjunction to the part scan
     // (PushedFilters shows an Or tree); the per-branch quantity bounds
     // apply post-join. ----
-    QueryDef("q19_disjunctive_revenue",
-      (s, d) => Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)), col("p_partkey") === col("l_partkey"))
-        .where(
-          (col("p_brand") === "Brand#12" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(1, 15)) ||
-          (col("p_brand") === "Brand#23" && col("p_size").between(1, 20) &&
-            col("l_quantity").between(10, 25)) ||
-          (col("p_brand") === "Brand#34" && col("p_size").between(1, 25) &&
-            col("l_quantity").between(20, 35)))
-        .agg(count(lit(1)).as("n_items"), Det.fixedSum(revenueExpr, 2).as("revenue")),
-      oracle = Some(
-        s"""SELECT count(*) AS n_items, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
-           |FROM lineitem JOIN part ON p_partkey = l_partkey
-           |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-           |       AND l_quantity BETWEEN 1 AND 15)
-           |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 20
-           |       AND l_quantity BETWEEN 10 AND 25)
-           |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 25
-           |       AND l_quantity BETWEEN 20 AND 35)""".stripMargin)),
+    QueryDef.sql("q19_disjunctive_revenue",
+      s"""SELECT /*+ BROADCAST(part) */ count(*) AS n_items, ${Det.fixedSumSql(revenueSql, 2)} AS revenue
+         |FROM lineitem JOIN part ON p_partkey = l_partkey
+         |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+         |       AND l_quantity BETWEEN 1 AND 15)
+         |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 20
+         |       AND l_quantity BETWEEN 10 AND 25)
+         |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 25
+         |       AND l_quantity BETWEEN 20 AND 35)""".stripMargin),
 
     // ---- conditional aggregates: count_if / FILTER-style conditional
     // sum / bool_and / bool_or — all single-pass hash-agg built-ins. ----
@@ -1357,29 +1153,15 @@ object TpchQueries {
 
     // ---- window value functions: first/last/nth over explicit ROWS
     // frames (deterministic: ts+event_id is a total order per user). ----
-    QueryDef("window_value_funcs",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        Tables.events(s, d).where(col("user_id") < 50)
-          .select(
-            col("user_id"), col("event_id"), col("value"),
-            first(col("value")).over(
-              w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("first_v"),
-            last(col("value")).over(
-              w.rowsBetween(Window.currentRow, Window.unboundedFollowing)).as("last_v"),
-            nth_value(col("value"), 2).over(wAll).as("second_v"))
-          .orderBy(col("user_id"), col("event_id"))
-      },
-      oracle = Some(
-        """SELECT user_id, event_id, value,
-          |  first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_v,
-          |  last_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS last_v,
-          |  nth_value(value, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_v
-          |FROM events WHERE user_id < 50 ORDER BY user_id, event_id""".stripMargin),
+    QueryDef.sql("window_value_funcs",
+      """SELECT user_id, event_id, value,
+        |  first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_v,
+        |  last_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS last_v,
+        |  nth_value(value, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_v
+        |FROM events WHERE user_id < 50 ORDER BY user_id, event_id""".stripMargin,
       bench = false),
 
     // ---- TPC-H Q2 shape: min-cost supplier per part — a correlated MIN
@@ -1434,64 +1216,37 @@ object TpchQueries {
     // 5-table join with a LIKE-filtered part dimension (broadcast after
     // the pushed-down filter); profit uses p_retailprice as the cost
     // basis (no partsupp in the fixture). ----
-    QueryDef("q9_product_type_profit",
-      (s, d) => {
-        val amount = revenueExpr -
-          lit(0.6) * col("p_retailprice") * col("l_quantity")
-        Tables.lineitem(s, d)
-          .join(broadcast(Tables.part(s, d).where(col("p_name").like("red%"))),
-            col("p_partkey") === col("l_partkey"))
-          .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-          .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-          .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
-          .agg(Det.fixedSum(amount, 2).as("sum_profit"))
-          .orderBy(col("nation"), col("o_year").desc)
-      },
-      oracle = Some(
-        s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-           |  ${Det.fixedSumSql(
-               s"($revenueSql) - CAST(0.6 AS DOUBLE) * p_retailprice * l_quantity", 2)} AS sum_profit
-           |FROM lineitem
-           |JOIN part ON p_partkey = l_partkey
-           |JOIN orders ON l_orderkey = o_orderkey
-           |JOIN supplier ON l_suppkey = s_suppkey
-           |JOIN nation ON s_nationkey = n_nationkey
-           |WHERE p_name LIKE 'red%'
-           |GROUP BY 1, 2 ORDER BY 1 ASC, 2 DESC""".stripMargin)),
+    QueryDef.sql("q9_product_type_profit",
+      s"""SELECT /*+ BROADCAST(part, supplier, nation) */ n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
+         |  ${Det.fixedSumSql(
+             s"($revenueSql) - CAST(0.6 AS DOUBLE) * p_retailprice * l_quantity", 2)} AS sum_profit
+         |FROM lineitem
+         |JOIN part ON p_partkey = l_partkey
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN supplier ON l_suppkey = s_suppkey
+         |JOIN nation ON s_nationkey = n_nationkey
+         |WHERE p_name LIKE 'red%'
+         |GROUP BY 1, 2 ORDER BY 1 ASC, 2 DESC""".stripMargin),
 
     // ---- TPC-H Q11 shape: groups whose share of a global total exceeds
     // a threshold — HAVING against a scalar subquery. Spark side: the
     // one-row total is crossJoin(broadcast(...)), the classic scalar
     // pattern; both sides of the comparison are fixed-point-exact sums,
     // so the > cut is bit-identical cross-engine. ----
-    QueryDef("q11_important_parts",
-      (s, d) => {
-        val base = Tables.lineitem(s, d)
-          .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-          .join(broadcast(Tables.nation(s, d).where(col("n_name") === "NATION_3")),
-            col("s_nationkey") === col("n_nationkey"))
-        val perPart = base.groupBy(col("l_partkey"))
-          .agg(Det.fixedSum(revenueExpr, 2).as("value"))
-        val total = base.agg(Det.fixedSum(revenueExpr, 2).as("total"))
-        perPart.crossJoin(broadcast(total))
-          .where(col("value") > col("total") * lit(0.001))
-          .select(col("l_partkey"), col("value"))
-          .orderBy(col("value").desc, col("l_partkey"))
-      },
-      oracle = Some(
-        s"""WITH base AS (
-           |  SELECT l_partkey, ${Det.toFixedSql(revenueSql, 2)} AS v
-           |  FROM lineitem
-           |  JOIN supplier ON l_suppkey = s_suppkey
-           |  JOIN nation ON s_nationkey = n_nationkey
-           |  WHERE n_name = 'NATION_3'
-           |)
-           |SELECT l_partkey, CAST(sum(v) AS DOUBLE) / 100 AS value
-           |FROM base GROUP BY l_partkey
-           |HAVING CAST(sum(v) AS DOUBLE) / 100 >
-           |  (SELECT CAST(sum(v) AS DOUBLE) / 100 FROM base) * CAST(0.001 AS DOUBLE)
-           |ORDER BY value DESC, l_partkey""".stripMargin),
+    QueryDef.sql("q11_important_parts",
+      s"""WITH base AS (
+         |  SELECT /*+ BROADCAST(supplier, nation) */ l_partkey,
+         |    ${Det.toFixedSql(revenueSql, 2)} AS v
+         |  FROM lineitem
+         |  JOIN supplier ON l_suppkey = s_suppkey
+         |  JOIN nation ON s_nationkey = n_nationkey
+         |  WHERE n_name = 'NATION_3'
+         |)
+         |SELECT l_partkey, CAST(sum(v) AS DOUBLE) / 100 AS value
+         |FROM base GROUP BY l_partkey
+         |HAVING CAST(sum(v) AS DOUBLE) / 100 >
+         |  (SELECT CAST(sum(v) AS DOUBLE) / 100 FROM base) * CAST(0.001 AS DOUBLE)
+         |ORDER BY value DESC, l_partkey""".stripMargin,
       bench = false),
 
     // ---- TPC-H Q12 shape: per-group pair of conditional counts over a
@@ -1525,33 +1280,18 @@ object TpchQueries {
     // "top supplier" view. Equality against the max is exact because
     // total_revenue is a fixed-point sum (identical doubles on both
     // engines), so ties surface identically too. ----
-    QueryDef("q15_top_supplier",
-      (s, d) => {
-        val rev = Tables.lineitem(s, d)
-          .where(col("l_shipdate") >= ts("1998-01-01") &&
-            col("l_shipdate") < ts("1998-04-01"))
-          .groupBy(col("l_suppkey"))
-          .agg(Det.fixedSum(revenueExpr, 2).as("total_revenue"))
-        val maxRev = rev.agg(max(col("total_revenue")).as("max_revenue"))
-        Tables.supplier(s, d)
-          .join(rev, col("s_suppkey") === col("l_suppkey"))
-          .crossJoin(broadcast(maxRev))
-          .where(col("total_revenue") === col("max_revenue"))
-          .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-          .orderBy(col("s_suppkey"))
-      },
-      oracle = Some(
-        s"""WITH rev AS (
-           |  SELECT l_suppkey, ${Det.fixedSumSql(revenueSql, 2)} AS total_revenue
-           |  FROM lineitem
-           |  WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-           |    AND l_shipdate <  TIMESTAMP '1998-04-01 00:00:00'
-           |  GROUP BY l_suppkey
-           |)
-           |SELECT s_suppkey, s_name, total_revenue
-           |FROM supplier JOIN rev ON s_suppkey = l_suppkey
-           |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-           |ORDER BY s_suppkey""".stripMargin),
+    QueryDef.sql("q15_top_supplier",
+      s"""WITH rev AS (
+         |  SELECT l_suppkey, ${Det.fixedSumSql(revenueSql, 2)} AS total_revenue
+         |  FROM lineitem
+         |  WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+         |    AND l_shipdate <  TIMESTAMP '1998-04-01 00:00:00'
+         |  GROUP BY l_suppkey
+         |)
+         |SELECT s_suppkey, s_name, total_revenue
+         |FROM supplier JOIN rev ON s_suppkey = l_suppkey
+         |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+         |ORDER BY s_suppkey""".stripMargin,
       bench = false),
 
     // ---- TPC-H Q16 shape: distinct-supplier counts per part attribute
@@ -1586,38 +1326,19 @@ object TpchQueries {
     // by a HAVING-filtered aggregate over a LIKE-filtered part subset.
     // Both inner filters collapse to one grouped agg + left-semi join;
     // the qty threshold compares fixed-point-exact sums. ----
-    QueryDef("q20_promotion_suppliers",
-      (s, d) => {
-        val red = Tables.part(s, d).where(col("p_name").like("red%"))
-          .select(col("p_partkey"))
-        val qual = Tables.lineitem(s, d)
-          .where(col("l_shipdate") >= ts("1998-01-01") &&
-            col("l_shipdate") < ts("1999-01-01"))
-          .join(broadcast(red), col("l_partkey") === col("p_partkey"))
-          .groupBy(col("l_suppkey"), col("l_partkey"))
-          .agg(Det.fixedSum(col("l_quantity"), 2).as("qty"))
-          .where(col("qty") > lit(20.0))
-          .select(col("l_suppkey")).distinct()
-        Tables.supplier(s, d)
-          .join(broadcast(Tables.nation(s, d).where(col("n_name") === "NATION_3")),
-            col("s_nationkey") === col("n_nationkey"))
-          .join(qual, col("s_suppkey") === col("l_suppkey"), "left_semi")
-          .select(col("s_name"), col("s_acctbal"))
-          .orderBy(col("s_name"))
-      },
-      oracle = Some(
-        s"""SELECT s_name, s_acctbal
-           |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-           |WHERE n_name = 'NATION_3' AND s_suppkey IN (
-           |  SELECT l_suppkey
-           |  FROM lineitem JOIN part ON l_partkey = p_partkey
-           |  WHERE p_name LIKE 'red%'
-           |    AND l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-           |    AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
-           |  GROUP BY l_suppkey, l_partkey
-           |  HAVING ${Det.fixedSumSql("l_quantity", 2)} > 20.0
-           |)
-           |ORDER BY s_name""".stripMargin),
+    QueryDef.sql("q20_promotion_suppliers",
+      s"""SELECT /*+ BROADCAST(nation) */ s_name, s_acctbal
+         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+         |WHERE n_name = 'NATION_3' AND s_suppkey IN (
+         |  SELECT /*+ BROADCAST(part) */ l_suppkey
+         |  FROM lineitem JOIN part ON l_partkey = p_partkey
+         |  WHERE p_name LIKE 'red%'
+         |    AND l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+         |    AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
+         |  GROUP BY l_suppkey, l_partkey
+         |  HAVING ${Det.fixedSumSql("l_quantity", 2)} > 20.0
+         |)
+         |ORDER BY s_name""".stripMargin,
       bench = false),
 
     // ---- TPC-H Q21 shape: EXISTS + NOT EXISTS self-joins on the fact —
@@ -1673,142 +1394,78 @@ object TpchQueries {
     // ---- FULL OUTER join of two grouped aggregates with coalesced keys
     // — the reconciliation shape (rows surviving from either side).
     // Plans as a shuffle full-outer hash join on the nation key. ----
-    QueryDef("join_full_outer",
-      (s, d) => {
-        val c = Tables.customer(s, d).where(col("c_mktsegment") === "BUILDING")
-          .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_cust"))
-        val sup = Tables.supplier(s, d).where(col("s_acctbal") > 0)
-          .groupBy(col("s_nationkey")).agg(count(lit(1)).as("n_supp"))
-        c.join(sup, col("c_nationkey") === col("s_nationkey"), "full_outer")
-          .select(
-            coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
-            coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-            coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-          .orderBy(col("nationkey"))
-      },
-      oracle = Some(
-        """WITH c AS (
-          |  SELECT c_nationkey, count(*) AS n_cust FROM customer
-          |  WHERE c_mktsegment = 'BUILDING' GROUP BY 1
-          |), s AS (
-          |  SELECT s_nationkey, count(*) AS n_supp FROM supplier
-          |  WHERE s_acctbal > 0 GROUP BY 1
-          |)
-          |SELECT coalesce(c_nationkey, s_nationkey) AS nationkey,
-          |  coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
-          |FROM c FULL JOIN s ON c_nationkey = s_nationkey
-          |ORDER BY nationkey""".stripMargin),
+    QueryDef.sql("join_full_outer",
+      """WITH c AS (
+        |  SELECT c_nationkey, count(*) AS n_cust FROM customer
+        |  WHERE c_mktsegment = 'BUILDING' GROUP BY 1
+        |), s AS (
+        |  SELECT s_nationkey, count(*) AS n_supp FROM supplier
+        |  WHERE s_acctbal > 0 GROUP BY 1
+        |)
+        |SELECT coalesce(c_nationkey, s_nationkey) AS nationkey,
+        |  coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
+        |FROM c FULL JOIN s ON c_nationkey = s_nationkey
+        |ORDER BY nationkey""".stripMargin,
       bench = false),
 
     // ---- multiset set ops (INTERSECT ALL / EXCEPT ALL): bag semantics —
     // per-value multiplicity min / difference — vs the distinct set ops
     // already in the catalog. Grouped after the op so the output is a
     // small deterministic histogram. ----
-    QueryDef("set_intersect_all",
-      (s, d) => {
-        val a = Tables.orders(s, d)
-          .where(col("o_orderdate") >= ts("1998-01-01") && col("o_orderdate") < ts("1999-01-01"))
-          .select(col("o_orderpriority"))
-        val b = Tables.orders(s, d)
-          .where(col("o_orderdate") >= ts("1999-01-01") && col("o_orderdate") < ts("2000-01-01"))
-          .select(col("o_orderpriority"))
-        a.intersectAll(b)
-          .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-          .orderBy(col("o_orderpriority"))
-      },
-      oracle = Some(
-        """SELECT o_orderpriority, count(*) AS n FROM (
-          |  SELECT o_orderpriority FROM orders
-          |  WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
-          |    AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
-          |  INTERSECT ALL
-          |  SELECT o_orderpriority FROM orders
-          |  WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
-          |    AND o_orderdate <  TIMESTAMP '2000-01-01 00:00:00'
-          |)
-          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    QueryDef.sql("set_intersect_all",
+      """SELECT o_orderpriority, count(*) AS n FROM (
+        |  SELECT o_orderpriority FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
+        |    AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
+        |  INTERSECT ALL
+        |  SELECT o_orderpriority FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
+        |    AND o_orderdate <  TIMESTAMP '2000-01-01 00:00:00'
+        |)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
       bench = false),
 
-    QueryDef("set_except_all",
-      (s, d) => {
-        val a = Tables.orders(s, d)
-          .where(col("o_orderdate") >= ts("1998-01-01") && col("o_orderdate") < ts("1999-01-01"))
-          .select(col("o_orderpriority"))
-        val b = Tables.orders(s, d)
-          .where(col("o_orderdate") >= ts("1999-01-01") && col("o_orderdate") < ts("2000-01-01"))
-          .select(col("o_orderpriority"))
-        a.exceptAll(b)
-          .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-          .orderBy(col("o_orderpriority"))
-      },
-      oracle = Some(
-        """SELECT o_orderpriority, count(*) AS n FROM (
-          |  SELECT o_orderpriority FROM orders
-          |  WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
-          |    AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
-          |  EXCEPT ALL
-          |  SELECT o_orderpriority FROM orders
-          |  WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
-          |    AND o_orderdate <  TIMESTAMP '2000-01-01 00:00:00'
-          |)
-          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    QueryDef.sql("set_except_all",
+      """SELECT o_orderpriority, count(*) AS n FROM (
+        |  SELECT o_orderpriority FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
+        |    AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
+        |  EXCEPT ALL
+        |  SELECT o_orderpriority FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
+        |    AND o_orderdate <  TIMESTAMP '2000-01-01 00:00:00'
+        |)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
       bench = false),
 
-    // ---- the SQL TEXT entry path: temp view + spark.sql(...) — proves
-    // the engine's full ANSI surface is reachable as literal SQL, not
-    // only through the DataFrame DSL (same Catalyst plan either way).
-    // The statement itself uses the fixed-point summation idiom. ----
-    QueryDef("sql_interface_revenue",
-      (s, d) => {
-        Tables.lineitem(s, d).createOrReplaceTempView("lineitem_v")
-        s.sql(
-          """SELECT l_returnflag,
-            |  CAST(SUM(CAST(ROUND((l_extendedprice * (1 - l_discount)) * 100, 0)
-            |    AS BIGINT)) AS DOUBLE) / 100 AS revenue,
-            |  COUNT(*) AS n
-            |FROM lineitem_v
-            |WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-            |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-      },
-      oracle = Some(
-        """SELECT l_returnflag,
-          |  CAST(SUM(CAST(ROUND((l_extendedprice * (1 - l_discount)) * 100, 0)
-          |    AS BIGINT)) AS DOUBLE) / 100 AS revenue,
-          |  COUNT(*) AS n
-          |FROM lineitem
-          |WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-          |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // ---- the fixed-point summation idiom written as literal SQL ----
+    QueryDef.sql("sql_interface_revenue",
+      """SELECT l_returnflag,
+        |  CAST(SUM(CAST(ROUND((l_extendedprice * (1 - l_discount)) * 100, 0)
+        |    AS BIGINT)) AS DOUBLE) / 100 AS revenue,
+        |  COUNT(*) AS n
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
       bench = false),
 
     // ---- recursive CTE (Spark 4 WITH RECURSIVE): ancestor-chain walk
-    // over the implied part hierarchy (parent = key DIV 4 — an acyclic
-    // 4-ary tree rooted at 0). Spark supports UNION ALL recursion; the
-    // chain terminates at the root, depth ~ log4(|part|). The same
-    // recursion runs verbatim in DuckDB. ----
-    QueryDef("recursive_hierarchy_walk",
-      (s, d) => {
-        Tables.part(s, d).createOrReplaceTempView("part_v")
-        s.sql(
-          """WITH RECURSIVE anc(part, ancestor, depth) AS (
-            |  SELECT CAST(p_partkey AS BIGINT), CAST(p_partkey AS BIGINT),
-            |    CAST(0 AS INT)
-            |  FROM part_v WHERE p_partkey < 15
-            |  UNION ALL
-            |  SELECT part, ancestor DIV 4, depth + 1 FROM anc WHERE ancestor > 0
-            |)
-            |SELECT part, ancestor, depth FROM anc
-            |ORDER BY part, depth""".stripMargin)
-      },
-      oracle = Some(
-        """WITH RECURSIVE anc(part, ancestor, depth) AS (
-          |  SELECT CAST(p_partkey AS BIGINT), CAST(p_partkey AS BIGINT),
-          |    CAST(0 AS INT)
-          |  FROM part WHERE p_partkey < 15
-          |  UNION ALL
-          |  SELECT part, ancestor // 4, depth + 1 FROM anc WHERE ancestor > 0
-          |)
-          |SELECT part, ancestor, depth FROM anc
-          |ORDER BY part, depth""".stripMargin),
+    // over the implied part hierarchy (parent = floor(key / 4) — an
+    // acyclic 4-ary tree rooted at 0). Spark supports UNION ALL
+    // recursion; the chain terminates at the root, depth ~ log4(|part|).
+    // The division is spelled the one way both dialects accept (Spark
+    // has no `//`, DuckDB no `DIV`). ----
+    QueryDef.sql("recursive_hierarchy_walk",
+      """WITH RECURSIVE anc(part, ancestor, depth) AS (
+        |  SELECT CAST(p_partkey AS BIGINT), CAST(p_partkey AS BIGINT),
+        |    CAST(0 AS INT)
+        |  FROM part WHERE p_partkey < 15
+        |  UNION ALL
+        |  SELECT part, CAST(floor(ancestor / 4) AS BIGINT), depth + 1
+        |  FROM anc WHERE ancestor > 0
+        |)
+        |SELECT part, ancestor, depth FROM anc
+        |ORDER BY part, depth""".stripMargin,
       bench = false),
 
     // ---- Z-order (Morton) clustering key: one sort column serving TWO

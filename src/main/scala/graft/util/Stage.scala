@@ -18,9 +18,10 @@ import org.apache.spark.sql.{Dataset, GraftBridge}
   *    `checkpoint()` to that directory (HDFS/object store on a cluster),
   *    recomputable after any executor loss.
   *
-  * [[checkpointWith]] holds that switch once; [[apply]] is its eager
-  * form. The caller's contract — "this frame is materialized once and
-  * every downstream branch reuses it" — is identical in both modes;
+  * `mark` holds that switch once; [[checkpointWith]] fuses it with the
+  * caller's first action and [[apply]] writes it at once. The caller's
+  * contract — "this frame is materialized once and every downstream
+  * branch reuses it" — is identical in both modes;
   * StageSpec asserts equal results and pins each mode's job count.
   *
   * Checkpoint-file lifecycle: Spark deletes a reliable checkpoint's
@@ -35,13 +36,17 @@ import org.apache.spark.sql.{Dataset, GraftBridge}
 object Stage {
   val ConfKey = "spark.graft.checkpointDir"
 
-  /** An EAGER checkpoint: [[checkpointWith]] whose action writes the
-    * checkpoint itself, in the one job `Dataset.checkpoint(eager = true)`
-    * runs in either mode. A counting action would cost a job more in
+  /** An EAGER checkpoint: the lazy mark of [[checkpointWith]], written
+    * at once in the one job `Dataset.checkpoint(eager = true)` runs in
+    * either mode. That job computes the frame and writes it, so nothing
+    * is cached around it. A counting action would cost a job more in
     * reliable mode (the count, then the write) and, as `count()`, can
     * add an AQE stage job. */
-  def apply[T](ds: Dataset[T]): Dataset[T] =
-    checkpointWith(ds)(GraftBridge.checkpointNow)._1
+  def apply[T](ds: Dataset[T]): Dataset[T] = {
+    val c = mark(ds)
+    GraftBridge.checkpointNow(c)
+    c
+  }
 
   /** A LAZY checkpoint fused with the caller's first action: the
     * materializing job IS `action`'s own, so an iterative loop that
@@ -57,27 +62,32 @@ object Stage {
     * LIMIT would not). Returns the truncated frame and the action's
     * result. */
   def checkpointWith[T, A](ds: Dataset[T])(
-      action: Dataset[T] => A): (Dataset[T], A) = {
-    val spark = ds.sparkSession
-    spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        // setCheckpointDir materializes a UUID subdir under `dir`; set it
-        // once per context (first staged frame wins — the knob is meant
-        // to be fixed for a job, not varied mid-query)
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(dir)
-        // Unless the action is the write itself ([[apply]]), a lazy
-        // reliable checkpoint runs TWO jobs: the action, then the
-        // checkpoint-file write — each recomputing the plan unless it is
-        // cached. Cache across the pair so the frame is computed once
-        // (the write job reads cache blocks), then release: downstream
-        // reads come from the checkpoint files, not the cache.
-        ds.persist()
-        try { val c = ds.checkpoint(eager = false); (c, action(c)) }
-        finally ds.unpersist()
-      case None =>
-        val c = ds.localCheckpoint(eager = false); (c, action(c))
+      action: Dataset[T] => A): (Dataset[T], A) =
+    if (reliableDir(ds).isEmpty) { val c = mark(ds); (c, action(c)) }
+    else {
+      // A lazy reliable checkpoint runs TWO jobs: the action, then the
+      // checkpoint-file write — each recomputing the plan unless it is
+      // cached. Cache across the pair so the frame is computed once (the
+      // write job reads cache blocks), then release: downstream reads
+      // come from the checkpoint files, not the cache.
+      ds.persist()
+      try { val c = mark(ds); (c, action(c)) }
+      finally ds.unpersist()
     }
+
+  private def reliableDir(ds: Dataset[_]): Option[String] =
+    ds.sparkSession.conf.getOption(ConfKey).filter(_.nonEmpty)
+
+  /** The lazy checkpoint of `ds` in the configured mode. */
+  private def mark[T](ds: Dataset[T]): Dataset[T] = reliableDir(ds) match {
+    case Some(dir) =>
+      // setCheckpointDir materializes a UUID subdir under `dir`; set it
+      // once per context (first staged frame wins — the knob is meant
+      // to be fixed for a job, not varied mid-query)
+      val sc = ds.sparkSession.sparkContext
+      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+      ds.checkpoint(eager = false)
+    case None => ds.localCheckpoint(eager = false)
   }
 
   /** Share a multi-consumer frame WITHIN one query's DAG: lazy

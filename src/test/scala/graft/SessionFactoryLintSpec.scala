@@ -18,6 +18,11 @@ import org.scalatest.matchers.should.Matchers
   * `.start(` call under `src/main` fails the build. Specs start their
   * streams directly.
   *
+  * SQL text reaches Spark from `graft.queries` only through
+  * [[QueryDef.sql]], which runs a query's oracle text as its body: a
+  * hand-copied text beside its oracle, or a temp view of its own, fails
+  * the build.
+  *
   * Reachability: the oracle and the bench check only what `SparkEntry`
   * reaches, so code under `src/main` that nothing else in `src/main`
   * names is untested by either. A public `def` no other code calls
@@ -118,5 +123,23 @@ class SessionFactoryLintSpec extends AnyFunSuite with Matchers {
       s"${main.toPath.relativize(f.toPath)}:${enclosing.getOrElse("")}"
     }
     hits shouldBe Seq("graft/streaming/StreamingOps.scala:start")
+  }
+
+  test("SQL text under src/main/scala/graft/queries reaches Spark only through QueryDef.sql") {
+    val dir = new File(repoRoot, "src/main/scala/graft/queries")
+    val SqlCall = """(?<!QueryDef)\.sql\s*\(|\bcreateOrReplaceTempView\b""".r
+    val Opened = """QueryDef(?:\.sql)?\("([^"]+)"|\bdef\s+([A-Za-z_]\w*)""".r
+    val hits = for {
+      f <- scalaFiles(dir)
+      code = withoutComments(Files.readString(f.toPath))
+      m <- SqlCall.findAllMatchIn(code)
+    } yield {
+      // the query (or def) whose body holds the call: the last one opened before it
+      val enclosing = Opened.findAllMatchIn(code.substring(0, m.start))
+        .map(o => Option(o.group(1)).getOrElse(o.group(2))).toSeq.lastOption
+      s"${f.getName}:${enclosing.getOrElse("")}"
+    }
+    scalaFiles(dir) should not be empty
+    hits.distinct.sorted shouldBe Nil
   }
 }

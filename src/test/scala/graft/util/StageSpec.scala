@@ -51,7 +51,27 @@ class StageSpec extends SparkSpec {
     viaLocal.map(_._2).distinct.size shouldBe 3
     // the counts `stageCheckpoint` ran as an eager Dataset.checkpoint
     localJobs shouldBe 45
-    reliableJobs shouldBe 43
+    reliableJobs shouldBe 45
+  }
+
+  test("Stage: the eager checkpoint is one job past the plan's own, in both modes") {
+    def jobsOf(f: => Unit): Int = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerBusDrain(sc)
+      sc.addSparkListener(l)
+      try { f; ListenerBusDrain(sc); jobs.get } finally sc.removeSparkListener(l)
+    }
+    // the aggregate's shuffle stage, then the checkpoint write
+    def staged() = Stage(spark.range(100).groupBy(col("id") % 7).count())
+    spark.conf.unset(Stage.ConfKey)
+    jobsOf(staged()) shouldBe 2
+    val dir = Files.createTempDirectory("graft-stage-eager").toString
+    try { spark.conf.set(Stage.ConfKey, dir); jobsOf(staged()) shouldBe 2 }
+    finally spark.conf.unset(Stage.ConfKey)
   }
 
   test("Stage: reliable-checkpoint mode returns identical results to localCheckpoint") {
